@@ -89,7 +89,7 @@ object Bench {
       }
 
     // COLD MODE (r17 verdict ask #3): every cross-query artifact
-    // (DirCache / CcArtifact / NbArtifact / BpeModels / PqModels / grain)
+    // (every DirCache registered with ArtifactCaches)
     // is built on first use — under the untimed warmup rep that build
     // cost lands in NO timed number, so warm medians conflate "shared
     // artifact" with "query got faster". With SPARK_GRAFT_BENCH_COLD=1
@@ -360,13 +360,16 @@ object Bench {
     // tail capture retains the whole line, "metric":"total" included.
     // Locale.ROOT: a comma-decimal default locale would corrupt the JSON.
     def ms(v: Double): String = tools.BenchStats.ms3(v)
-    val qs = results.map { case (k, (v, _)) => jstr(k) + ":" + ms(v) }
-      .mkString("{", ",", "}")
+    val qEntries = results.map { case (k, (v, _)) => jstr(k) + ":" + ms(v) }
+    val qs = qEntries.mkString("{", ",", "}")
     val errs = results.collect { case (k, (_, Some(e))) => k -> e }
     val es = errs.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, (v, None)) => v }.sum
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"errors":$es,"failed":${errs.size},"sf":"$sfDir"}""")
+    // the same per-query map again as bounded chunks, so a log tail that
+    // cut the line above still carries every query's median
+    tools.BenchStats.queryParts(qEntries, sfDir).foreach(println)
     // The per-query line grows with every query added; log-tail capture has
     // truncated its head two rounds running, losing the totals. A short
     // trailing summary line is always the LAST thing printed, so any tail
@@ -401,7 +404,7 @@ object Bench {
     val contended = tools.BenchStats.looksContended(wallSec, total,
       reps + warm, extraRunSec, load1Start,
       Runtime.getRuntime.availableProcessors)
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${errs.size},"n_queries":${results.size},"reps":$reps,"warmup":$warm,"remeasured":${remeasured.size},"suspect":${suspect.size},"esc_skipped":${escSkipped.size},"wall_sec":${ms(wallSec)},"loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadEnd)},"contended":$contended,"top5_slowest":$top5,"top5_spread":$noisy5,"sf":"$sfDir"}""")
+    val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${errs.size},"n_queries":${results.size},"reps":$reps,"warmup":$warm,"remeasured":${remeasured.size},"suspect":${suspect.size},"esc_skipped":${escSkipped.size},"wall_sec":${ms(wallSec)},"loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadEnd)},"contended":$contended,"top5_slowest":$top5,"top5_spread":$noisy5,"sf":"$sfDir"}"""
     // The stdout line above is captured as a LOG TAIL and has truncated
     // mid-map two rounds running, making most per-query regressions
     // unadjudicable. The engine therefore persists its own COMPLETE
@@ -531,6 +534,7 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"bench artifact not written: ${e.getMessage}")
     }
+    println(summary) // last: see the summary's comment above
     spark.stop()
     if (errs.nonEmpty) sys.exit(1)
   }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** THE materialization primitive (r17 verdict item #8): every lineage
-  * cut in the engine — the iterative graph loops, the DirCache /
-  * CcArtifact family, the two-reader query-body cuts — routes through
+  * cut in the engine — the iterative graph loops, the DirCache
+  * artifacts, the two-reader query-body cuts — routes through
   * [[of]], so ONE config decides how intermediates are made durable:
   *
   *  - `spark.graft.checkpoint.mode = local` (default):
@@ -21,8 +21,8 @@ import org.apache.spark.sql.DataFrame
   *    of each cut relation. The 100 TB deployment setting.
   *
   * Both modes collapse the plan to the same LogicalRDD leaf (so
-  * `Graph.release` and the DirCache lifetime rules behave identically)
-  * and materialize the same rows — `CutModeSpec` pins bit-equality of
+  * `Graph.release`, the DirCache lifetime rules and its eager-result
+  * check behave identically) and materialize the same rows — `CutModeSpec` pins bit-equality of
   * the two modes on a cut-heavy query. Checkpoint FILES in reliable
   * mode live until the checkpoint dir is cleaned (standard Spark
   * `cleanCheckpoints` semantics); `release` frees only block-manager

@@ -576,7 +576,9 @@ case class PqSubspaceDistE9(first: Expression, second: Expression,
     val codes = cd.asInstanceOf[ArrayData]
     val cbs = cb.asInstanceOf[ArrayData]
     val m = cbs.numElements()
-    if (m == 0 || codes.numElements() != m) return null
+    // the codegen guard: an empty first sub-book has no sub-dimension
+    if (m == 0 || codes.numElements() != m ||
+        cbs.getArray(0).numElements() == 0) return null
     val subDim = cbs.getArray(0).getArray(0).numElements()
     if (vec.numElements() != m * subDim) return null
     val vF = vecIsFloat

@@ -647,11 +647,9 @@ object Graph {
   def trussPeelTrajectory(pairs: DataFrame, k: Long,
       rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1)
-    val spark = pairs.sparkSession
-    import spark.implicits._
     var cur = pairs.select(col("a"), col("b"))
     var owned: Option[DataFrame] = None
-    val rows = Seq.newBuilder[(Long, Long, Long, Long)]
+    val rows = new java.util.ArrayList[Row]()
     try {
       for (r <- 1 to rounds) {
         val supp = triangleSupport(cur)
@@ -662,14 +660,16 @@ object Graph {
           finally release(supp)
         val nIn = cur.count()
         val nKept = next.count()
-        rows += ((r.toLong, nIn, nIn - nKept, nKept))
+        rows.add(Row(r.toLong, nIn, nIn - nKept, nKept))
         owned.foreach(release)
         owned = Some(next)
         cur = next
       }
     } finally owned.foreach(release)
-    rows.result()
-      .toDF("round", "n_edges_in", "n_dropped", "n_survivors")
+    // a bare LocalRelation leaf (no renaming Project): an eager artifact
+    pairs.sparkSession.createDataFrame(rows, StructType(
+      Seq("round", "n_edges_in", "n_dropped", "n_survivors")
+        .map(StructField(_, LongType, nullable = false))))
   }
 
   /** The shared peel loop: returns the FINAL surviving-edge snapshot

@@ -4,7 +4,7 @@ import graft.Cut.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{DirCache, Tables}
 import graft.operators.Graph
 
 /** Graph-analytics queries over co-occurrence structure in the star
@@ -35,106 +35,6 @@ object GraphQueries {
       graft.tools.ExplainAudit.auditedCut(df, name)
   }
 
-  /** The near-duplicate candidate graph as canonical pairs `(a, b)` —
-    * the banded minhash join (q28's relation), shared by the centrality
-    * (q264) and community (q271) views through [[lshPairsCache]].
-    * `lshCandidates` already returns a distinct pair relation, so no
-    * re-dedup; the EAGER checkpoint (the `Graph.canonicalPairs`
-    * contract) lets both symmetrisation orientations read one
-    * materialisation with no first-consumer race. */
-  private def lshPairs(s: SparkSession, dir: String): DataFrame =
-    // reads the shared candidate-pair artifact (r17: one derivation per
-    // dir across the whole suite); the eager checkpoint stays so this
-    // cache entry's lifetime is independent of the one-slot artifact
-    PipelineQueries.CcArtifact.pairs(s, dir)
-      .select(col("id_a").as("a"), col("id_b").as("b"))
-      .cut(true)
-
-
-  /** Cached artifacts KEYED by (session, key): the PqModels train-once
-    * discipline applied to the graph family. The build runs on first
-    * use, every later consumer reads the retained relation. Keyed (not
-    * single-slot — the r13 shape): a long-lived listener alternating
-    * requests across two data dirs must not rebuild the lineitem
-    * self-join (and 4 LPA rounds) on every flip. LRU with a small cap
-    * bounds the retained storage; eviction RELEASES the artifact when it
-    * belongs to the evicting caller's session (an entry from another
-    * session is just dropped — its checkpoints die with that session,
-    * and releasing through a foreign/stopped context is not safe; a
-    * LIVE foreign session's entry evicted here is likewise dropped
-    * unreleased — bounded by that session's lifetime, see the r14
-    * verdict note). `buildCount` is the test hook pinning build-once
-    * behavior.
-    *
-    * CONSUMER CONTRACT (r14 advice): `get` alone is safe only for a
-    * caller that finishes reading the artifact before any other get on
-    * the same cache can run — it re-validates nothing once the lock is
-    * dropped, so a LAZY plan returned to a caller may reference
-    * checkpoints a concurrent caller's overflow has already released.
-    * Consumers that hand plans OUT (the query lambdas) must instead use
-    * [[withArtifact]], which holds the cache lock across the read and
-    * requires the result to be eagerly materialised before it
-    * escapes. */
-  private[graft] final class DirCache[K, A](
-      build: (SparkSession, K) => A, releaseFn: A => Unit, cap: Int = 4) {
-    private val cached =
-      scala.collection.mutable.LinkedHashMap.empty[(SparkSession, K), A]
-    private var builds = 0L
-    graft.ArtifactCaches.register(clearSession _)
-    private[graft] def buildCount: Long = synchronized(builds)
-    def get(s: SparkSession, key: K): A = synchronized(getLocked(s, key))
-
-    /** Cold-mode hook ([[graft.ArtifactCaches]]): release and forget
-      * every entry built by THIS session, so the next consumer rebuilds
-      * from the parquet inputs. Entries owned by other sessions are
-      * left untouched (releasing through a foreign/stopped context is
-      * not safe — the eviction rule). `buildCount` keeps counting
-      * across clears: it pins build-once behavior WITHIN a warm window,
-      * and the cold bench asserts rebuilds happen, not that they
-      * don't. */
-    private[graft] def clearSession(s: SparkSession): Unit = synchronized {
-      val keys = cached.keysIterator.filter(_._1 eq s).toList
-      keys.foreach(k => cached.remove(k).foreach(releaseFn))
-    }
-
-    /** Pin the entry across the consumer's WHOLE read: `f` runs while
-      * this cache's lock is held, so a concurrent `get`'s LRU eviction
-      * can never release the artifact mid-plan. `f` MUST eagerly
-      * materialise what it returns (a `localCheckpoint(true)` of a
-      * BOUNDED result) — a lazy plan escaping the lock would re-open
-      * exactly the race this closes. Holding the lock across `f` adds
-      * no new serialisation point: builds already run inside `get`'s
-      * lock, and the graph queries are single-flight per cache by
-      * design. Nested cache locks are taken ONLY in build-dependency
-      * order (labels → pairs, cores → pairs), so the nesting is
-      * acyclic; the lock is reentrant, so `f` may `get` ONE second key
-      * from the SAME cache (q282's two years) — with cap ≥ 2 a single
-      * additional insert can never evict the just-touched pinned key,
-      * but a THIRD same-cache get inside `f` could walk the eviction
-      * up to the pin (spec-pinned boundary). */
-    def withArtifact[B](s: SparkSession, key: K)(f: A => B): B =
-      synchronized(f(getLocked(s, key)))
-
-    private def getLocked(s: SparkSession, key: K): A = {
-      val k = (s, key)
-      cached.remove(k) match {
-        case Some(a) =>
-          cached.put(k, a) // re-insert: most-recently-used at the tail
-          a
-        case None =>
-          builds += 1
-          val a = build(s, key)
-          cached.put(k, a)
-          while (cached.size > cap) {
-            val (ek, ea) = cached.head
-            cached.remove(ek)
-            if (ek._1 eq s) releaseFn(ea)
-          }
-          a
-      }
-    }
-  }
-
   /** The co-purchase CANONICAL PAIRS artifact: one lineitem self-join
     * per data dir, shared by q251/q255/q256/q266/q268/q274/q275/q277 —
     * each query stays self-contained (first caller builds), but a
@@ -143,12 +43,12 @@ object GraphQueries {
   private val pairsCache = new DirCache[String, DataFrame]((s, dir) =>
     Graph.canonicalPairs(t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")),
-      "l_orderkey", "l_partkey"), Graph.release)
+      "l_orderkey", "l_partkey"), Graph.release, name = "pairs")
 
   /** The WEIGHTED pairs artifact (q272/q273/q276). */
   private val wpairsCache = new DirCache[String, DataFrame]((s, dir) =>
     Graph.weightedCanonicalPairs(t(s, dir, "lineitem"),
-      "l_orderkey", "l_partkey"), Graph.release)
+      "l_orderkey", "l_partkey"), Graph.release, name = "wpairs")
 
   /** The DEGREED SYMMETRIC edge artifact: `symmetrize(pairs)` joined
     * with its out-degrees, plus the node-scale degree list — built once
@@ -162,7 +62,8 @@ object GraphQueries {
     new DirCache[String, Graph.DegreedGraph]((s, dir) =>
       pairsCache.withArtifact(s, dir)(p =>
         Graph.degreedGraph(Graph.symmetrize(p))),
-      g => { Graph.release(g.edgesWithDeg); Graph.release(g.deg) })
+      g => { Graph.release(g.edgesWithDeg); Graph.release(g.deg) },
+      name = "symDeg")
 
   /** [[symDegCache]]'s WEIGHTED twin: `symmetrizeWeighted(wpairs)` ⋈
     * weighted out-degree plus the node list, row counts and max edge
@@ -173,7 +74,7 @@ object GraphQueries {
     new DirCache[String, Graph.WeightedDegreedGraph]((s, dir) =>
       wpairsCache.withArtifact(s, dir)(p =>
         Graph.weightedDegreedGraph(Graph.symmetrizeWeighted(p))),
-      g => { Graph.release(g.edgesW); Graph.release(g.wdeg) })
+      g => { Graph.release(g.edgesW); Graph.release(g.wdeg) }, name = "wSymDeg")
 
   /** LPA rounds for the co-purchase community family — one constant so
     * the stored label artifact, its consumers and their oracles can
@@ -201,7 +102,7 @@ object GraphQueries {
       // release the checkpoint mid-build) — same for every cache below
       pairsCache.withArtifact(s, dir)(p =>
         Graph.labelPropagationWithDiag(p, LpaRounds)),
-      (a: (DataFrame, Graph.LpaDiag)) => Graph.release(a._1))
+      (a: (DataFrame, Graph.LpaDiag)) => Graph.release(a._1), name = "labels")
 
   /** The WEIGHTED LPA label artifact — the weighted twin of
     * [[labelsCache]]: the 4-round weighted assignment computed once per
@@ -211,7 +112,7 @@ object GraphQueries {
   private val wLabelsCache = new DirCache[String, DataFrame]((s, dir) =>
     wpairsCache.withArtifact(s, dir)(p =>
       Graph.weightedLabelPropagation(p, LpaRounds)),
-    Graph.release)
+    Graph.release, name = "wLabels")
 
   /** YEAR-scoped LPA label artifacts for the drift family, keyed
     * (dir, year): both 1996/1997 subgraph labellings are deterministic
@@ -230,7 +131,7 @@ object GraphQueries {
         "l_orderkey", "l_partkey")
       try Graph.labelPropagation(p, LpaRounds)
       finally Graph.release(p)
-    }, Graph.release)
+    }, Graph.release, name = "yearLabels")
 
   /** The K-CORE DECOMPOSITION artifact (r14 ask #3): the k=4 / 6-round
     * peel's surviving `(node, degree)` relation, node-scale, computed
@@ -244,7 +145,7 @@ object GraphQueries {
   private val coreCache = new DirCache[String, DataFrame]((s, dir) =>
     pairsCache.withArtifact(s, dir)(p =>
       Graph.kCoreArtifact(p, k = 4, rounds = 6)),
-    Graph.release)
+    Graph.release, name = "core")
 
   /** The S-CORE (strength) decomposition artifact — [[coreCache]]'s
     * weighted twin over the shared weighted pairs (s = 80, 6 rounds):
@@ -252,15 +153,7 @@ object GraphQueries {
   private val sCoreCache = new DirCache[String, DataFrame]((s, dir) =>
     wpairsCache.withArtifact(s, dir)(p =>
       Graph.sCoreArtifact(p, s = 80L, rounds = 6)),
-    Graph.release)
-
-  /** The NEAR-DUPLICATE candidate-pair artifact: the banded minhash
-    * join materialised once per (data dir, session) — q264 (centrality)
-    * and q271 (template families) each re-derived the same
-    * shingle→minhash→band relation per call (and per bench rep) before
-    * this rode the keyed cache like the co-purchase pairs do. */
-  private val lshPairsCache =
-    new DirCache[String, DataFrame](lshPairs, Graph.release)
+    Graph.release, name = "sCore")
 
   /** The BIPARTITE customer↔part purchase relation (distinct), the
     * edge set of the HITS pair q295 (authorities) / q300 (hubs) — one
@@ -276,7 +169,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
-        .cut(true), Graph.release)
+        .cut(true), Graph.release, name = "bipartite")
 
   /** The first five HITS half-steps `(degP, a2)` materialised ONCE per
     * (dir, session) — q295 and q300 each re-ran the whole
@@ -287,7 +180,8 @@ object GraphQueries {
   private val hitsCache =
     new DirCache[String, (DataFrame, DataFrame)]((s, dir) =>
       bipartiteCache.withArtifact(s, dir)(hitsRound2Auth),
-      { case (degP, a2) => Graph.release(degP); Graph.release(a2) })
+      { case (degP, a2) => Graph.release(degP); Graph.release(a2) },
+      name = "hits")
 
   /** The per-EDGE TRIANGLE-SUPPORT artifact `(a, b, support)` — for
     * every canonical co-purchase pair, the number of triangles
@@ -302,7 +196,7 @@ object GraphQueries {
     * it derives from. */
   private val supportCache = new DirCache[String, DataFrame]((s, dir) =>
     pairsCache.withArtifact(s, dir)(Graph.triangleSupport),
-    Graph.release)
+    Graph.release, name = "support")
 
   /** The K-TRUSS PEEL TRAJECTORY artifact (k = 4, 3 rounds): the
     * per-round `(round, n_edges_in, n_dropped, n_survivors)` record of
@@ -317,7 +211,7 @@ object GraphQueries {
   private val trussCache = new DirCache[String, DataFrame]((s, dir) =>
     pairsCache.withArtifact(s, dir)(p =>
       Graph.trussPeelTrajectory(p, k = TrussK, rounds = 3)),
-    _ => ())
+    _ => (), name = "truss")
 
   /** Max-normalise a score column to e6 fixed point: `out = v·1e6 div
     * max(v)` — deterministic, range-bounded to [0, 1e6], DECIMAL(38,0)
@@ -439,7 +333,7 @@ object GraphQueries {
             .withColumn("ranked_by", lit("ra")))
           .auditedCut("q288_neighbor_jaccard+q291_resource_allocation")
       } finally Graph.release(xSide)
-    }, Graph.release)
+    }, Graph.release, name = "seedWedge")
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -519,11 +413,11 @@ object GraphQueries {
     // banded minhash join (q28's relation), so the graph build is the
     // bucketed dedup path — never all-pairs.
     "q264_dedup_centrality" -> { (s, dir) =>
-      lshPairsCache.withArtifact(s, dir) { pairs =>
-        val edges = pairs
-          .select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(pairs.select(col("b").as("src"),
-            col("a").as("dst")))
+      PipelineQueries.CcArtifact.cache.withArtifact(s, dir) { case (p, _) =>
+        val edges = p
+          .select(col("id_a").as("src"), col("id_b").as("dst"))
+          .unionByName(p.select(col("id_b").as("src"),
+            col("id_a").as("dst")))
         val r = Graph.pageRank(edges, iterations = 5)
         try r.select(col("node").as("doc_id"), col("rank_e6"))
           .orderBy(col("rank_e6").desc, col("doc_id"))
@@ -734,8 +628,9 @@ object GraphQueries {
     // one chance collision. Edges come from the bucketed dedup path,
     // never all-pairs.
     "q271_dedup_communities" -> { (s, dir) =>
-      lshPairsCache.withArtifact(s, dir) { pairs =>
-        val labels = Graph.labelPropagation(pairs, rounds = 4)
+      PipelineQueries.CcArtifact.cache.withArtifact(s, dir) { case (p, _) =>
+        val labels = Graph.labelPropagation(
+          p.select(col("id_a").as("a"), col("id_b").as("b")), rounds = 4)
         try labels
           .groupBy(col("label").as("family"))
           .agg(count(lit(1)).as("n_docs"),
@@ -787,6 +682,7 @@ object GraphQueries {
             col("y").as("counterpart"),
             col("common").as("common_neighbors"),
             col("deg_x"), col("deg_y"), col("jaccard_ppm"))
+          .auditedCut("q288_neighbor_jaccard")
       }
     },
 
@@ -807,6 +703,7 @@ object GraphQueries {
           .select(col("x").as("seed_part"),
             col("y").as("counterpart"),
             col("common").as("common_neighbors"), col("ra_e6"))
+          .auditedCut("q291_resource_allocation")
       }
     },
 
@@ -885,11 +782,12 @@ object GraphQueries {
       // (negligible, and the caller owns the result).
       yearLabelsCache.withArtifact(s, (dir, 1996)) { la =>
         val lb = yearLabelsCache.get(s, (dir, 1997))
-        Graph.randIndexPpm(la, lb).auditedCut("q282_community_drift")
+        Graph.randIndexPpm(la, lb)
           .select(col("n_nodes"),
             col("n_comm_a").as("n_comm_1996"),
             col("n_comm_b").as("n_comm_1997"),
             col("same_same_pairs"), col("rand_ppm"))
+          .auditedCut("q282_community_drift")
       }
     },
 

@@ -119,6 +119,26 @@ object BenchStats {
   def ms3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** The per-query map as BOUNDED `queries_part` JSON lines: the
+    * `"name":sec` entries packed greedily, a chunk's map staying within
+    * `maxChars` (one over-long entry gets a chunk to itself). A log-tail
+    * capture that cuts the head of the output then loses whole early
+    * chunks, never the shape of a line. */
+  def queryParts(entries: Seq[String], sf: String,
+      maxChars: Int = 1000): Seq[String] = {
+    val chunks = entries.foldLeft(Vector.empty[Vector[String]]) {
+      case (acc :+ cur, e)
+          if cur.map(_.length + 1).sum + e.length <= maxChars =>
+        acc :+ (cur :+ e)
+      case (acc, e) => acc :+ Vector(e)
+    }
+    chunks.zipWithIndex.map { case (c, i) =>
+      s"""{"metric":"queries_part","part":$i,"parts":${chunks.size},""" +
+        s""""queries":${c.mkString("{", ",", "}")},""" +
+        s""""sf":"${jsonEscape(sf)}"}"""
+    }
+  }
+
   /** One bench-history record as a JSON line — the run-over-run trend
     * `bench/history.jsonl` accumulates (the last_run rotation keeps only
     * ONE previous artifact; the history keeps the story). Pure

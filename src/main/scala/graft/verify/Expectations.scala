@@ -438,7 +438,14 @@ object Expectations {
         aggReports ++
           refReportsF.map(Await.result(_, Duration.Inf)) ++
           distReportsF.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
+      } finally {
+        // a failed rule rethrows above while its siblings may still be
+        // reading the shared checkpoints: let them finish before the
+        // outer finally releases that storage under them
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue,
+          java.util.concurrent.TimeUnit.NANOSECONDS)
+      }
     } finally {
       // every consumer ran its action above; the shared checkpoints
       // have had their last read (the returned report is a local

@@ -122,4 +122,29 @@ class VectorExpressionsSpec extends SparkSpec {
       s"expected codegen'd int-dot projection in plan:\n$plan")
     assert(scored.filter(col("d") >= 0).count() == 500)
   }
+
+  test("PQ subspace distance: an empty first sub-book yields null under " +
+      "both codegen and interpreted evaluation") {
+    // m = 2 sub-books, the first one empty: a malformed codebook
+    val cb = Seq(Seq.empty[Seq[Double]], Seq(Seq(1.0)))
+    def eval(mode: String): Seq[Boolean] = {
+      val keys = Seq("spark.sql.codegen.factoryMode",
+        "spark.sql.codegen.wholeStage", "spark.sql.codegen.fallback")
+      val before = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try spark.range(2)
+        .select(VectorFunctions.pqSubspaceDistE9(
+          array(col("id").cast("double"), col("id").cast("double")),
+          array(lit(0), lit(0)), cb).as("d"))
+        .collect().map(_.isNullAt(0)).toSeq
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(eval("CODEGEN_ONLY") === Seq(true, true))
+    assert(eval("NO_CODEGEN") === Seq(true, true))
+  }
 }

@@ -15,7 +15,7 @@ class DirCacheSpec extends SparkSpec {
 
   private def cache(cap: Int, released: collection.mutable.Buffer[Int]) = {
     var n = 0
-    val c = new GraphQueries.DirCache[String, Int](
+    val c = new graft.DirCache[String, Int](
       (_: SparkSession, _: String) => { n += 1; n },
       (a: Int) => released += a, cap)
     c
@@ -98,5 +98,40 @@ class DirCacheSpec extends SparkSpec {
     val before = c.buildCount
     assert(c.get(spark, "dirA") == a)
     assert(c.buildCount == before)
+  }
+
+  test("withArtifact rejects a lazy DataFrame result, naming the cache") {
+    import graft.Cut.CutOps
+    val c = new graft.DirCache[String, org.apache.spark.sql.DataFrame](
+      (s: SparkSession, _: String) => s.range(5).toDF("id").cut(true),
+      graft.operators.Graph.release, name = "lazySpec")
+    try {
+      val e = intercept[IllegalStateException](
+        c.withArtifact(spark, "d")(_.filter("id > 1")))
+      assert(e.getMessage.contains("lazySpec"))
+      // eager results pass: a cut, and a driver-local relation
+      assert(c.withArtifact(spark, "d")(_.filter("id > 1").cut(true))
+        .count() == 3)
+      import spark.implicits._
+      assert(c.withArtifact(spark, "d")(df => Seq(df.count()).toDF())
+        .head().getLong(0) == 5)
+    } finally c.clearSession(spark)
+  }
+
+  test("a former one-slot artifact alternating two data dirs builds " +
+      "each ONCE (BPE merge lists)") {
+    // a fresh session: the shared suite session may already hold them
+    val s = spark.newSession()
+    val bpe = PipelineQueries.BpeModels
+    val before = bpe.cache.buildCount
+    try {
+      val small = bpe.trained(s, sf("sf0.001"))
+      val large = bpe.trained(s, sf("sf0.01"))
+      for (_ <- 1 to 3) {
+        assert(bpe.trained(s, sf("sf0.001")) eq small)
+        assert(bpe.trained(s, sf("sf0.01")) eq large)
+      }
+      assert(bpe.cache.buildCount - before == 2)
+    } finally graft.ArtifactCaches.clearAll(s)
   }
 }

@@ -258,4 +258,22 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(BenchStats.parseRing(old, sf) ===
       Seq(Map("q124" -> 0.4)))
   }
+
+  test("queryParts splits the per-query map into bounded, complete " +
+      "chunk lines") {
+    val entries =
+      (1 to 100).map(i => "\"q%03d_name\":%d.000".format(i, i))
+    val lines = BenchStats.queryParts(entries, "/d/sf0.1", maxChars = 200)
+    assert(lines.size > 1)
+    val Part = ("""\{"metric":"queries_part","part":(\d+),"parts":(\d+),""" +
+      """"queries":\{(.*)\},"sf":"/d/sf0.1"\}""").r
+    val parsed =
+      lines.map { case Part(i, n, body) => (i.toInt, n.toInt, body) }
+    assert(parsed.map(_._1) == lines.indices)
+    assert(parsed.forall(_._2 == lines.size))
+    assert(parsed.forall(_._3.length <= 200))
+    // every entry appears exactly once, in order
+    assert(parsed.flatMap(_._3.split(",")) == entries)
+    assert(BenchStats.queryParts(Nil, "x").isEmpty)
+  }
 }

@@ -302,4 +302,34 @@ class ExpectationsSpec extends SparkSpec {
     assert(out.forall(r =>
       r.getAs[Long]("n_violations") <= r.getAs[Long]("n_rows")))
   }
+
+  test("a failing rule surfaces its own exception only after its " +
+      "siblings finished reading the shared checkpoints") {
+    ExpectationsSpec.slowDone.set(false)
+    val fail = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("bad-parent-marker")
+      x
+    }
+    val slow = udf { (x: Long) =>
+      Thread.sleep(1500); ExpectationsSpec.slowDone.set(true); x
+    }
+    // "a" is read by both ref rules (and its own row count), so it is
+    // a shared checkpoint; r1's parent fails fast, r2's parent is slow
+    val tables = Map(
+      "a" -> spark.range(10).toDF("k"),
+      "bad" -> spark.range(1).select(fail(col("id")).as("pk")),
+      "slow" -> spark.range(1).select(slow(col("id")).as("pk")))
+    val e = intercept[Exception](evaluate(spark, tables, Seq(
+      RefIntegrity("a", "k", "bad", "pk"),
+      RefIntegrity("a", "k", "slow", "pk"))))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(chain.contains("bad-parent-marker"), chain)
+    // the sibling ran to completion before the checkpoints were released
+    assert(ExpectationsSpec.slowDone.get())
+  }
+}
+
+object ExpectationsSpec {
+  val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
