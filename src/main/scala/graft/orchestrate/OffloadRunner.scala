@@ -132,7 +132,9 @@ object OffloadRunner {
     * `TESTDATA.md` tables play Oracle).
     */
   def offload(spark: SparkSession, cfg: OffloadConfig): Seq[StepResult] =
-    audited(cfg, "OFFLOAD") { ctx =>
+    audited(cfg, Map("dry_run" -> cfg.dryRun.toString,
+        "incremental_key" -> cfg.incrementalKey.mkString(",")))(
+        (res: Seq[StepResult]) => res.forall(_.ok)) { ctx =>
       if (cfg.withLock)
         // fsScratch: lock files need a filesystem even when the metadata
         // "dir" is a JDBC repository URL
@@ -144,10 +146,6 @@ object OffloadRunner {
       else runSteps(spark, cfg, ctx)
     }
 
-  /** Command begin/end audit bracket — the reference's `_command_begin` /
-    * `_command_end` / `_command_fail` (`orchestration_runner.py:139-226`):
-    * one command_begin row up front, a command_end row with
-    * SUCCESS/ERROR when the body returns/throws. */
   /** The data-quality gate shared by the full and chunked paths: ONE
     * aggregate pass over the slice about to load
     * ([[graft.verify.Expectations.evaluateRelation]] — table names in
@@ -205,23 +203,24 @@ object OffloadRunner {
     }
   }
 
-  private def audited(cfg: OffloadConfig, commandType: String)
-                     (body: AuditContext => Seq[StepResult])
-      : Seq[StepResult] = {
+  /** Command begin/end audit bracket — the reference's `_command_begin` /
+    * `_command_end` / `_command_fail` (`orchestration_runner.py:139-226`):
+    * one command_begin row up front, a command_end row with
+    * SUCCESS/ERROR when the body returns (as `ok` judges it) or throws. */
+  private def audited[T](cfg: OffloadConfig, parameters: Map[String, String])
+                        (ok: T => Boolean)(body: AuditContext => T): T = {
     import graft.meta.CommandAudit
     val audit = CommandAudit.open(cfg.metadataDir)
     val execId = cfg.executionId.getOrElse(CommandAudit.newExecutionId())
-    val ctx = AuditContext(audit, execId, commandType)
-    val cid = audit.startCommand(execId, commandType,
+    val ctx = AuditContext(audit, execId, "OFFLOAD")
+    val cid = audit.startCommand(execId, "OFFLOAD",
       commandInput = cfg.sourceTable,
-      parameters = Map(
-        "source_path" -> cfg.sourcePath, "final_path" -> cfg.finalPath,
-        "dry_run" -> cfg.dryRun.toString,
-        "incremental_key" -> cfg.incrementalKey.mkString(",")))
+      parameters = Map("source_path" -> cfg.sourcePath,
+        "final_path" -> cfg.finalPath) ++ parameters)
     try {
       val res = body(ctx)
       audit.endCommand(cid,
-        if (res.forall(_.ok)) CommandAudit.Success else CommandAudit.Error)
+        if (ok(res)) CommandAudit.Success else CommandAudit.Error)
       res
     } catch {
       case e: Throwable =>
@@ -298,11 +297,8 @@ object OffloadRunner {
 
     expectationsStep(r, spark, cfg, planned)
 
-    // listener events are posted asynchronously; drain the bus before
-    // reading the counter. The old settle loop POLLED with 50 ms sleeps
-    // (≥100 ms per read, two reads per offload — pure driver idle time,
-    // guide §1.2) and was in principle racy; waitUntilEmpty is the
-    // engine's exact completion barrier for the same condition.
+    // listener events are posted asynchronously; drain the bus (the
+    // engine's exact completion barrier) before reading the counter
     def settledRecordsWritten(): Long = {
       org.apache.spark.graftbridge.ListenerBridge
         .waitUntilListenerBusEmpty(spark.sparkContext)
@@ -313,20 +309,20 @@ object OffloadRunner {
     // the delta across the stage is the transport's own row count
     val preStageWritten = if (cfg.dryRun) 0L else settledRecordsWritten()
 
-    // the staged row count stageAndLoad already computed is REUSED by
-    // verify_counts and task_metrics below (r18, guide §1.2): the serial
-    // offload previously re-counted the staging directory twice more
-    var stagedCount: Option[Long] = None
+    // observed on the final load's scan of staging; the steps below use
+    // it, so nothing reads staging again
+    var staged: Option[StagedLoad.Staged] = None
     r.step("stage_and_load",
         s"staging=${cfg.stagingPath} final=${cfg.finalPath} " +
         s"mode=$finalMode partitionBy=${cfg.partitionCols.mkString(",")}") {
       planned.foreach { df =>
         StagedLoad.stageAndLoad(df, cfg.stagingPath, cfg.finalPath, schema,
-            cfg.partitionCols, finalMode, cfg.sortCols) match {
+            cfg.incrementalKey, cfg.partitionCols, finalMode,
+            cfg.sortCols) match {
           case Left(violations) =>
             throw new IllegalStateException(
-              s"staged-data validation failed: ${violations.count()} rows")
-          case Right(n) => stagedCount = Some(n)
+              StagedLoad.violationMessage(violations))
+          case Right(st) => staged = Some(st)
         }
       }
     }
@@ -350,32 +346,24 @@ object OffloadRunner {
 
     r.step("verify_counts", "count source slice vs staged slice") {
       planned.foreach { df =>
-        // the source slice is counted fresh (that is the row-loss gate);
-        // the staged side reuses stageAndLoad's count of the exact same
-        // directory rather than scanning it again
+        // the source slice is counted fresh: that is the row-loss gate
         val s = df.count()
-        val t = stagedCount.getOrElse(
-          spark.read.parquet(cfg.stagingPath).count())
+        val t = staged.get.rows
         if (s != t)
           throw new IllegalStateException(s"row count mismatch: $s vs $t")
       }
     }
 
-
     r.step("save_metadata", s"metadataDir=${cfg.metadataDir}") {
-      planned.foreach { df =>
+      planned.foreach { _ =>
         // An empty increment must NOT regress the HWM: keep the previous one.
         val previousHwm = MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
           .map(_.incrementalHighValue).getOrElse(Nil)
-        // the HWM probes the STAGED slice: verify_counts has already
-        // gated it row-equal to the source slice, and the plain parquet
-        // scan skips re-running the source's predicate/HWM filter chain
-        // a third time (r18, §1.2)
+        // the HWM observed over the STAGED slice, which verify_counts
+        // has gated row-equal to the source slice: no Spark work here
         val newHwm: Seq[String] =
           if (cfg.incrementalKey.nonEmpty)
-            CrossValidator.maxProbe(spark.read.parquet(cfg.stagingPath),
-                cfg.incrementalKey)
-              .map(_.map(String.valueOf)).getOrElse(previousHwm)
+            staged.get.hwm.map(_.map(String.valueOf)).getOrElse(previousHwm)
           else Nil
         MetadataStore.save(cfg.metadataDir, OffloadMetadata(
           sourceTable = cfg.sourceTable,
@@ -393,20 +381,19 @@ object OffloadRunner {
 
     // Transport row accounting — what the reference scraped from Spark logs
     // (`offload_transport.py:1811-1838`), natively from the listener, and
-    // CROSS-CHECKED against the staged slice (r15 ask #8):
-    // stage_and_load writes each transported row exactly twice (once
-    // into staging, once into the final table), so for a SERIAL offload
-    // the listener's delta across the stage window equals 2 × the
-    // staged row count — the spec pins that equality. REPORT-ONLY by
-    // design: the task listener's output counters are JVM-global (the
-    // same aliasing the reference's log-scrape had — concurrent
-    // offloads in one session see each other's tasks), so a mismatch
-    // here is a diagnostic, while the HARD row-loss gate remains the
-    // per-offload verify_counts step above (source slice vs staged
+    // CROSS-CHECKED against the staged slice: stage_and_load writes each
+    // transported row exactly twice (staging, then the final table), so
+    // for a SERIAL offload the listener's delta across the stage window
+    // equals 2 × the staged row count — the spec pins that equality.
+    // REPORT-ONLY by design: the task listener's output counters are
+    // JVM-global (the same aliasing the reference's log-scrape had —
+    // concurrent offloads in one session see each other's tasks), so a
+    // mismatch here is a diagnostic, while the HARD row-loss gate remains
+    // the per-offload verify_counts step above (source slice vs staged
     // slice, which throws).
     if (!cfg.dryRun) {
       val transportRows = postStageWritten - preStageWritten
-      val stagedRows = planned.flatMap(_ => stagedCount).getOrElse(0L)
+      val stagedRows = staged.fold(0L)(_.rows)
       // settle again for the RAW total: a later Spark-writing step (an
       // executing BigQuery sink) may still have task events in flight
       val totalWritten = settledRecordsWritten()
@@ -440,29 +427,13 @@ object OffloadRunner {
                      // everything already committed, returns — WITHOUT
                      // touching the source at all.
                      planFromCopiedStats: Boolean = false)
-      : Seq[Seq[StepResult]] = {
-    import graft.meta.CommandAudit
-    val audit = CommandAudit.open(cfg.metadataDir)
-    val execId = cfg.executionId.getOrElse(CommandAudit.newExecutionId())
-    val ctx = AuditContext(audit, execId, "OFFLOAD")
-    val cid = audit.startCommand(execId, "OFFLOAD",
-      commandInput = cfg.sourceTable,
-      parameters = Map(
-        "source_path" -> cfg.sourcePath, "final_path" -> cfg.finalPath,
-        "chunked" -> "true", "max_rows_per_chunk" -> maxRowsPerChunk.toString))
-    try {
-      val res = offloadChunkedBody(spark, cfg, chunkKeyCol, hwmCol,
-        maxRowsPerChunk, planFromCopiedStats, ctx)
-      audit.endCommand(cid,
-        if (res.forall(_.forall(_.ok))) CommandAudit.Success
-        else CommandAudit.Error)
-      res
-    } catch {
-      case e: Throwable =>
-        audit.endCommand(cid, CommandAudit.Error)
-        throw e
+      : Seq[Seq[StepResult]] =
+    audited(cfg, Map("chunked" -> "true",
+        "max_rows_per_chunk" -> maxRowsPerChunk.toString))(
+        (res: Seq[Seq[StepResult]]) => res.forall(_.forall(_.ok))) { ctx =>
+      offloadChunkedBody(spark, cfg, chunkKeyCol, hwmCol, maxRowsPerChunk,
+        planFromCopiedStats, ctx)
     }
-  }
 
   private def offloadChunkedBody(spark: SparkSession, cfg: OffloadConfig,
                                  chunkKeyCol: String => org.apache.spark.sql.Column,
@@ -484,11 +455,9 @@ object OffloadRunner {
           try {
             val fin = spark.read.parquet(cfg.finalPath)
             val beyond =
-              if (m.incrementalHighValue.nonEmpty) {
-                val bounds = m.incrementalHighValue.map(v =>
-                  Boundary.Value(castHwmLiteral(fin, hwmCol, v)))
-                fin.filter(Boundary.greaterThan(Seq(hwmCol), bounds))
-              } else fin
+              if (m.incrementalHighValue.nonEmpty)
+                beyondHwm(fin, hwmCol, m.incrementalHighValue)
+              else fin
             !beyond.filter(
               chunkKeyCol(hwmCol).isInCollection(m.pendingChunkKeys)).isEmpty
           } catch {
@@ -503,6 +472,11 @@ object OffloadRunner {
     val committedHwm = MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
       .filter(_.incrementalKey == Seq(hwmCol))
       .map(_.incrementalHighValue).filter(_.nonEmpty)
+    // lazy: planning from the copied stats must not open the source.
+    // Resume-at-failed-chunk: completed chunks are filtered out by the
+    // persisted HWM before profiling and before slicing.
+    lazy val raw = spark.read.parquet(cfg.sourcePath)
+    lazy val source = committedHwm.fold(raw)(beyondHwm(raw, hwmCol, _))
 
     // Chunk-plan input: either the copied stats record (zero source I/O —
     // planning never reads the table; a fully-committed retry returns
@@ -531,17 +505,7 @@ object OffloadRunner {
        else None) match {
         case Some(copied) => copied
         case None =>
-          val raw = spark.read.parquet(cfg.sourcePath)
-          // Resume-at-failed-chunk: filter the source by the persisted HWM
-          // BEFORE profiling, so completed chunks vanish from the plan.
-          val src = committedHwm match {
-            case Some(hwmVals) =>
-              val bounds = hwmVals.map(v =>
-                Boundary.Value(castHwmLiteral(raw, hwmCol, v)))
-              raw.filter(Boundary.greaterThan(Seq(hwmCol), bounds))
-            case None => raw
-          }
-          val profile = src
+          val profile = source
             .groupBy(chunkKeyCol(hwmCol).as("chunk_key"))
             .agg(count(lit(1)).as("rows"),
               min(col(hwmCol)).as("lo"), max(col(hwmCol)).as("hi"))
@@ -576,14 +540,6 @@ object OffloadRunner {
           (live, bounds)
       }
     if (parts.isEmpty) return Seq.empty
-    val raw = spark.read.parquet(cfg.sourcePath)
-    val source = committedHwm match {
-      case Some(hwmVals) =>
-        val bounds = hwmVals.map(v =>
-          Boundary.Value(castHwmLiteral(raw, hwmCol, v)))
-        raw.filter(Boundary.greaterThan(Seq(hwmCol), bounds))
-      case None => raw
-    }
     val chunks = graft.plan.PartitionPlanner.chunk(
       parts, maxBytes = maxRowsPerChunk, maxCount = Int.MaxValue)
     chunks.zipWithIndex.map { case (chunk, chunkIdx) =>
@@ -591,8 +547,6 @@ object OffloadRunner {
       val chunkCfg = cfg.copy(predicateDsl = None)
       val r = new Runner(cfg.dryRun, Some(ctx))
       cfg.progress.foreach(r.observers += _)
-      val metrics = new TaskMetricsListener
-      spark.sparkContext.addSparkListener(metrics)
       // start_offload_chunk/end_offload_chunk, chunk_number starts at 1
       val chunkId = ctx.audit.startChunk(ctx.executionId, chunkIdx + 1, keys)
       try {
@@ -611,22 +565,23 @@ object OffloadRunner {
             keyed.filter(col(hwmCol) >= lit(lo) && col(hwmCol) <= lit(hi))
           } else keyed
         r.step("chunk_plan", s"keys=${keys.mkString(",")}")(())
-        runChunkSlice(spark, chunkCfg, r, slice, keys)
+        // audit the chunk's observed staged rows (None on a dry run)
+        val rows = runChunkSlice(spark, chunkCfg, r, slice, keys)
         ctx.audit.endChunk(chunkId, graft.meta.CommandAudit.Success,
-          rowCount = Some(metrics.totalRecordsWritten))
+          rowCount = rows)
         r.results.toSeq
       } catch {
         case e: Throwable =>
           ctx.audit.endChunk(chunkId, graft.meta.CommandAudit.Error)
           throw e
-      } finally spark.sparkContext.removeSparkListener(metrics)
+      }
     }
   }
 
-  /** Stage/load/verify/metadata for one pre-planned slice. */
+  /** Stage/load/metadata for one planned slice; its staged row count. */
   private def runChunkSlice(spark: SparkSession, cfg: OffloadConfig,
                             r: Runner, slice: DataFrame,
-                            chunkKeys: Seq[String]): Unit = {
+                            chunkKeys: Seq[String]): Option[Long] = {
     val schema = TypeMapper.fromStructType(slice.schema)
     val prior = MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
     val alreadyLoaded = prior.exists(_.incrementalHighValue.nonEmpty)
@@ -650,12 +605,13 @@ object OffloadRunner {
         pendingChunkKeys = chunkKeys, pendingChunkHwm = newHwm,
         writerTimeZone = Some(graft.plans.TimeZoneGuard.sessionTz(spark))))
     }
-    r.step("stage_and_load", s"mode=$mode") {
+    // no observed HWM: the pending marker carries the pre-append probe's
+    val rows = r.step("stage_and_load", s"mode=$mode") {
       StagedLoad.stageAndLoad(slice, cfg.stagingPath, cfg.finalPath, schema,
-          cfg.partitionCols, mode, cfg.sortCols) match {
+          hwmKeys = Nil, cfg.partitionCols, mode, cfg.sortCols) match {
         case Left(v) => throw new IllegalStateException(
-          s"staged-data validation failed: ${v.count()} rows")
-        case Right(_) => ()
+          StagedLoad.violationMessage(v))
+        case Right(st) => st.rows
       }
     }
     r.step("save_metadata", "advance HWM for chunk") {
@@ -665,7 +621,14 @@ object OffloadRunner {
         incrementalHighValue = newHwm,
         writerTimeZone = Some(graft.plans.TimeZoneGuard.sessionTz(spark))))
     }
+    rows
   }
+
+  /** Rows of `df` strictly beyond the rendered HWM on `key`. */
+  private def beyondHwm(df: DataFrame, key: String,
+                        hwm: Seq[String]): DataFrame =
+    df.filter(Boundary.greaterThan(Seq(key),
+      hwm.map(v => Boundary.Value(castHwmLiteral(df, key, v)))))
 
   /** Parse a rendered HWM literal back to ITS OWN key column's runtime type
     * (a multi-column key mixes types, e.g. timestamp + long). */

@@ -1,6 +1,11 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -13,11 +18,22 @@ import graft.types.{CanonicalColumn, TypeMapper}
   * (`backend_table.py:1209-1505`), SAFE_CAST probes
   * (`backend_table.py:281-313, 1120-1208`), and the final typed
   * INSERT…SELECT with per-column cast expressions
-  * (`bigquery_backend_table.py:290-454`). Under Spark all four are DataFrame
-  * programs over the same staged scan, so validation and load share one pass
-  * of I/O when cached or pipelined.
+  * (`bigquery_backend_table.py:290-454`). The violation probes are capped
+  * filters over staging (no read at all when every mapping is safe and
+  * nullable); the final insert's scan also observes the staged row count
+  * and HWM ([[Staged]]), so staging is never read back to count it.
   */
 object StagedLoad {
+
+  /** Observed on the final load's scan of staging: the row count and the
+    * lexicographic `max(struct(hwmKeys))`, i.e. what
+    * [[graft.verify.CrossValidator.maxProbe]] gives over the staged files
+    * (`None` for an empty slice or no keys). */
+  final case class Staged(rows: Long, hwm: Option[Seq[Any]])
+
+  /** Observed metrics arrive over the listener bus in milliseconds; the
+    * bound turns a wedged bus into an error instead of a hang. */
+  private val ObservedMetricsTimeout: FiniteDuration = 120.seconds
 
   /** NaN/Inf → NULL policy for float columns
     * (`--allow-floating-point-conversions`; CASE projection at
@@ -104,26 +120,41 @@ object StagedLoad {
     df.select(out: _*)
   }
 
-  /** Stage then load: write staging parquet, re-read, validate, write final
-    * (partitioned by synthetic keys when given). Returns (stagedRows,
-    * violations). Kept explicitly two-phase like the reference so the staged
-    * slice is an auditable, atomic retry unit. */
+  /** Error text for a failed validation: the probes are `limit`-capped, so
+    * `violations` is a sample, not a count. */
+  def violationMessage(violations: DataFrame): String = {
+    val sample = violations.collect()
+    s"staged-data validation failed: ${sample.length} offending rows in a " +
+      "sample capped at 10 per check; e.g. " + sample.take(3).mkString("; ")
+  }
+
+  /** Stage then load: write staging parquet, probe it for violations, write
+    * the final table (partitioned by synthetic keys when given). Kept
+    * two-phase like the reference so the staged slice is an auditable,
+    * atomic retry unit. Returns `Left(violations)` (a capped sample; nothing
+    * written to `finalPath`) or `Right(Staged)` observed on the final
+    * write's scan. Staging is read with the schema just written, so no
+    * footer inference runs. */
   def stageAndLoad(
       df: DataFrame,
       stagingPath: String,
       finalPath: String,
       schema: Seq[CanonicalColumn],
+      hwmKeys: Seq[String],
       partitionCols: Seq[String] = Nil,
       finalMode: String = "overwrite",
-      sortCols: Seq[String] = Nil): Either[DataFrame, Long] = {
+      sortCols: Seq[String] = Nil): Either[DataFrame, Staged] = {
     df.write.mode("overwrite").parquet(stagingPath)
-    val spark = df.sparkSession
-    val staged = spark.read.parquet(stagingPath)
+    val staged = df.sparkSession.read.schema(df.schema).parquet(stagingPath)
     val bad = castViolations(staged, schema)
       .unionByName(notNullViolations(staged, schema), allowMissingColumns = true)
     if (!bad.isEmpty) Left(bad)
     else {
-      val projected = staged.select(castProjection(schema): _*)
+      val obs = Observation()
+      val hwmMax = Option.when(hwmKeys.nonEmpty)(
+        max(struct(hwmKeys.map(col): _*)).as("hwm")).toSeq
+      val projected = staged.observe(obs, count(lit(1)).as("rows"), hwmMax: _*)
+        .select(castProjection(schema): _*)
       // Sort/cluster columns (reference operation/sort_columns.py; BigQuery
       // clustering): sortWithinPartitions gives per-file clustering ->
       // better min/max pruning on the sorted columns, no extra shuffle.
@@ -134,7 +165,13 @@ object StagedLoad {
       val writer = clustered.write.mode(finalMode)
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
        else writer).parquet(finalPath)
-      Right(staged.count())
+      val row = try Await.result(obs.future, ObservedMetricsTimeout)
+        catch { case e: TimeoutException => throw new IllegalStateException(
+          s"staged load $stagingPath -> $finalPath: observed row count and " +
+            s"HWM did not arrive within $ObservedMetricsTimeout", e) }
+      val hwm = if (hwmKeys.isEmpty) None
+        else Option(row.getStruct(1)).map(s => hwmKeys.indices.map(s.get))
+      Right(Staged(row.getLong(0), hwm))
     }
   }
 }

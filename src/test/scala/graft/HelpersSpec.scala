@@ -84,7 +84,7 @@ class SortColumnsSpec extends SparkSpec {
     val li = Tables.load(spark, sf("sf0.001"), "lineitem").repartition(4)
     val schema = TypeMapper.fromStructType(li.schema)
     val out = StagedLoad.stageAndLoad(li, s"$base/stage", s"$base/final",
-      schema, sortCols = Seq("l_orderkey"))
+      schema, hwmKeys = Nil, sortCols = Seq("l_orderkey"))
     assert(out.isRight)
     // per-file min/max ranges should be narrow after clustering: read each
     // file and check rows are locally sorted by the key

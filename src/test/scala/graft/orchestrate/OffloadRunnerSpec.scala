@@ -194,6 +194,37 @@ class OffloadRunnerSpec extends SparkSpec {
     assert(OffloadLock.tryAcquire(s"$base/meta/locks", "part").isDefined)
   }
 
+  test("a serial full offload reads the source twice and staging once") {
+    // source → staging, staging → final (which also observes the staged
+    // count and HWM), and verify_counts' fresh count of the source slice.
+    // A recount of staging or a separate HWM probe adds one more pass.
+    val base = tmpBase()
+    val cfg = OffloadRunner.OffloadConfig(
+      sourceTable = "lineitem",
+      sourcePath = sf("sf0.001") + "/lineitem.parquet",
+      stagingPath = s"$base/staging",
+      finalPath = s"$base/final",
+      metadataDir = s"$base/meta",
+      incrementalKey = Seq("l_orderkey"))
+    val listener = new TaskMetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    val steps =
+      try {
+        val out = OffloadRunner.offload(spark, cfg)
+        org.apache.spark.graftbridge.ListenerBridge
+          .waitUntilListenerBusEmpty(spark.sparkContext)
+        out
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(steps.forall(_.ok), steps.mkString("\n"))
+    val landed = spark.read.parquet(cfg.finalPath).count()
+    assert(landed > 0L)
+    assert(listener.snapshot.map(_.recordsRead).sum == 3 * landed)
+    val meta = MetadataStore.load(cfg.metadataDir, "lineitem").get
+    val expectedMax = spark.read.parquet(cfg.sourcePath)
+      .agg(max(col("l_orderkey"))).head().getLong(0)
+    assert(meta.incrementalHighValue == Seq(expectedMax.toString))
+  }
+
   test("dry run renders steps without writing anything") {
     val base = tmpBase()
     val steps = OffloadRunner.offload(spark, OffloadRunner.OffloadConfig(
@@ -439,8 +470,11 @@ class OffloadRunnerSpec extends SparkSpec {
     assert(run.chunks.map(_.chunkNumber) == (1 to chunkRuns.length))
     assert(run.chunks.forall(_.status == CommandAudit.Success))
     assert(run.chunks.forall(_.partitions.nonEmpty))
-    // recordsWritten per chunk: staging + final writes — strictly positive
+    // each chunk audits its staged rows: strictly positive, and together
+    // they are the table
     assert(run.chunks.forall(_.rowCount.exists(_ > 0)))
+    assert(run.chunks.flatMap(_.rowCount).sum ==
+      spark.read.parquet(s"$base/final").count())
     // run history summary rolls the same rows up
     val hist = StatusReport.runHistory(s"$base/meta")
     assert(hist.length == 1 && hist.head.chunks == chunkRuns.length)

@@ -46,7 +46,7 @@ class StagedLoadSpec extends SparkSpec {
       .withColumn("part_m", date_format(col("o_orderdate"), "yyyy-MM"))
     val schema = graft.types.TypeMapper.fromStructType(src.schema)
     val out = StagedLoad.stageAndLoad(src, s"$base/staging", s"$base/final",
-      schema, partitionCols = Seq("part_m"))
+      schema, hwmKeys = Nil, partitionCols = Seq("part_m"))
     assert(out.isRight)
     val loaded = spark.read.parquet(s"$base/final")
     assert(loaded.count() == src.count())
@@ -54,6 +54,80 @@ class StagedLoadSpec extends SparkSpec {
     val plan = loaded.filter(col("part_m") === "2023-01")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") || loaded.count() > 0)
+  }
+
+  /** Stage and load `df`, then check the observed [[StagedLoad.Staged]]
+    * against the recount it replaces: a fresh count of the staging files
+    * and `CrossValidator.maxProbe` over them, compared as rendered HWM
+    * strings. */
+  private def observedMatchesRecount(df: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], partitionCols: Seq[String] = Nil,
+      sortCols: Seq[String] = Nil): StagedLoad.Staged = {
+    val base = Files.createTempDirectory("graft_observed").toString
+    val schema = graft.types.TypeMapper.fromStructType(df.schema)
+    val out = StagedLoad.stageAndLoad(df, s"$base/staging", s"$base/final",
+      schema, keys, partitionCols, sortCols = sortCols)
+    assert(out.isRight)
+    val st = out.toOption.get
+    val staging = spark.read.parquet(s"$base/staging")
+    assert(st.rows == staging.count())
+    def rendered(h: Option[Seq[Any]]) = h.map(_.map(String.valueOf))
+    assert(rendered(st.hwm) == rendered(CrossValidator.maxProbe(staging, keys)))
+    assert(spark.read.parquet(s"$base/final").count() == st.rows)
+    st
+  }
+
+  test("observed rows and HWM equal the staging recount: plain lineitem") {
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+    val st = observedMatchesRecount(li, Seq("l_orderkey", "l_linenumber"))
+    assert(st.rows == li.count() && st.hwm.isDefined)
+  }
+
+  test("observed rows and HWM equal the staging recount: partitioned and " +
+      "sorted load") {
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+      .withColumn("part_m", date_format(col("l_shipdate"), "yyyy-MM"))
+    val st = observedMatchesRecount(li, Seq("l_orderkey"),
+      partitionCols = Seq("part_m"), sortCols = Seq("l_orderkey"))
+    assert(st.rows == li.count())
+  }
+
+  test("observed HWM is the lexicographic max tuple, not per-column maxes") {
+    // per-column maxes would be ("b", 9); the largest real row is ("b", 5)
+    val df = Seq(("a", 9L), ("b", 5L), ("b", 2L)).toDF("k1", "k2")
+    val st = observedMatchesRecount(df, Seq("k1", "k2"))
+    assert(st.hwm.contains(Seq("b", 5L)))
+  }
+
+  test("observed HWM equals the staging recount on timestamp, NTZ and date " +
+      "keys") {
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+      .select(col("l_orderkey"), col("l_shipdate"),
+        to_date(col("l_shipdate")).as("ship_day"),
+        col("l_shipdate").cast("timestamp_ntz").as("ship_ntz"))
+    observedMatchesRecount(li, Seq("l_shipdate"))
+    observedMatchesRecount(li, Seq("ship_day", "ship_ntz", "l_orderkey"))
+  }
+
+  test("an empty slice observes zero rows and no HWM") {
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+      .filter(col("l_orderkey") < 0)
+    val st = observedMatchesRecount(li, Seq("l_orderkey"))
+    assert(st.rows == 0L && st.hwm.isEmpty)
+  }
+
+  test("a failed staged validation reports a capped sample with examples") {
+    val base = Files.createTempDirectory("graft_violations").toString
+    val df = (Seq("1", "2") ++ (1 to 12).map(i => s"bad$i")).toDF("v")
+    val schema = Seq(CanonicalColumn("v", CanonicalType.Integer4,
+      safeMapping = false))
+    val out = StagedLoad.stageAndLoad(df, s"$base/staging", s"$base/final",
+      schema, hwmKeys = Nil)
+    assert(out.isLeft)
+    val msg = StagedLoad.violationMessage(out.swap.toOption.get)
+    assert(msg.contains("10 offending rows in a sample capped at 10"), msg)
+    assert("\\[bad".r.findAllIn(msg).length == 3, msg)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/final")))
   }
 
   test("transforms: suppress drops, null nulls, translate/regexp rewrite") {
