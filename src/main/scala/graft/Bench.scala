@@ -1,5 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.BenchStats.Rep
+
+/** The engine's one timing harness. `runMain graft.Bench` times every
+  * `SparkEntry.queries` entry and writes `bench/last_run.json` (plus the
+  * history and ring beside it); `runMain graft.Bench <prefix>...` times
+  * only the queries whose names start with a prefix, prints one
+  * `{"metric":"query",…}` line each, and writes nothing under `bench/`.
+  * Each query records its median time, that rep's build/plan/exec split
+  * and its Spark jobs, stages and tasks. */
 object Bench {
   /** 1/5/15-minute load averages, or "unavailable" off-Linux. Stamped into
     * the artifact at start and end so a reader can tell a contended run
@@ -18,20 +32,12 @@ object Bench {
     val wall0 = System.nanoTime()
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // AFTER setLogLevel (which resets all logger levels): the r17 driver
-    // bench tail was thousands of per-release checkpoint WARN lines,
-    // burying the totals line the log capture needed.
-    tools.LogQuiet.quietNoise()
+    val allQueries = SparkEntry.queries
+    val filtered = args.nonEmpty
+    val suite = tools.BenchStats.selectQueries(allQueries.keys.toSeq,
+      args.toSeq).map(n => n -> allQueries(n))
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession()
     // Warm the session (codegen/JIT, FS metadata) so the first timed query
     // doesn't absorb startup cost.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -45,21 +51,45 @@ object Bench {
     // immediately and aborts under Spark 4's default ANSI mode.
     import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
-    // (seconds, error): a failed query's elapsed is time-to-failure.
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      try {
+    // One listener for the whole run. Its counters are read after a bus
+    // drain, outside the timed span, so a rep's late events are counted.
+    val jobs, stages, tasks = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(e.stageInfo.numTasks.toLong)
+      }
+    })
+    def counters(): Seq[Long] = {
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      Seq(jobs.get, stages.get, tasks.get)
+    }
+
+    // a failed query's elapsed is time-to-failure
+    def runOne(fn: (SparkSession, String) => DataFrame): Rep = {
+      val c0 = counters()
+      val marks = scala.collection.mutable.ArrayBuffer(System.nanoTime())
+      val err = try {
         val df = fn(spark, sfDir)
-        df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-          .agg(expr("bit_xor(h)")).collect()
-        ((System.nanoTime() - t0) / 1e9, None)
+        marks += System.nanoTime()
+        val act = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+          .agg(expr("bit_xor(h)"))
+        act.queryExecution.executedPlan // plan now, apart from execution
+        marks += System.nanoTime()
+        act.collect()
+        None
       } catch {
         case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          ((System.nanoTime() - t0) / 1e9,
-            Some(msg.linesIterator.take(1).mkString.take(200)))
+          Some(msg.linesIterator.take(1).mkString.take(200))
       }
+      marks += System.nanoTime()
+      val Seq(build, plan, exec) = marks.toSeq.sliding(2)
+        .map(w => (w(1) - w(0)) / 1e9).toSeq.padTo(3, 0.0)
+      val Seq(j, s, k) = counters().zip(c0).map { case (a, b) => a - b }
+      Rep(build, plan, exec, j, s, k, err)
     }
 
     // SPARK_GRAFT_BENCH_REPS=n: per-query MEDIAN of n runs. Default 3 —
@@ -71,8 +101,7 @@ object Bench {
     // trailing summary line so residual noise is visible, not inferred.
     val reps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    def runMedian(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : ((Double, Option[String]), Double) =
+    def runMedian(fn: (SparkSession, String) => DataFrame): (Rep, Double) =
       if (reps == 1) (runOne(fn), 1.0)
       else {
         // One UNTIMED warm-up execution first: the reps run back-to-back,
@@ -83,9 +112,10 @@ object Bench {
         // needs no special case — the timed reps fail the same way.
         runOne(fn)
         val runs = Seq.fill(reps)(runOne(fn))
-        val ok = runs.collect { case (t, None) => t }
+        val ok = runs.filter(_.error.isEmpty)
         if (ok.isEmpty) (runs.head, 1.0)
-        else ((tools.BenchStats.median(ok), None), tools.BenchStats.spread(ok))
+        else (tools.BenchStats.medianRep(ok),
+          tools.BenchStats.spread(ok.map(_.sec)))
       }
 
     // COLD MODE (r17 verdict ask #3): every cross-query artifact
@@ -105,8 +135,7 @@ object Bench {
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     val coldReps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD_REPS", "1").toInt)
-    def runColdMedian(
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def runColdMedian(fn: (SparkSession, String) => DataFrame)
         : Option[Double] =
       if (!coldMode) None
       else {
@@ -114,12 +143,12 @@ object Bench {
           ArtifactCaches.clearAll(spark)
           runOne(fn)
         }
-        val ok = runs.collect { case (t, None) => t }
+        val ok = runs.collect { case r if r.error.isEmpty => r.sec }
         if (ok.isEmpty) None else Some(tools.BenchStats.median(ok))
       }
 
     val coldByName = scala.collection.mutable.Map.empty[String, Double]
-    val first0 = SparkEntry.queries.toSeq.map { case (name, fn) =>
+    val first0 = suite.map { case (name, fn) =>
       val (r, spread) = runMedian(fn)
       runColdMedian(fn).foreach(c => coldByName(name) = c)
       (name, fn, r, spread)
@@ -193,8 +222,7 @@ object Bench {
     var escSpent = 0.0
     val escSkipped = scala.collection.mutable.Set.empty[String]
     def escalationRuns(name: String, estSec: Double,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Seq[(Double, Option[String])]] =
+        fn: (SparkSession, String) => DataFrame): Option[Seq[Rep]] =
       if (escSpent + 5 * estSec > escBudget) {
         escSkipped += name
         unhealedSpread += name // first-pass spread must not raise the ring envelope
@@ -210,28 +238,27 @@ object Bench {
     // whose healed median still trips the cross-run check runs 5 + 5),
     // and the expected-time term must count what actually executed
     val first = first0.map {
-      case (name, fn, (t, None), s)
-          if tools.BenchStats.needsRemeasure(reps, s, spreadThresh,
-            spreadHist(name)) =>
-        escalationRuns(name, t, fn) match {
+      case (name, fn, r, s)
+          if r.error.isEmpty && tools.BenchStats.needsRemeasure(reps, s,
+            spreadThresh, spreadHist(name)) =>
+        escalationRuns(name, r.sec, fn) match {
           case None => // budget exhausted: first-pass number, flagged
-            (name, fn, (t, Option.empty[String]), s, false, 0)
+            (name, fn, r, s, false, 0)
           case Some(runs) =>
-            val ok = runs.collect { case (t2, None) => t2 }
+            val ok = runs.filter(_.error.isEmpty)
             if (ok.isEmpty) {
               // escalation itself failed: keep the first-pass number but
               // say so loudly — the artifact's signature for this case is
               // a spread above the threshold WITHOUT a remeasured flag
               System.err.println(s"bench: re-measure of $name failed in " +
-                s"all 5 runs (${runs.head._2.getOrElse("?")}); recording " +
+                s"all 5 runs (${runs.head.error.getOrElse("?")}); recording " +
                 "the first-pass median with its " +
                 "%.1f".formatLocal(java.util.Locale.ROOT, s) +
                 "x spread unhealed")
               unhealedSpread += name
-              (name, fn, (t, Option.empty[String]), s, false, 5)
-            } else (name, fn,
-              (tools.BenchStats.median(ok), Option.empty[String]),
-              tools.BenchStats.spread(ok), true, 5)
+              (name, fn, r, s, false, 5)
+            } else (name, fn, tools.BenchStats.medianRep(ok),
+              tools.BenchStats.spread(ok.map(_.sec)), true, 5)
         }
       case (name, fn, r, s) => (name, fn, r, s, false, 0)
     }
@@ -294,27 +321,27 @@ object Bench {
     val suspectFactor = tools.BenchStats.suspectFactor(load1AtStart,
       Runtime.getRuntime.availableProcessors)
     val second = first.map {
-      case (name, fn, (t, None), s, rm, extra)
-          if {
+      case (name, fn, r, s, rm, extra)
+          if r.error.isEmpty && {
             val (b, bc, _) = baseline(name)
-            tools.BenchStats.crossRunSuspect(t, b, bc, suspectFactor)
+            tools.BenchStats.crossRunSuspect(r.sec, b, bc, suspectFactor)
           } =>
-        escalationRuns(name, t, fn) match {
+        escalationRuns(name, r.sec, fn) match {
           case None => // budget exhausted: record as suspect, unhealed
             val (b, _, src) = baseline(name)
-            (name, fn, (t, Option.empty[String]), s, rm,
-              b.map(v => (v, src)), extra)
+            (name, fn, r, s, rm, b.map(v => (v, src)), extra)
           case Some(runs) =>
-            val ok = runs.collect { case (t2, None) => t2 }
+            val ok = runs.filter(_.error.isEmpty)
             if (ok.isEmpty) unhealedSpread += name
             else unhealedSpread -= name // a fresh clean sample replaces it
-            val healed = if (ok.isEmpty) t else tools.BenchStats.median(ok)
+            val healed = if (ok.isEmpty) r else tools.BenchStats.medianRep(ok)
             val (b, bc, src) = baseline(name)
-            val stillSuspect = tools.BenchStats.crossRunSuspect(healed,
+            val stillSuspect = tools.BenchStats.crossRunSuspect(healed.sec,
               b, bc, suspectFactor)
-            (name, fn, (healed, Option.empty[String]),
-              if (ok.isEmpty) s else tools.BenchStats.spread(ok), true,
-              if (stillSuspect) b.map(v => (v, src)) else None, extra + 5)
+            (name, fn, healed,
+              if (ok.isEmpty) s else tools.BenchStats.spread(ok.map(_.sec)),
+              true, if (stillSuspect) b.map(v => (v, src)) else None,
+              extra + 5)
         }
       case (name, fn, r, s, rm, extra) =>
         (name, fn, r, s, rm, None, extra)
@@ -332,19 +359,22 @@ object Bench {
     // re-run once and the faster time kept (min — the stall is the outlier,
     // not the work). With reps > 1 the per-query median already absorbed
     // outliers, so the extra re-run is skipped.
-    val okTimes =
-      second.collect { case (_, _, (t, None), _, _, _, _) => t }.sorted
+    val okTimes = second.collect {
+      case (_, _, r, _, _, _, _) if r.error.isEmpty => r.sec
+    }.sorted
     val median = if (okTimes.isEmpty) 0.0 else okTimes(okTimes.length / 2)
-    val results = second.map {
-      case (name, fn, (t, None), _, _, _, _)
-          if reps == 1 && median > 0 && t > 3 * median =>
-        val (t2, err2) = runOne(fn)
-        if (err2.isEmpty) name -> (math.min(t, t2), None)
-        else name -> (t, None) // flaky rerun: keep the first, valid result
+    val results: Seq[(String, Rep)] = second.map {
+      case (name, fn, r, _, _, _, _)
+          if r.error.isEmpty && reps == 1 && median > 0 &&
+            r.sec > 3 * median =>
+        val r2 = runOne(fn)
+        // a flaky rerun keeps the first, valid result
+        name -> (if (r2.error.isEmpty && r2.sec < r.sec) r2 else r)
       case (name, _, r, _, _, _, _) => name -> r
     }
     val spreads = second.collect {
-      case (name, _, (_, None), s, _, _, _) if reps > 1 => name -> s
+      case (name, _, r, s, _, _, _) if r.error.isEmpty && reps > 1 =>
+        name -> s
     }
 
     // control characters must be escaped too: error strings carry raw
@@ -360,23 +390,51 @@ object Bench {
     // tail capture retains the whole line, "metric":"total" included.
     // Locale.ROOT: a comma-decimal default locale would corrupt the JSON.
     def ms(v: Double): String = tools.BenchStats.ms3(v)
-    val qEntries = results.map { case (k, (v, _)) => jstr(k) + ":" + ms(v) }
+    val qEntries = results.map { case (k, r) => jstr(k) + ":" + ms(r.sec) }
     val qs = qEntries.mkString("{", ",", "}")
-    val errs = results.collect { case (k, (_, Some(e))) => k -> e }
+    val errs = results.flatMap { case (k, r) => r.error.map(k -> _) }
     val es = errs.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, (v, None)) => v }.sum
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"errors":$es,"failed":${errs.size},"sf":"$sfDir"}""")
-    // the same per-query map again as bounded chunks, so a log tail that
-    // cut the line above still carries every query's median
-    tools.BenchStats.queryParts(qEntries, sfDir).foreach(println)
+    val okResults = results.filter(_._2.error.isEmpty)
+    val total = okResults.map(_._2.sec).sum
+    // one query's fields, shared by the artifact entry and the filtered
+    // run's stdout line; median_sec stays first (BenchStats.repFields)
+    val spreadByName = spreads.toMap
+    def fields(k: String, r: Rep): String = {
+      val sp = spreadByName.get(k)
+        .map(s => s""","spread":${ms(s)}""").getOrElse("")
+      val rm = if (remeasured(k)) ""","remeasured":true""" else ""
+      // the baseline SOURCE is labeled: "prev" keeps the r13-era
+      // prev_median_sec field (it IS the previous run's median);
+      // a ring baseline is a median-of-runs and gets its own name so
+      // adjudication against last_run_prev.json never mis-reads it
+      val su = suspect.get(k).map { case (p, src) =>
+        val field = if (src == "ring") "baseline_sec"
+                    else "prev_median_sec"
+        s""","suspect":true,"$field":${ms(p)}""" +
+          s""","baseline_src":${jstr(src)}"""
+      }.getOrElse("")
+      val er = r.error.map(e => s""","error":${jstr(e)}""").getOrElse("")
+      val es = if (escSkipped(k)) ""","escalation_skipped":true""" else ""
+      val cd = coldByName.get(k)
+        .map(c => s""","cold_median_sec":${ms(c)}""").getOrElse("")
+      tools.BenchStats.repFields(r) + sp + rm + su + es + cd + er
+    }
+    if (filtered) results.foreach { case (k, r) =>
+      println(s"""{"metric":"query","name":${jstr(k)},${fields(k, r)},"sf":${jstr(sfDir)}}""")
+    } else {
+      println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"errors":$es,"failed":${errs.size},"sf":"$sfDir"}""")
+      // the same per-query map again as bounded chunks, so a log tail that
+      // cut the line above still carries every query's median
+      tools.BenchStats.queryParts(qEntries, sfDir).foreach(println)
+    }
     // The per-query line grows with every query added; log-tail capture has
     // truncated its head two rounds running, losing the totals. A short
     // trailing summary line is always the LAST thing printed, so any tail
     // window retains it regardless of how long the detail line gets.
     // Top-5 slowest BY NAME: the stored tail has twice truncated the long
     // per-query line, leaving the slowest query anonymous in the verdict.
-    val top5 = results.collect { case (k, (v, None)) => k -> v }
+    val top5 = okResults.map { case (k, r) => k -> r.sec }
       .sortBy(-_._2).take(5)
       .map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
     // Noisiest 5 by run-to-run spread (max/min across the reps): a query
@@ -394,9 +452,9 @@ object Bench {
     // and the cross-run path ran 10) — without this term a run with
     // several escalations self-labels contended on an idle machine and
     // the false label discredits real regressions
-    val resultByName = results.toMap
+    val okByName = okResults.toMap
     val extraRunSec = extraRunsByName.toSeq.flatMap { case (n, e) =>
-      resultByName.get(n).collect { case (t, None) => e.toDouble * t }
+      okByName.get(n).map(r => e.toDouble * r.sec)
     }.sum +
       // cold-mode reps execute outside the reps+warmup accounting; a
       // cold run must not self-label contended on an idle machine
@@ -413,8 +471,9 @@ object Bench {
     // tools/spark-listener/GOETaskListener.scala:24-43): one line per
     // query so git diffs are per-query, previous artifact rotated to
     // *_prev.json so a round can always diff itself against the last
-    // run without depending on any log capture.
-    try outPathOpt.foreach { outPath =>
+    // run without depending on any log capture. A filtered run writes
+    // none of it: the artifact, history and ring describe full runs only.
+    try outPathOpt.filter(_ => !filtered).foreach { outPath =>
       Option(outPath.getParent)
         .foreach(java.nio.file.Files.createDirectories(_))
       if (java.nio.file.Files.exists(outPath)) {
@@ -424,26 +483,8 @@ object Bench {
         java.nio.file.Files.move(outPath, prev,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-      val spreadByName = spreads.toMap
-      val qLines = results.sortBy(_._1).map { case (k, (v, err)) =>
-        val sp = spreadByName.get(k)
-          .map(s => s""","spread":${ms(s)}""").getOrElse("")
-        val rm = if (remeasured(k)) ""","remeasured":true""" else ""
-        // the baseline SOURCE is labeled: "prev" keeps the r13-era
-        // prev_median_sec field (it IS the previous run's median);
-        // a ring baseline is a median-of-runs and gets its own name so
-        // adjudication against last_run_prev.json never mis-reads it
-        val su = suspect.get(k).map { case (p, src) =>
-          val field = if (src == "ring") "baseline_sec"
-                      else "prev_median_sec"
-          s""","suspect":true,"$field":${ms(p)}""" +
-            s""","baseline_src":${jstr(src)}"""
-        }.getOrElse("")
-        val er = err.map(e => s""","error":${jstr(e)}""").getOrElse("")
-        val es = if (escSkipped(k)) ""","escalation_skipped":true""" else ""
-        val cd = coldByName.get(k)
-          .map(c => s""","cold_median_sec":${ms(c)}""").getOrElse("")
-        s"""    ${jstr(k)}: {"median_sec":${ms(v)}$sp$rm$su$es$cd$er}"""
+      val qLines = results.sortBy(_._1).map { case (k, r) =>
+        s"""    ${jstr(k)}: {${fields(k, r)}}"""
       }
       // Machine-load fingerprint: loadavg at start/end plus total wall vs
       // the expected executed time ((reps+warmup) x summed medians + each
@@ -455,7 +496,7 @@ object Bench {
       val body =
         s"""{
            |  "sf": ${jstr(sfDir)},
-           |  "cpus": ${jstr(cpus)},
+           |  "cpus": ${jstr(cpus.toString)},
            |  "reps": $reps,
            |  "warmup": $warm,
            |  "spread_rerun_threshold": ${ms(spreadThresh)},
@@ -506,7 +547,7 @@ object Bench {
       // spreads — contaminated numbers must not raise the envelope)
       val ringNew = tools.BenchStats.ringLine(System.currentTimeMillis(),
         sfDir, contended,
-        results.collect { case (k, (v, None)) => k -> v },
+        okResults.map { case (k, r) => k -> r.sec },
         spreads.filterNot { case (k, _) => unhealedSpread.contains(k) })
       val ringOld =
         if (java.nio.file.Files.exists(ringPath))

@@ -87,20 +87,6 @@ object Cli {
       unicodeStrings = csv("unicode-string-columns"))
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Cli <offload|agg-validate|status-report> ...")
     val cmd = args.head
@@ -109,7 +95,7 @@ object Cli {
     // reuse an active session when embedded (tests/notebooks); only stop a
     // session this main itself created
     val reused = SparkSession.getActiveSession
-    val spark = reused.getOrElse(session())
+    val spark = reused.getOrElse(GraftSession())
     try {
       cmd match {
         case "offload" =>
@@ -878,11 +864,10 @@ object Cli {
           val report = graft.verify.Expectations.evaluateGraded(spark,
             name => graft.Tables.load(spark, opts("dir"), name), graded)
           val rows = report.collect()
-          // rule ids embed user-supplied table/column names — escape
-          // them (the Listener's q() discipline) so a quoted name can't
-          // break the JSON lines
+          // rule ids embed user-supplied table/column/rule names — escape
+          // quotes and control characters so no name breaks a JSON line
           def jstr(s: String): String =
-            "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+            "\"" + graft.tools.BenchStats.jsonEscape(s) + "\""
           rows.foreach { r =>
             println(s"""{"rule": ${jstr(r.getAs[String]("rule_id"))}, """ +
               s""""rows": ${r.getAs[Long]("n_rows")}, """ +

@@ -303,8 +303,8 @@ object PipelineQueries {
     },
 
     // The default-named simhash dedup drives the scale-safe pigeonhole
-    // plan (4×16-bit chunk equi-joins, 65,536 keys/chunk — per-chunk
-    // fan-out measured in graft.tools.DedupProfile); the legacy 256-key
+    // plan (4×16-bit chunk equi-joins, 65,536 keys/chunk — measured pair
+    // bound 2-8× below the byte block's); the legacy 256-key
     // single-byte block survives only as Dedup.simhashPairsSmallCorpus.
     // maxDist=2 here (q53 exercises the same path at the recall bound 3).
     "q29_dedup_simhash" -> { (s, dir) =>

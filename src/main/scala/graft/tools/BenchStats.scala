@@ -24,6 +24,45 @@ object BenchStats {
     s(s.length / 2)
   }
 
+  /** One timed execution of a query, split at Bench's three timestamps:
+    * after `fn(spark, sf)` builds the DataFrame, after the hashing action's
+    * `executedPlan` is forced, and after `collect`. A failed rep charges
+    * its time to the phase it failed in. `jobs`/`stages`/`tasks` are the
+    * jobs started, stages completed and those stages' tasks during the
+    * rep. */
+  final case class Rep(buildSec: Double, planSec: Double, execSec: Double,
+      jobs: Long, stages: Long, tasks: Long, error: Option[String] = None) {
+    def sec: Double = buildSec + planSec + execSec
+  }
+
+  /** The rep whose time is [[median]] of the sample, so the phase split
+    * and counters reported beside a median add up to it. Callers
+    * guarantee non-empty input. */
+  def medianRep(reps: Seq[Rep]): Rep = {
+    val s = reps.sortBy(_.sec)
+    s(s.length / 2)
+  }
+
+  /** The queries a `graft.Bench <prefix>...` run times: every name
+    * starting with one of the prefixes, each once, sorted. No prefix
+    * selects the whole suite in suite order; a prefix that matches
+    * nothing is an error, so a typo cannot pass as a fast run. */
+  def selectQueries(names: Seq[String], prefixes: Seq[String]): Seq[String] = {
+    val unmatched = prefixes.filterNot(p => names.exists(_.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"no query name starts with: ${unmatched.mkString(", ")}")
+    if (prefixes.isEmpty) names.distinct
+    else names.filter(n => prefixes.exists(n.startsWith)).distinct.sorted
+  }
+
+  /** A per-query entry's leading fields: `median_sec` FIRST (the
+    * `"name": {"median_sec":X` shape ScaleProbe and [[parseArtifact]]
+    * read), then the median rep's phase split and counters. */
+  def repFields(r: Rep): String =
+    s""""median_sec":${ms3(r.sec)},"build_sec":${ms3(r.buildSec)},""" +
+      s""""plan_sec":${ms3(r.planSec)},"exec_sec":${ms3(r.execSec)},""" +
+      s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks}"""
+
   /** max/min of the sample — 1.0 means perfectly stable reps. Guarded
     * against a zero-time fastest rep (sub-nanosecond timer quantisation)
     * the same way Bench always has. */

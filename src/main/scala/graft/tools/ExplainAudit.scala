@@ -317,13 +317,7 @@ object ExplainAudit {
                          "q67_dedup_canonical", "q68_interval_join",
                          "q69_zorder", "q70_token_vocab",
                          "q71_quantile_stats")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     names.foreach { n =>
       println(s"\n===== $n =====")
       val df = graft.SparkEntry.queries(n)(spark, dir)

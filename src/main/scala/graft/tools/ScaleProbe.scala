@@ -119,11 +119,10 @@ object ScaleProbe {
 
   /** Slowest-N query names from the last bench artifact (regex-parsed: the
     * artifact is our own fixed writer format, a JSON lib adds nothing). */
-  private def slowestFromBench(path: String, n: Int): Seq[String] = {
-    val txt = new String(Files.readAllBytes(Paths.get(path)),
-      StandardCharsets.UTF_8)
+  private[tools] def slowestFromBench(artifact: String, n: Int)
+      : Seq[String] = {
     val re = """"(q[0-9][^"]*)": \{"median_sec":([0-9.]+)""".r
-    re.findAllMatchIn(txt).map(m => (m.group(1), m.group(2).toDouble))
+    re.findAllMatchIn(artifact).map(m => (m.group(1), m.group(2).toDouble))
       .toSeq.sortBy(-_._2).take(n).map(_._1)
   }
 
@@ -134,19 +133,11 @@ object ScaleProbe {
       "expected two ascending factors, e.g. 8,32")
     val extra = args.drop(2).toSeq
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogQuiet.quietNoise()
+    val spark = graft.GraftSession()
 
-    val queries = (slowestFromBench("bench/last_run.json", nSlow) ++
+    val lastRun = new String(Files.readAllBytes(
+      Paths.get("bench/last_run.json")), StandardCharsets.UTF_8)
+    val queries = (slowestFromBench(lastRun, nSlow) ++
       ExplainAudit.QuadraticAllowlist.toSeq.sorted ++ extra)
       .distinct.filter(graft.SparkEntry.queries.contains)
     println(s"probing ${queries.size} queries at x${factors.mkString(", x")}")

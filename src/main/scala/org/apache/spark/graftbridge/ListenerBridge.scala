@@ -11,7 +11,8 @@ import org.apache.spark.SparkContext
   * is in principle racy); `waitUntilEmpty` is the engine's own exact
   * primitive for the same thing. The wait is bounded: one wedged
   * listener on the bus must fail the caller with a diagnosis, not hang
-  * every offload. */
+  * every offload. Bench drains it the same way before it reads its job,
+  * stage and task counters. */
 object ListenerBridge {
   /** Generous: a healthy bus drains in milliseconds. */
   private val DrainTimeoutMillis: Long = 120000L
@@ -23,8 +24,8 @@ object ListenerBridge {
       case e: TimeoutException =>
         val t = new TimeoutException(
           s"Spark listener bus did not drain within $timeoutMillis ms: " +
-            "a SparkListener is wedged or too slow, so the offload's " +
-            "records-written accounting cannot settle")
+            "a SparkListener is wedged or too slow, so listener-based " +
+            "counts (offload rows written, bench job counters) cannot settle")
         t.initCause(e)
         throw t
     }

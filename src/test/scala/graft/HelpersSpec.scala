@@ -489,6 +489,25 @@ class CliSpec extends SparkSpec {
         l.contains(""""passed": false""")))
   }
 
+  test("expect output stays one valid JSON line when a rule name " +
+      "carries a tab") {
+    val f = java.nio.file.Files.createTempDirectory("expcli")
+      .resolve("rules.jsonl")
+    java.nio.file.Files.write(f, java.util.Arrays.asList(
+      """{"type":"expression","table":"orders","name":"key\tpositive","predicate":"o_orderkey > 0"}"""))
+    val cap = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(cap, true, "UTF-8")) {
+      Cli.main(Array("expect", "--rules", f.toString,
+        "--dir", sf("sf0.001")))
+    }
+    val lines = cap.toString("UTF-8").linesIterator.toSeq
+    val line = lines.find(_.contains("expression:orders.key"))
+    assert(line.nonEmpty, lines.mkString("\n"))
+    assert(!line.get.exists(_ < ' '), line.get)
+    assert(line.get.contains(
+      "\"rule\": \"expression:orders.key\\u0009positive\""))
+  }
+
   test("rank-merge, rank-refresh and rank-compact maintain the " +
       "PageRank store") {
     val store = java.nio.file.Files.createTempDirectory("rankcli").toString

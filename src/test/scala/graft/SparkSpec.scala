@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. One session per JVM (sbt forks one
-  * test JVM), mirrored config with Verify/Bench. */
+  * test JVM), built by the same factory as Verify/Bench. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
@@ -13,25 +13,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[16] (was [8]): the r17 driver's test run hit its
-      // wall-clock budget; the Spark-bound suites scale with cores on
-      // the 32-core runner, and nothing in the suite keys on the
-      // thread count (partition-count asserts are all explicit JDBC
-      // split / repartition values)
-      .master("local[16]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // after setLogLevel (which resets logger levels): the WindowExec /
-    // checkpoint-release WARN storms added thousands of lines to the
-    // r17 driver's truncated test log
-    graft.tools.LogQuiet.quietNoise()
-    s
-  }
+  // 16 cores, not the host's count: the Spark-bound suites scale with
+  // cores (a full test run hit its wall-clock budget at 8), and
+  // nothing in the suite keys on the thread count (partition-count
+  // asserts are all explicit JDBC split / repartition values)
+  lazy val session: SparkSession = GraftSession("graft-test", cpus = 16)
 }

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * API. Own session (extensions bind at session build time). */
 class GraftExtensionsSpec extends AnyFunSuite {
 
+  // Own builder, not GraftSession: `withExtensions` binds only at build.
   // getOrCreate would silently reuse another suite's session and skip the
   // extensions — clear the active/default slots, build an isolated session
   // (sharing the JVM's SparkContext), then restore the previous ones.

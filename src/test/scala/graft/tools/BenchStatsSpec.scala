@@ -276,4 +276,58 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(parsed.flatMap(_._3.split(",")) == entries)
     assert(BenchStats.queryParts(Nil, "x").isEmpty)
   }
+
+  test("selectQueries matches by prefix, once each, and rejects a prefix " +
+      "that matches nothing") {
+    val suite = Seq("q27_dedup_jaccard", "q01_pricing", "q270_demo",
+      "q303_truss_support", "q28_lsh")
+    // no prefix: the whole suite, suite order kept
+    assert(BenchStats.selectQueries(suite, Nil) == suite)
+    // prefix match, sorted; q27 also takes q270 (TimeQuery's rule) and
+    // the overlapping q2 prefix adds no duplicate
+    assert(BenchStats.selectQueries(suite, Seq("q303", "q27", "q2")) ==
+      Seq("q270_demo", "q27_dedup_jaccard", "q28_lsh",
+        "q303_truss_support"))
+    assert(BenchStats.selectQueries(suite, Seq("q303", "q303_truss")) ==
+      Seq("q303_truss_support"))
+    val e = intercept[IllegalArgumentException](
+      BenchStats.selectQueries(suite, Seq("q27", "q999", "zz")))
+    assert(e.getMessage.contains("q999, zz"))
+  }
+
+  test("medianRep is the rep at the upper-median time, so its phases add " +
+      "up to the recorded median") {
+    def rep(b: Double, p: Double, x: Double, jobs: Long) =
+      BenchStats.Rep(b, p, x, jobs, jobs, 2 * jobs)
+    val reps = Seq(rep(0.1, 0.1, 0.8, 3), rep(0.2, 0.1, 0.2, 4),
+      rep(0.1, 0.2, 0.3, 5))
+    val m = BenchStats.medianRep(reps)
+    assert(m == reps(2))
+    assert(m.sec == BenchStats.median(reps.map(_.sec)))
+  }
+
+  test("a per-query entry with the phase and counter fields still parses " +
+      "as a Bench artifact, median_sec first") {
+    val r = BenchStats.Rep(0.25, 0.05, 0.7, jobs = 6, stages = 7,
+      tasks = 40)
+    val fields = BenchStats.repFields(r)
+    assert(fields ==
+      """"median_sec":1.000,"build_sec":0.250,"plan_sec":0.050,""" +
+        """"exec_sec":0.700,"jobs":6,"stages":7,"tasks":40""")
+    val art =
+      s"""{
+        |  "sf": "/d/sf0.1",
+        |  "contended": false,
+        |  "queries": {
+        |    "q27_dedup_jaccard": {$fields,"spread":1.100},
+        |    "q303_truss_support": {${BenchStats.repFields(r.copy(execSec = 2.7))}}
+        |  }
+        |}
+        |""".stripMargin
+    val (_, sf, m) = BenchStats.parseArtifact(art)
+    assert(sf == "/d/sf0.1")
+    assert(m == Map("q27_dedup_jaccard" -> 1.0, "q303_truss_support" -> 3.0))
+    assert(ScaleProbe.slowestFromBench(art, 2) ==
+      Seq("q303_truss_support", "q27_dedup_jaccard"))
+  }
 }
