@@ -36,12 +36,13 @@ object Bench {
     val filtered = args.nonEmpty
     val suite = tools.BenchStats.selectQueries(allQueries.keys.toSeq,
       args.toSeq).map(n => n -> allQueries(n))
-    val cpus = GraftSession.defaultCpus
     val spark = GraftSession()
     // Warm the session (codegen/JIT, FS metadata) so the first timed query
     // doesn't absorb startup cost.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
+    // the cores the run had: local[n]'s n, or a deployment master's
+    val cpus = spark.sparkContext.defaultParallelism
     // Consume every column's VALUES, not just row count: under `count()`
     // Catalyst prunes unused columns, so pure-projection queries would
     // measure scan+count instead of their expression work. Hashing the full
@@ -53,7 +54,10 @@ object Bench {
 
     // One listener for the whole run. Its counters are read after a bus
     // drain, outside the timed span, so a rep's late events are counted.
+    // A drain that times out makes them -1 for the rest of the run: a
+    // wedged listener costs the counts, not the run or 120 s per rep.
     val jobs, stages, tasks = new AtomicLong
+    var countable = true
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
@@ -63,8 +67,15 @@ object Bench {
       }
     })
     def counters(): Seq[Long] = {
-      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      Seq(jobs.get, stages.get, tasks.get)
+      if (countable)
+        try ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+        catch {
+          case e: java.util.concurrent.TimeoutException =>
+            System.err.println(s"bench: ${e.getMessage}; jobs, stages " +
+              "and tasks are -1 from here on")
+            countable = false
+        }
+      if (countable) Seq(jobs.get, stages.get, tasks.get) else Seq(-1L, -1L, -1L)
     }
 
     // a failed query's elapsed is time-to-failure
@@ -88,7 +99,9 @@ object Bench {
       marks += System.nanoTime()
       val Seq(build, plan, exec) = marks.toSeq.sliding(2)
         .map(w => (w(1) - w(0)) / 1e9).toSeq.padTo(3, 0.0)
-      val Seq(j, s, k) = counters().zip(c0).map { case (a, b) => a - b }
+      val Seq(j, s, k) = counters().zip(c0).map { case (a, b) =>
+        if (a < 0 || b < 0) -1L else a - b
+      }
       Rep(build, plan, exec, j, s, k, err)
     }
 

@@ -6,21 +6,25 @@ import org.apache.spark.sql.SparkSession
   * ScaleProbe, ExplainAudit) and the shared test session build through it,
   * so their settings cannot drift apart. `local[cpus]` with as many
   * shuffle partitions, cpus from `SPARK_GRAFT_CPUS` (default: the host's
-  * processors); `SPARK_GRAFT_MASTER` replaces the local master when set.
-  * UTC session time, nanosecond parquet timestamps read as longs (see
-  * `Tables.normalizeTs`), AQE on, UI off. Two builders stay outside it:
-  * `GraftExtensionsSpec`, whose session must be built `withExtensions`,
-  * and `perfbench`, which keeps its own fixed session so that it measures
-  * every engine checkout the same way. */
+  * processors); a deployment `master` (default `SPARK_GRAFT_MASTER`)
+  * replaces the local master. UTC session time, nanosecond parquet
+  * timestamps read as longs (see `Tables.normalizeTs`), AQE on, UI off.
+  * Under a deployment master the UI stays off too and the shuffle
+  * partitions still follow cpus, i.e. the driver host's processors unless
+  * `SPARK_GRAFT_CPUS` is set to the cluster's core count. Two builders
+  * stay outside it: `GraftExtensionsSpec`, whose session must be built
+  * `withExtensions`, and `perfbench`, which keeps its own fixed session so
+  * that it measures every engine checkout the same way. */
 object GraftSession {
   def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def apply(appName: String = "graft", cpus: Int = defaultCpus)
+  def apply(cpus: Int = defaultCpus,
+      master: Option[String] = sys.env.get("SPARK_GRAFT_MASTER"))
       : SparkSession = {
     val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName(appName)
+      .master(master.getOrElse(s"local[$cpus]"))
+      .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -29,7 +29,7 @@ object BenchStats {
     * `executedPlan` is forced, and after `collect`. A failed rep charges
     * its time to the phase it failed in. `jobs`/`stages`/`tasks` are the
     * jobs started, stages completed and those stages' tasks during the
-    * rep. */
+    * rep, or -1 when the listener bus did not drain. */
   final case class Rep(buildSec: Double, planSec: Double, execSec: Double,
       jobs: Long, stages: Long, tasks: Long, error: Option[String] = None) {
     def sec: Double = buildSec + planSec + execSec

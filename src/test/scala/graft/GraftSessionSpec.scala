@@ -5,11 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.funsuite.AnyFunSuite
+
 /** [[GraftSession]] is the engine's only SparkSession builder: a second
   * hand-copied builder in `src/main` is how the per-site settings drifted
   * apart before (core counts 4/8/32, AQE and log quieting on in some mains
   * and not others). Comments may still show a builder. */
-class GraftSessionSpec extends SparkSpec {
+class GraftSessionSpec extends AnyFunSuite {
 
   private def code(p: Path): String =
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
@@ -31,13 +33,5 @@ class GraftSessionSpec extends SparkSpec {
     assert(files.exists(p =>
       p.getFileName.toString == "GraftSession.scala" &&
         code(p).contains("SparkSession.builder")))
-  }
-
-  test("the factory's session carries the pinned settings") {
-    val conf = spark.conf
-    assert(conf.get("spark.sql.shuffle.partitions") == "16")
-    assert(conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
-    assert(conf.get("spark.sql.adaptive.enabled") == "true")
   }
 }

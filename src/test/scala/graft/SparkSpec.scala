@@ -16,6 +16,7 @@ object SparkSpec {
   // 16 cores, not the host's count: the Spark-bound suites scale with
   // cores (a full test run hit its wall-clock budget at 8), and
   // nothing in the suite keys on the thread count (partition-count
-  // asserts are all explicit JDBC split / repartition values)
-  lazy val session: SparkSession = GraftSession("graft-test", cpus = 16)
+  // asserts are all explicit JDBC split / repartition values). Always
+  // local: the suite ignores a SPARK_GRAFT_MASTER set for deployment.
+  lazy val session: SparkSession = GraftSession(cpus = 16, master = None)
 }
