@@ -390,23 +390,14 @@ object Bench {
         name -> s
     }
 
-    // control characters must be escaped too: error strings carry raw
-    // exception text (tabs are common in analysis exceptions) and an
-    // unescaped control char makes the persisted artifact invalid JSON
-    // exactly in the failed-query rounds it exists to adjudicate.
-    // ONE escaper/formatter definition (BenchStats) shared with the
-    // history and ring renderers — parseRing matches lines by
-    // re-rendering, so the copies must agree byte-for-byte.
-    def jstr(s: String): String =
-      "\"" + tools.BenchStats.jsonEscape(s) + "\""
     // Millisecond precision keeps the one-line JSON short enough that log
     // tail capture retains the whole line, "metric":"total" included.
     // Locale.ROOT: a comma-decimal default locale would corrupt the JSON.
     def ms(v: Double): String = tools.BenchStats.ms3(v)
-    val qEntries = results.map { case (k, r) => jstr(k) + ":" + ms(r.sec) }
+    val qEntries = results.map { case (k, r) => Json.quote(k) + ":" + ms(r.sec) }
     val qs = qEntries.mkString("{", ",", "}")
     val errs = results.flatMap { case (k, r) => r.error.map(k -> _) }
-    val es = errs.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val es = errs.map { case (k, v) => Json.quote(k) + ":" + Json.quote(v) }
       .mkString("{", ",", "}")
     val okResults = results.filter(_._2.error.isEmpty)
     val total = okResults.map(_._2.sec).sum
@@ -425,18 +416,18 @@ object Bench {
         val field = if (src == "ring") "baseline_sec"
                     else "prev_median_sec"
         s""","suspect":true,"$field":${ms(p)}""" +
-          s""","baseline_src":${jstr(src)}"""
+          s""","baseline_src":${Json.quote(src)}"""
       }.getOrElse("")
-      val er = r.error.map(e => s""","error":${jstr(e)}""").getOrElse("")
+      val er = r.error.map(e => s""","error":${Json.quote(e)}""").getOrElse("")
       val es = if (escSkipped(k)) ""","escalation_skipped":true""" else ""
       val cd = coldByName.get(k)
         .map(c => s""","cold_median_sec":${ms(c)}""").getOrElse("")
       tools.BenchStats.repFields(r) + sp + rm + su + es + cd + er
     }
     if (filtered) results.foreach { case (k, r) =>
-      println(s"""{"metric":"query","name":${jstr(k)},${fields(k, r)},"sf":${jstr(sfDir)}}""")
+      println(s"""{"metric":"query","name":${Json.quote(k)},${fields(k, r)},"sf":${Json.quote(sfDir)}}""")
     } else {
-      println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"errors":$es,"failed":${errs.size},"sf":"$sfDir"}""")
+      println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"errors":$es,"failed":${errs.size},"sf":${Json.quote(sfDir)}}""")
       // the same per-query map again as bounded chunks, so a log tail that
       // cut the line above still carries every query's median
       tools.BenchStats.queryParts(qEntries, sfDir).foreach(println)
@@ -449,11 +440,11 @@ object Bench {
     // per-query line, leaving the slowest query anonymous in the verdict.
     val top5 = okResults.map { case (k, r) => k -> r.sec }
       .sortBy(-_._2).take(5)
-      .map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.quote(k) + ":" + ms(v) }.mkString("{", ",", "}")
     // Noisiest 5 by run-to-run spread (max/min across the reps): a query
     // here with a big median jump is contention, not a plan change.
     val noisy5 = spreads.sortBy(-_._2).take(5)
-      .map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.quote(k) + ":" + ms(v) }.mkString("{", ",", "}")
     val warm = if (reps > 1) 1 else 0
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val loadEnd = loadavg()
@@ -475,7 +466,7 @@ object Bench {
     val contended = tools.BenchStats.looksContended(wallSec, total,
       reps + warm, extraRunSec, load1Start,
       Runtime.getRuntime.availableProcessors)
-    val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${errs.size},"n_queries":${results.size},"reps":$reps,"warmup":$warm,"remeasured":${remeasured.size},"suspect":${suspect.size},"esc_skipped":${escSkipped.size},"wall_sec":${ms(wallSec)},"loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadEnd)},"contended":$contended,"top5_slowest":$top5,"top5_spread":$noisy5,"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${errs.size},"n_queries":${results.size},"reps":$reps,"warmup":$warm,"remeasured":${remeasured.size},"suspect":${suspect.size},"esc_skipped":${escSkipped.size},"wall_sec":${ms(wallSec)},"loadavg_start":${Json.quote(loadStart)},"loadavg_end":${Json.quote(loadEnd)},"contended":$contended,"top5_slowest":$top5,"top5_spread":$noisy5,"sf":${Json.quote(sfDir)}}"""
     // The stdout line above is captured as a LOG TAIL and has truncated
     // mid-map two rounds running, making most per-query regressions
     // unadjudicable. The engine therefore persists its own COMPLETE
@@ -497,7 +488,7 @@ object Bench {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
       val qLines = results.sortBy(_._1).map { case (k, r) =>
-        s"""    ${jstr(k)}: {${fields(k, r)}}"""
+        s"""    ${Json.quote(k)}: {${fields(k, r)}}"""
       }
       // Machine-load fingerprint: loadavg at start/end plus total wall vs
       // the expected executed time ((reps+warmup) x summed medians + each
@@ -508,8 +499,8 @@ object Bench {
       // reads this field rather than re-deriving it.
       val body =
         s"""{
-           |  "sf": ${jstr(sfDir)},
-           |  "cpus": ${jstr(cpus.toString)},
+           |  "sf": ${Json.quote(sfDir)},
+           |  "cpus": ${Json.quote(cpus.toString)},
            |  "reps": $reps,
            |  "warmup": $warm,
            |  "spread_rerun_threshold": ${ms(spreadThresh)},
@@ -519,8 +510,8 @@ object Bench {
            |  "escalation_budget_sec": ${ms(escBudget)},
            |  "cold_mode": $coldMode,
            |  "cold_reps": ${if (coldMode) coldReps else 0},
-           |  "loadavg_start": ${jstr(loadStart)},
-           |  "loadavg_end": ${jstr(loadEnd)},
+           |  "loadavg_start": ${Json.quote(loadStart)},
+           |  "loadavg_end": ${Json.quote(loadEnd)},
            |  "host_cpus": ${Runtime.getRuntime.availableProcessors},
            |  "contended": $contended,
            |  "wall_sec": ${ms(wallSec)},
@@ -534,7 +525,7 @@ object Bench {
            |""".stripMargin
       java.nio.file.Files.write(outPath,
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"""{"metric":"artifact","path":${jstr(outPath.toString)}}""")
+      println(s"""{"metric":"artifact","path":${Json.quote(outPath.toString)}}""")
       // Run-over-run TREND: the rotation keeps exactly one previous
       // artifact, so the performance story beyond two runs was lost.
       // One summary line per run appended to history.jsonl (the

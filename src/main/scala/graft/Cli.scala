@@ -866,13 +866,11 @@ object Cli {
           val rows = report.collect()
           // rule ids embed user-supplied table/column/rule names — escape
           // quotes and control characters so no name breaks a JSON line
-          def jstr(s: String): String =
-            "\"" + graft.tools.BenchStats.jsonEscape(s) + "\""
           rows.foreach { r =>
-            println(s"""{"rule": ${jstr(r.getAs[String]("rule_id"))}, """ +
+            println(s"""{"rule": ${Json.quote(r.getAs[String]("rule_id"))}, """ +
               s""""rows": ${r.getAs[Long]("n_rows")}, """ +
               s""""violations": ${r.getAs[Long]("n_violations")}, """ +
-              s""""severity": ${jstr(r.getAs[String]("severity"))}, """ +
+              s""""severity": ${Json.quote(r.getAs[String]("severity"))}, """ +
               s""""passed": ${r.getAs[Boolean]("passed")}}""")
           }
           if (opts.contains("fail-on-violation") &&

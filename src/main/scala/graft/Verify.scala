@@ -21,9 +21,9 @@ object Verify {
     }
     // control chars escaped too: a tab or CR in the oracle SQL would
     // otherwise make oracle_sql.json invalid JSON for the DuckDB compare
-    def q(s: String): String = "\"" + tools.BenchStats.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

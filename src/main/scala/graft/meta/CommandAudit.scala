@@ -8,6 +8,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
+import graft.Json
+import graft.Json.{quote => q}
+
 /** Persisted orchestration command audit — the reference's command-execution
   * history (`orchestration/orchestration_runner.py:139-226` begin/end/fail,
   * `persistence/orchestration_repo_client.py:306-390` start_command /
@@ -149,17 +152,6 @@ final class FileCommandAudit private[meta] (dir: String)
     ingestedOffset = 0L
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def q(s: String): String = "\"" + esc(s) + "\""
-
   // seeded from the existing file at the END of the class body, after the
   // fold-index fields below are initialized
   private val nextId: AtomicLong = new AtomicLong(1)
@@ -214,51 +206,13 @@ final class FileCommandAudit private[meta] (dir: String)
     append(Seq("kind" -> q("chunk_begin"),
       "execution_id" -> q(executionId),
       "chunk_number" -> chunkNumber.toString,
-      "partitions" -> partitions.map(q).mkString("[", ",", "]")))
+      "partitions" -> Json.strings(partitions)))
 
   override def endChunk(chunkId: Long, status: String,
                         rowCount: Option[Long]): Unit =
     append(Seq("kind" -> q("chunk_end"), "chunk_id" -> chunkId.toString,
       "status" -> q(status),
       "row_count" -> rowCount.map(_.toString).getOrElse("null")))
-
-  // ---- reader ----
-
-  private def strField(js: String, key: String): Option[String] = {
-    val m = ("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    m.findFirstMatchIn(js).map(g => unescape(g.group(1)))
-  }
-  private def longField(js: String, key: String): Option[Long] =
-    ("\"" + key + "\"\\s*:\\s*(\\d+)").r
-      .findFirstMatchIn(js).map(_.group(1).toLong)
-  private def arrField(js: String, key: String): Seq[String] =
-    ("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]").r.findFirstMatchIn(js)
-      .map { g =>
-        val body = g.group(1).trim
-        if (body.isEmpty) Nil
-        else "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body)
-          .map(x => unescape(x.group(1))).toSeq
-      }.getOrElse(Nil)
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 'u' =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case c => sb += c; i += 2
-        }
-      } else { sb += s(i); i += 1 }
-    }
-    sb.toString
-  }
-  private def id(js: String): Long = longField(js, "id").getOrElse(0L)
 
   // ---- incremental fold index ----
   //
@@ -347,50 +301,46 @@ final class FileCommandAudit private[meta] (dir: String)
   }
 
   private def ingestLine(raw: String): Unit = {
-    val js = raw.stripSuffix("\r")
-    // a torn line is unparseable; skip it (same tolerance as before)
-    if (!(js.startsWith("{") && js.endsWith("}"))) return
-    val eid = id(js)
+    // a torn line (a crash mid-append) does not parse; skip it
+    val js =
+      try Json.parse(raw.stripSuffix("\r"))
+      catch { case scala.util.control.NonFatal(_) => return }
+    val eid = js.long("id").getOrElse(0L)
     maxSeenId = math.max(maxSeenId, eid)
-    def exec = strField(js, "execution_id").getOrElse("")
-    def ts = longField(js, "ts").getOrElse(0L)
-    strField(js, "kind").getOrElse("") match {
+    def exec = js.str("execution_id").getOrElse("")
+    def ts = js.long("ts").getOrElse(0L)
+    def status = js.str("status").getOrElse(Executing)
+    js.str("kind").getOrElse("") match {
       case "command_begin" =>
         cmds(eid) = CommandRun(
           commandId = eid, executionId = exec,
-          commandType = strField(js, "command_type").getOrElse(""),
-          commandInput = strField(js, "command_input").getOrElse(""),
+          commandType = js.str("command_type").getOrElse(""),
+          commandInput = js.str("command_input").getOrElse(""),
           status = Executing, startTs = ts, endTs = None,
           steps = Nil, chunks = Nil)
       case "command_end" =>
-        for (cid <- longField(js, "command_id"); c <- cmds.get(cid))
-          cmds(cid) = c.copy(
-            status = strField(js, "status").getOrElse(Executing),
-            endTs = Some(ts))
+        for (cid <- js.long("command_id"); c <- cmds.get(cid))
+          cmds(cid) = c.copy(status = status, endTs = Some(ts))
       case "step_begin" =>
         stepsById(eid) = StepRun(
-          stepId = eid, step = strField(js, "step").getOrElse(""),
+          stepId = eid, step = js.str("step").getOrElse(""),
           status = Executing, startTs = ts, endTs = None, details = "")
         stepIdsByExec.getOrElseUpdate(exec, mutable.ArrayBuffer.empty) += eid
       case "step_end" =>
-        for (sid <- longField(js, "step_id"); s <- stepsById.get(sid))
-          stepsById(sid) = s.copy(
-            status = strField(js, "status").getOrElse(Executing),
-            endTs = Some(ts),
-            details = strField(js, "details").getOrElse(""))
+        for (sid <- js.long("step_id"); s <- stepsById.get(sid))
+          stepsById(sid) = s.copy(status = status, endTs = Some(ts),
+            details = js.str("details").getOrElse(""))
       case "chunk_begin" =>
         chunksById(eid) = ChunkRun(
           chunkId = eid,
-          chunkNumber = longField(js, "chunk_number").getOrElse(0L).toInt,
-          partitions = arrField(js, "partitions"),
+          chunkNumber = js.long("chunk_number").getOrElse(0L).toInt,
+          partitions = js.strs("partitions"),
           status = Executing, rowCount = None, startTs = ts, endTs = None)
         chunkIdsByExec.getOrElseUpdate(exec, mutable.ArrayBuffer.empty) += eid
       case "chunk_end" =>
-        for (cid <- longField(js, "chunk_id"); c <- chunksById.get(cid))
-          chunksById(cid) = c.copy(
-            status = strField(js, "status").getOrElse(Executing),
-            rowCount = longField(js, "row_count"),
-            endTs = Some(ts))
+        for (cid <- js.long("chunk_id"); c <- chunksById.get(cid))
+          chunksById(cid) = c.copy(status = status,
+            rowCount = js.long("row_count"), endTs = Some(ts))
       case _ => ()
     }
   }

@@ -4,6 +4,8 @@ import java.sql.{Connection, DriverManager, SQLException, Statement}
 
 import scala.collection.mutable
 
+import graft.Json
+
 /** Transactional JDBC-backed orchestration repository — the reference's
   * GOE_REPO schema (`sql/oracle/source/sql/create_offload_repo_100.sql`:
   * `offload_metadata` :304, `command_execution` :51,
@@ -258,7 +260,9 @@ final class JdbcMetaRepo private (url: String) {
 
   private def bindMeta(ps: java.sql.PreparedStatement,
                        m: OffloadMetadata, tableAt: Int): Unit = {
-    import MetadataStore.renderArr
+    // list fields (multi-column incremental keys, HWM tuples) ride one
+    // column each as a JSON string array, the shape of the reference's
+    // delimited offload_key / offload_high_value
     def setOpt(i: Int, v: Option[String]): Unit =
       v match {
         case Some(s) => ps.setString(i, s)
@@ -266,18 +270,18 @@ final class JdbcMetaRepo private (url: String) {
       }
     ps.setString(1, m.backendTable)
     ps.setString(2, m.offloadType)
-    ps.setString(3, renderArr(m.incrementalKey))
-    ps.setString(4, renderArr(m.incrementalHighValue))
+    ps.setString(3, Json.strings(m.incrementalKey))
+    ps.setString(4, Json.strings(m.incrementalHighValue))
     setOpt(5, m.incrementalPredicateType)
-    ps.setString(6, renderArr(m.incrementalPredicateValue))
+    ps.setString(6, Json.strings(m.incrementalPredicateValue))
     m.snapshotId match {
       case Some(v) => ps.setLong(7, v)
       case None => ps.setNull(7, java.sql.Types.BIGINT)
     }
-    ps.setString(8, renderArr(m.bucketColumns))
-    ps.setString(9, renderArr(m.sortColumns))
-    ps.setString(10, renderArr(m.pendingChunkKeys))
-    ps.setString(11, renderArr(m.pendingChunkHwm))
+    ps.setString(8, Json.strings(m.bucketColumns))
+    ps.setString(9, Json.strings(m.sortColumns))
+    ps.setString(10, Json.strings(m.pendingChunkKeys))
+    ps.setString(11, Json.strings(m.pendingChunkHwm))
     setOpt(12, m.writerTimeZone)
     ps.setString(tableAt, m.sourceTable)
   }
@@ -319,7 +323,6 @@ final class JdbcMetaRepo private (url: String) {
 
   def loadMetadata(table: String): Option[OffloadMetadata] =
       readLock.synchronized {
-    import MetadataStore.parseArr
     val ps = readConn.prepareStatement(
       s"SELECT ${MetaCols.mkString(", ")} FROM offload_metadata " +
         "WHERE frontend_object = ?")
@@ -331,7 +334,7 @@ final class JdbcMetaRepo private (url: String) {
       else {
         def optStr(col: String) = Option(rs.getString(col))
         def arrCol(col: String) =
-          parseArr(Option(rs.getString(col)).getOrElse("[]"))
+          Json.parseStrings(Option(rs.getString(col)).getOrElse("[]"))
         val snap = rs.getLong("offload_snapshot")
         val snapOpt = if (rs.wasNull()) None else Some(snap)
         Some(OffloadMetadata(
@@ -442,7 +445,7 @@ final class JdbcMetaRepo private (url: String) {
         "VALUES (?, ?, ?, ?, ?)") { ps =>
       ps.setString(1, executionId)
       ps.setInt(2, chunkNumber)
-      ps.setString(3, MetadataStore.renderArr(partitions))
+      ps.setString(3, Json.strings(partitions))
       ps.setString(4, CommandAudit.Executing)
       ps.setLong(5, now())
     }
@@ -496,7 +499,7 @@ final class JdbcMetaRepo private (url: String) {
             mutable.ArrayBuffer.empty) += ChunkRun(
             chunkId = rs2.getLong("id"),
             chunkNumber = rs2.getInt("chunk_number"),
-            partitions = MetadataStore.parseArr(
+            partitions = Json.parseStrings(
               Option(rs2.getString("offload_partitions")).getOrElse("[]")),
             status = rs2.getString("status"),
             rowCount = optLong(rs2, "chunk_rows"),

@@ -3,6 +3,8 @@ package graft.meta
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.Json
+
 /** Offload orchestration metadata — the persisted per-table state machine.
   *
   * Mirrors `OrchestrationMetadata`
@@ -40,97 +42,44 @@ final case class OffloadMetadata(
 
 object MetadataStore {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def arr(xs: Seq[String]): String =
-    xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-
-  // Array-of-strings codec shared with the JDBC backend (multi-column
-  // incremental keys / HWM tuples ride one repo column, same shape as
-  // the reference's delimited offload_key / offload_high_value).
-  private[meta] def renderArr(xs: Seq[String]): String = arr(xs)
-  private[meta] def parseArr(s: String): Seq[String] =
-    arrField("{\"a\": " + s + "}", "a")
-
   def toJson(m: OffloadMetadata): String = {
+    def opt(v: Option[String]) = v.map(Json.quote).getOrElse("null")
     val fields = Seq(
-      "source_table" -> ("\"" + esc(m.sourceTable) + "\""),
-      "backend_table" -> ("\"" + esc(m.backendTable) + "\""),
-      "offload_type" -> ("\"" + esc(m.offloadType) + "\""),
-      "incremental_key" -> arr(m.incrementalKey),
-      "incremental_high_value" -> arr(m.incrementalHighValue),
-      "incremental_predicate_type" ->
-        m.incrementalPredicateType.map(v => "\"" + esc(v) + "\"").getOrElse("null"),
-      "incremental_predicate_value" -> arr(m.incrementalPredicateValue),
-      "bucket_columns" -> arr(m.bucketColumns),
-      "sort_columns" -> arr(m.sortColumns),
+      "source_table" -> Json.quote(m.sourceTable),
+      "backend_table" -> Json.quote(m.backendTable),
+      "offload_type" -> Json.quote(m.offloadType),
+      "incremental_key" -> Json.strings(m.incrementalKey),
+      "incremental_high_value" -> Json.strings(m.incrementalHighValue),
+      "incremental_predicate_type" -> opt(m.incrementalPredicateType),
+      "incremental_predicate_value" ->
+        Json.strings(m.incrementalPredicateValue),
+      "bucket_columns" -> Json.strings(m.bucketColumns),
+      "sort_columns" -> Json.strings(m.sortColumns),
       "snapshot_id" -> m.snapshotId.map(_.toString).getOrElse("null"),
-      "pending_chunk_keys" -> arr(m.pendingChunkKeys),
-      "pending_chunk_hwm" -> arr(m.pendingChunkHwm),
-      "writer_time_zone" ->
-        m.writerTimeZone.map(v => "\"" + esc(v) + "\"").getOrElse("null"))
+      "pending_chunk_keys" -> Json.strings(m.pendingChunkKeys),
+      "pending_chunk_hwm" -> Json.strings(m.pendingChunkHwm),
+      "writer_time_zone" -> opt(m.writerTimeZone))
     fields.map { case (k, v) => "\"" + k + "\": " + v }
       .mkString("{", ", ", "}")
   }
 
-  // Minimal JSON reader for the fixed schema above (no external deps).
-  private def strField(js: String, key: String): Option[String] = {
-    val m = ("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    m.findFirstMatchIn(js).map(g => unescape(g.group(1)))
-  }
-  private def arrField(js: String, key: String): Seq[String] = {
-    val m = ("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]").r
-    m.findFirstMatchIn(js).map { g =>
-      val body = g.group(1).trim
-      if (body.isEmpty) Nil
-      else "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body)
-        .map(x => unescape(x.group(1))).toSeq
-    }.getOrElse(Nil)
-  }
-  private def longField(js: String, key: String): Option[Long] = {
-    val m = ("\"" + key + "\"\\s*:\\s*(\\d+)").r
-    m.findFirstMatchIn(js).map(_.group(1).toLong)
-  }
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'u' =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case c => sb += c; i += 2
-        }
-      } else { sb += s(i); i += 1 }
-    }
-    sb.toString
-  }
-
-  def fromJson(js: String): OffloadMetadata =
+  def fromJson(js: String): OffloadMetadata = {
+    val o = Json.parse(js)
     OffloadMetadata(
-      sourceTable = strField(js, "source_table").getOrElse(""),
-      backendTable = strField(js, "backend_table").getOrElse(""),
-      offloadType = strField(js, "offload_type").getOrElse("FULL"),
-      incrementalKey = arrField(js, "incremental_key"),
-      incrementalHighValue = arrField(js, "incremental_high_value"),
-      incrementalPredicateType = strField(js, "incremental_predicate_type"),
-      incrementalPredicateValue = arrField(js, "incremental_predicate_value"),
-      bucketColumns = arrField(js, "bucket_columns"),
-      sortColumns = arrField(js, "sort_columns"),
-      snapshotId = longField(js, "snapshot_id"),
-      pendingChunkKeys = arrField(js, "pending_chunk_keys"),
-      pendingChunkHwm = arrField(js, "pending_chunk_hwm"),
-      writerTimeZone = strField(js, "writer_time_zone"))
+      sourceTable = o.str("source_table").getOrElse(""),
+      backendTable = o.str("backend_table").getOrElse(""),
+      offloadType = o.str("offload_type").getOrElse("FULL"),
+      incrementalKey = o.strs("incremental_key"),
+      incrementalHighValue = o.strs("incremental_high_value"),
+      incrementalPredicateType = o.str("incremental_predicate_type"),
+      incrementalPredicateValue = o.strs("incremental_predicate_value"),
+      bucketColumns = o.strs("bucket_columns"),
+      sortColumns = o.strs("sort_columns"),
+      snapshotId = o.long("snapshot_id"),
+      pendingChunkKeys = o.strs("pending_chunk_keys"),
+      pendingChunkHwm = o.strs("pending_chunk_hwm"),
+      writerTimeZone = o.str("writer_time_zone"))
+  }
 
   private def fileFor(dir: String, table: String) =
     Paths.get(dir, table.replaceAll("[^A-Za-z0-9_.]", "_") + ".json")

@@ -3,6 +3,8 @@ package graft.meta
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.Json
+import graft.Json.{quote => q}
 import graft.plan.{Boundary, PartitionPlanner, SourcePartition}
 
 /** Copied statistics — the engine's analogue of the reference's
@@ -53,16 +55,6 @@ final case class TableStatsRecord(
 
 object StatsStore {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def q(s: String): String = "\"" + esc(s) + "\""
-
   def toJson(r: TableStatsRecord): String = {
     val cols = r.columns.map { c =>
       s"""{"name": ${q(c.name)}, "ndv": ${c.ndv}, "num_nulls": ${c.numNulls}, """ +
@@ -79,60 +71,28 @@ object StatsStore {
     s""""columns": $cols, "partitions": $parts}"""
   }
 
-  // minimal reader for the fixed shape above (no external json dep)
-  private val objRx = "\\{[^{}]*\\}".r
-  private def sField(js: String, key: String): Option[String] =
-    ("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(js).map(m => unescape(m.group(1)))
-  private def nField(js: String, key: String): Option[String] =
-    ("\"" + key + "\"\\s*:\\s*(-?[0-9.E+]+)").r
-      .findFirstMatchIn(js).map(_.group(1))
-  private def arrBody(js: String, key: String): String =
-    ("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]").r
-      .findFirstMatchIn(js).map(_.group(1)).getOrElse("")
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'u' =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case c => sb += c; i += 2
-        }
-      } else { sb += s(i); i += 1 }
-    }
-    sb.toString
-  }
-
   def fromJson(js: String): TableStatsRecord = {
-    val cols = objRx.findAllIn(arrBody(js, "columns")).map { o =>
-      ColumnStatsRec(
-        name = sField(o, "name").getOrElse(""),
-        ndv = nField(o, "ndv").fold(0L)(_.toDouble.toLong),
-        numNulls = nField(o, "num_nulls").fold(0L)(_.toDouble.toLong),
-        avgColLen = nField(o, "avg_col_len").fold(0.0)(_.toDouble),
-        lowValue = sField(o, "low_value").getOrElse(""),
-        highValue = sField(o, "high_value").getOrElse(""))
-    }.toSeq
-    val parts = objRx.findAllIn(arrBody(js, "partitions")).map { o =>
-      PartitionStatsRec(
-        name = sField(o, "name").getOrElse(""),
-        highValue = sField(o, "high_value").getOrElse(""),
-        rows = nField(o, "rows").fold(0L)(_.toDouble.toLong),
-        bytes = nField(o, "bytes").fold(0L)(_.toDouble.toLong),
-        hwmLow = sField(o, "hwm_low").getOrElse(""),
-        hwmHigh = sField(o, "hwm_high").getOrElse(""))
-    }.toSeq
+    val o = Json.parse(js)
+    def num(o: Json.Obj, key: String) = o.long(key).getOrElse(0L)
     TableStatsRecord(
-      table = sField(js, "table").getOrElse(""),
-      numRows = nField(js, "num_rows").fold(0L)(_.toDouble.toLong),
-      numBytes = nField(js, "num_bytes").fold(0L)(_.toDouble.toLong),
-      avgRowLen = nField(js, "avg_row_len").fold(0.0)(_.toDouble),
-      columns = cols, partitions = parts)
+      table = o.str("table").getOrElse(""),
+      numRows = num(o, "num_rows"),
+      numBytes = num(o, "num_bytes"),
+      avgRowLen = o.double("avg_row_len").getOrElse(0.0),
+      columns = o.objs("columns").map(c => ColumnStatsRec(
+        name = c.str("name").getOrElse(""),
+        ndv = num(c, "ndv"),
+        numNulls = num(c, "num_nulls"),
+        avgColLen = c.double("avg_col_len").getOrElse(0.0),
+        lowValue = c.str("low_value").getOrElse(""),
+        highValue = c.str("high_value").getOrElse(""))),
+      partitions = o.objs("partitions").map(p => PartitionStatsRec(
+        name = p.str("name").getOrElse(""),
+        highValue = p.str("high_value").getOrElse(""),
+        rows = num(p, "rows"),
+        bytes = num(p, "bytes"),
+        hwmLow = p.str("hwm_low").getOrElse(""),
+        hwmHigh = p.str("hwm_high").getOrElse(""))))
   }
 
   // A jdbc: metadata "dir" cannot host files; stats land in the repo's

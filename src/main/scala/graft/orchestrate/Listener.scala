@@ -7,6 +7,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Json
+import graft.Json.{quote => q}
 import graft.meta.{MetadataStore, StatsStore}
 
 /** Orchestration REST listener — the reference's `src/goe/listener/`
@@ -32,7 +34,9 @@ import graft.meta.{MetadataStore, StatsStore}
   *   - `GET /api/orchestration/offloads/{table}/` — one table's metadata
   *   - `POST /api/orchestration/offload/` — run an offload (JSON body:
   *     `source`, `final`, `meta`, optional `table`/`staging`/`predicate`/
-  *     `incremental_key`)
+  *     `incremental_key` (an array, or one comma-separated string) and
+  *     `dry_run` (a boolean, or the string "true"); a body that is not a
+  *     JSON object is a 422)
   * Auth mirrors `Security(valid_api_token)`: when a token is configured,
   * every request must carry it in `x-api-token`.
   *
@@ -87,16 +91,6 @@ object Listener {
     }
     def unsubscribe(q: LinkedBlockingQueue[String]): Unit = { subs.remove(q); () }
   }
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def q(s: String): String = "\"" + esc(s) + "\""
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -158,12 +152,6 @@ object Listener {
         case _ => false
       }
   }
-
-  // minimal flat-JSON field reader (same contract as MetadataStore's)
-  private def strField(js: String, key: String): Option[String] =
-    ("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(js).map(_.group(1)
-        .replace("\\\"", "\"").replace("\\\\", "\\"))
 
   /** One persisted command run (begin/end + per-step + per-chunk rows) as
     * JSON — the audit history the reference serves from its repo tables. */
@@ -890,24 +878,31 @@ object Listener {
 
       route("POST", "/api/orchestration/offload",
         "run an offload (json body: source, final, ...)") { (ex, _) =>
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        (strField(body, "source"), strField(body, "final")) match {
-          case (Some(source), Some(finalPath)) =>
-            val table = strField(body, "table").getOrElse(
+        val parsed = scala.util.Try(Json.parse(new String(
+          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)))
+        (for (b <- parsed.toOption; source <- b.str("source");
+              finalPath <- b.str("final")) yield (b, source, finalPath)) match {
+          case Some((b, source, finalPath)) =>
+            val table = b.str("table").getOrElse(
               source.split('/').last.stripSuffix(".parquet"))
             val execId = graft.meta.CommandAudit.newExecutionId()
             val cfg = OffloadRunner.OffloadConfig(
               sourceTable = table,
               sourcePath = source,
-              stagingPath = strField(body, "staging")
+              stagingPath = b.str("staging")
                 .getOrElse(finalPath + "_staging"),
               finalPath = finalPath,
-              metadataDir = strField(body, "meta").getOrElse(metadataDir),
-              predicateDsl = strField(body, "predicate"),
-              incrementalKey = strField(body, "incremental_key")
-                .map(_.split(',').toSeq).getOrElse(Nil),
-              dryRun = strField(body, "dry_run").contains("true"),
+              metadataDir = b.str("meta").getOrElse(metadataDir),
+              predicateDsl = b.str("predicate"),
+              // a JSON array of column names, or one comma-separated string
+              incrementalKey = b.strs("incremental_key") match {
+                case Nil => b.str("incremental_key")
+                  .map(_.split(',').toSeq).getOrElse(Nil)
+                case keys => keys
+              },
+              // a JSON boolean, or the string "true"
+              dryRun = b.bool("dry_run")
+                .getOrElse(b.str("dry_run").contains("true")),
               executionId = Some(execId),
               // live heartbeat: every step lands on the progress bus as
               // it completes, while the command is still running
@@ -928,7 +923,11 @@ object Listener {
               .mkString("[", ", ", "]")
             respond(ex, if (steps.forall(_.ok)) 200 else 500, js)
           case _ =>
-            respond(ex, 422, """{"detail": "source and final required"}""")
+            val detail = parsed.fold(
+              e => "body is not a JSON object: " +
+                String.valueOf(e.getMessage).takeWhile(_ != '\n'),
+              _ => "source and final required")
+            respond(ex, 422, s"""{"detail": ${q(detail)}}""")
         }
       })
 

@@ -67,7 +67,7 @@ object StreamingDayStats {
         "streaming day stats")) return // committed replay: skip
     val fs = new Path(cfg.storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.storeDir, "days")
+    SwapDir.recover(fs, cfg.storeDir, "days")
     val days = new Path(cfg.storeDir, "days")
     val fresh = TimeSeries.dailyTotals(batch, cfg.tsCol, cfg.amountCol)
     val merged =
@@ -78,9 +78,7 @@ object StreamingDayStats {
     fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
     // HWM rides the same rename as the data it describes
-    val hwmOut = fs.create(new Path(tmp, "_hwm"), true)
-    try hwmOut.write(batchId.toString.getBytes("UTF-8"))
-    finally hwmOut.close()
+    Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
     val old = new Path(cfg.storeDir, "days__old")
     fs.delete(old, true)
     if (fs.exists(days) && !fs.rename(days, old))
@@ -96,7 +94,7 @@ object StreamingDayStats {
   def read(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = new Path(cfg.storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.storeDir, "days")
+    SwapDir.recover(fs, cfg.storeDir, "days")
     val days = new Path(cfg.storeDir, "days")
     if (fs.exists(days)) spark.read.parquet(days.toString)
     else {

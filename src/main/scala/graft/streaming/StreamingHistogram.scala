@@ -81,7 +81,7 @@ object StreamingHistogram {
         "streaming histogram")) return // committed replay: skip
     val fs = new Path(cfg.storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.storeDir, "hist")
+    SwapDir.recover(fs, cfg.storeDir, "hist")
     val hist = new Path(cfg.storeDir, "hist")
     val fresh = bucketize(batch, cfg)
     val merged =
@@ -93,9 +93,7 @@ object StreamingHistogram {
     val tmp = new Path(cfg.storeDir, "hist__tmp")
     fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
-    val hwmOut = fs.create(new Path(tmp, "_hwm"), true)
-    try hwmOut.write(batchId.toString.getBytes("UTF-8"))
-    finally hwmOut.close()
+    Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
     val old = new Path(cfg.storeDir, "hist__old")
     fs.delete(old, true)
     if (fs.exists(hist) && !fs.rename(hist, old))
@@ -112,7 +110,7 @@ object StreamingHistogram {
   def read(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = new Path(cfg.storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.storeDir, "hist")
+    SwapDir.recover(fs, cfg.storeDir, "hist")
     val hist = new Path(cfg.storeDir, "hist")
     if (fs.exists(hist)) spark.read.parquet(hist.toString)
     else spark.emptyDataFrame

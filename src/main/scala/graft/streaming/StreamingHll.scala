@@ -50,22 +50,6 @@ object StreamingHll {
       .groupBy(col("grp"), col("register"))
       .agg(max(col("rho_max")).as("rho_max"))
 
-  /** Crash-window recovery for the aside-rename swap: if a prior run
-    * died between `rename(cur → old)` and `rename(tmp → cur)`, the store
-    * is missing but the full state survives in `__old` — restore it
-    * BEFORE any read or merge, or the replayed batch would rebuild the
-    * store from one batch's data and the cleanup would then delete the
-    * only copy of history. */
-  private[streaming] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                     dir: String, name: String): Unit = {
-    val cur = new Path(dir, name)
-    val old = new Path(dir, name + "__old")
-    if (!fs.exists(cur) && fs.exists(old)) {
-      if (!fs.rename(old, cur))
-        throw new IllegalStateException(s"swap recovery failed: $old")
-    }
-  }
-
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
                                       cfg: Config): Unit = {
     val spark = batch.sparkSession
@@ -73,7 +57,7 @@ object StreamingHll {
         "streaming hll")) return // committed replay: skip
     val fs = new Path(cfg.sketchDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, cfg.sketchDir, "registers")
+    SwapDir.recover(fs, cfg.sketchDir, "registers")
     val regs = new Path(cfg.sketchDir, "registers")
     val fresh = Sketches.hllRegisters(batch, cfg.groupCol, cfg.valueCol,
       cfg.regHex, cfg.windowHex)
@@ -92,9 +76,7 @@ object StreamingHll {
       throw new IllegalStateException(s"hll swap: cannot install $tmp")
     }
     fs.delete(old, true)
-    val out = fs.create(hwmPath(cfg), true)
-    try out.write(batchId.toString.getBytes("UTF-8"))
-    finally out.close()
+    Hwm.write(fs, hwmPath(cfg), batchId)
   }
 
   /** The resident register relation (empty when nothing has arrived). */
@@ -102,7 +84,7 @@ object StreamingHll {
            cfg: Config): DataFrame = {
     val fs = new Path(cfg.sketchDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, cfg.sketchDir, "registers")
+    SwapDir.recover(fs, cfg.sketchDir, "registers")
     val regs = new Path(cfg.sketchDir, "registers")
     if (fs.exists(regs)) spark.read.parquet(regs.toString)
     else spark.emptyDataFrame

@@ -52,7 +52,7 @@ object StreamingKmv {
         "streaming kmv")) return // committed replay: skip
     val fs = new Path(cfg.sketchDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.sketchDir, "slots")
+    SwapDir.recover(fs, cfg.sketchDir, "slots")
     val slots = new Path(cfg.sketchDir, "slots")
     val fresh = Sketches.kmvSketch(batch, cfg.k, cfg.groupCol, cfg.valueCol)
     val merged =
@@ -72,9 +72,7 @@ object StreamingKmv {
       throw new IllegalStateException(s"kmv swap: cannot install $tmp")
     }
     fs.delete(old, true)
-    val out = fs.create(hwmPath(cfg), true)
-    try out.write(batchId.toString.getBytes("UTF-8"))
-    finally out.close()
+    Hwm.write(fs, hwmPath(cfg), batchId)
   }
 
   /** The resident sketch (empty relation when nothing has arrived). */
@@ -82,7 +80,7 @@ object StreamingKmv {
            cfg: Config): DataFrame = {
     val fs = new Path(cfg.sketchDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.sketchDir, "slots")
+    SwapDir.recover(fs, cfg.sketchDir, "slots")
     val slots = new Path(cfg.sketchDir, "slots")
     if (fs.exists(slots)) spark.read.parquet(slots.toString)
     else {

@@ -62,7 +62,7 @@ object StreamingSampler {
     * death between `rename(cur → old)` and `rename(tmp → cur)` leaves
     * the only full state in `__old` — restore it BEFORE any existence
     * check or read, or the next batch would restart every source's
-    * offset at zero (the [[StreamingHll.recoverSwap]] contract). */
+    * offset at zero (the [[SwapDir.recover]] contract). */
   private def massExists(spark: org.apache.spark.sql.SparkSession,
       cfg: Config): Boolean = {
     val fs = new Path(cfg.massPath)

@@ -136,9 +136,7 @@ object StreamingScd {
         val tmp = tmpDir(cfg, b)
         fs.delete(tmp, true)
         merged.write.mode("overwrite").parquet(tmp.toString)
-        val hwmOut = fs.create(new Path(tmp, "_hwm"), true)
-        try hwmOut.write(batchId.toString.getBytes("UTF-8"))
-        finally hwmOut.close()
+        Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
         val old = oldDir(cfg, b)
         fs.delete(old, true)
         if (fs.exists(cur) && !fs.rename(cur, old))

@@ -59,7 +59,7 @@ object StreamingSketch {
     // an interrupted previous swap must restore BEFORE the absent-store
     // check — mistaking an aside-renamed store for "empty" would quietly
     // reset every accumulated count
-    StreamingHll.recoverSwap(fs0, cfg.sketchDir, "cells")
+    SwapDir.recover(fs0, cfg.sketchDir, "cells")
     if (!Hwm.replayGuard(batchId, lastBatch(spark, cfg),
         "streaming sketch")) return // committed replay: skip
     val fs = fs0
@@ -92,7 +92,7 @@ object StreamingSketch {
            cfg: Config): DataFrame = {
     val fs = new Path(cfg.sketchDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingHll.recoverSwap(fs, cfg.sketchDir, "cells")
+    SwapDir.recover(fs, cfg.sketchDir, "cells")
     val cells = new Path(cfg.sketchDir, "cells")
     if (fs.exists(cells)) spark.read.parquet(cells.toString)
     else spark.emptyDataFrame

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.Json
+
 /** Pure statistics behind [[graft.Bench]]'s contention defences, extracted
   * so the escalation policy is unit-testable without running Spark.
   *
@@ -143,16 +145,6 @@ object BenchStats {
       }.toMap)
   }
 
-  /** THE JSON string escaper for every artifact this engine renders —
-    * one definition (r15 review: four hand-rolled copies had to agree
-    * byte-for-byte or [[parseRing]]'s same-sf match silently broke). */
-  def jsonEscape(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"; case '"' => "\\\""
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
-
   /** Millisecond-precision seconds, Locale.ROOT — the one number
     * formatter every artifact line shares. */
   def ms3(v: Double): String =
@@ -174,7 +166,7 @@ object BenchStats {
     chunks.zipWithIndex.map { case (c, i) =>
       s"""{"metric":"queries_part","part":$i,"parts":${chunks.size},""" +
         s""""queries":${c.mkString("{", ",", "}")},""" +
-        s""""sf":"${jsonEscape(sf)}"}"""
+        s""""sf":${Json.quote(sf)}}"""
     }
   }
 
@@ -185,8 +177,7 @@ object BenchStats {
   def historyLine(tsMillis: Long, sf: String, nQueries: Int, failed: Int,
       totalSec: Double, wallSec: Double, reps: Int, contended: Boolean,
       nRemeasured: Int, nSuspect: Int): String = {
-    val sfq = "\"" + jsonEscape(sf) + "\""
-    s"""{"ts_ms":$tsMillis,"sf":$sfq,"n_queries":$nQueries,""" +
+    s"""{"ts_ms":$tsMillis,"sf":${Json.quote(sf)},"n_queries":$nQueries,""" +
       s""""failed":$failed,"total_sec":${ms3(totalSec)},""" +
       s""""wall_sec":${ms3(wallSec)},"reps":$reps,""" +
       s""""contended":$contended,"n_remeasured":$nRemeasured,""" +
@@ -234,14 +225,14 @@ object BenchStats {
       queries: Seq[(String, Double)],
       spreads: Seq[(String, Double)] = Seq.empty): String = {
     def flat(xs: Seq[(String, Double)]): String = xs.sortBy(_._1)
-      .map { case (k, v) => "\"" + jsonEscape(k) + "\":" + ms3(v) }
+      .map { case (k, v) => Json.quote(k) + ":" + ms3(v) }
       .mkString("{", ",", "}")
     // spreads AFTER queries, and both objects are FLAT — the parsers
     // bound each at its closing brace, so neither map bleeds into the
     // other and pre-spreads ring lines stay parseable
     val sp = if (spreads.isEmpty) ""
              else s""","spreads":${flat(spreads)}"""
-    s"""{"ts_ms":$tsMillis,"sf":"${jsonEscape(sf)}",""" +
+    s"""{"ts_ms":$tsMillis,"sf":${Json.quote(sf)},""" +
       s""""contended":$contended,"queries":${flat(queries)}$sp}"""
   }
 
@@ -292,7 +283,7 @@ object BenchStats {
     * later map into the earlier one. */
   private def parseRingObject(text: String, sf: String,
       key: String): Seq[Map[String, Double]] = {
-    val sfEsc = "\"sf\":\"" + jsonEscape(sf) + "\""
+    val sfEsc = "\"sf\":" + Json.quote(sf)
     val tag = "\"" + key + "\":{"
     val q = """"([^"\\]+)"\s*:\s*([0-9.]+)""".r
     text.linesIterator

@@ -345,6 +345,42 @@ class ListenerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("POST offload with a JSON boolean dry_run writes no final table") {
+    val base = Files.createTempDirectory("graft_listener_dry").toString
+    val srv = Listener.start(spark, s"$base/meta")
+    try {
+      val resp = post(s"http://127.0.0.1:${srv.port}/api/orchestration/offload/",
+        s"""{"source": "${sf("sf0.001")}/region.parquet",
+           | "table": "region", "final": "$base/final",
+           | "dry_run": true}""".stripMargin)
+      assert(resp.statusCode() == 200, resp.body())
+      assert(resp.body().contains("\"step\": \"stage_and_load\""))
+      assert(!Files.exists(java.nio.file.Paths.get(s"$base/final")))
+    } finally srv.stop()
+  }
+
+  test("POST offload takes incremental_key as a JSON array and answers " +
+      "a body that is not JSON with a 422") {
+    val base = Files.createTempDirectory("graft_listener_body").toString
+    val srv = Listener.start(spark, s"$base/meta")
+    try {
+      val root = s"http://127.0.0.1:${srv.port}"
+      val resp = post(s"$root/api/orchestration/offload/",
+        s"""{"source": "${sf("sf0.001")}/region.parquet",
+           | "table": "region", "final": "$base/final",
+           | "incremental_key": ["r_regionkey"]}""".stripMargin)
+      assert(resp.statusCode() == 200, resp.body())
+      assert(spark.read.parquet(s"$base/final").count() == 5)
+      val meta = get(s"$root/api/orchestration/offloads/region/")
+      assert(meta.body().contains(
+        "\"incremental_key\": [\"r_regionkey\"]"), meta.body())
+      val bad = post(s"$root/api/orchestration/offload/", "{\"source\": ")
+      assert(bad.statusCode() == 422, bad.body())
+      assert(bad.body().contains("\"detail\": \"body is not a JSON object"),
+        bad.body())
+    } finally srv.stop()
+  }
+
   test("the listener serves a JDBC-repository metadata dir: POST " +
       "offload commits to the database, inventory and runs read it back") {
     val base = Files.createTempDirectory("graft_listener_jdbc").toString
