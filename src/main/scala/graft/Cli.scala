@@ -612,7 +612,7 @@ object Cli {
             storeDir = opts("store"),
             checkpointDir = opts("store") + "/_ckpt",
             buckets = opts.getOrElse("buckets", "16").toInt)
-          graft.streaming.StreamingScd.mergeBatch(
+          graft.streaming.StreamingScd.processBatch(
             spark.read.parquet(opts("events")),
             opts("batch-id").toLong, cfg)
           val n = graft.streaming.StreamingScd.read(spark, cfg).count()
@@ -701,7 +701,7 @@ object Cli {
             checkpointDir = opts("store") + "/_ckpt",
             valueCol = opts("value-col"),
             bucketWidth = opts.getOrElse("bucket-width", "100").toLong)
-          graft.streaming.StreamingHistogram.mergeBatch(
+          graft.streaming.StreamingHistogram.processBatch(
             spark.read.parquet(opts("source")),
             opts("batch-id").toLong, cfg)
           val n = graft.streaming.StreamingHistogram.read(spark, cfg)

@@ -538,8 +538,9 @@ object Listener {
             // reads ONLY the last committed batch's partition
             // (batch_id is the partition column — pruned, never a
             // whole-store scan). A torn state mid-compact is handled
-            // below this layer: offsets() runs the __old swap
-            // recovery before any read.
+            // below this layer: offsets() serves the mass store's
+            // aside while a compact is between its renames, and
+            // renames nothing.
             val cfg = samplerCfg(dir)
             val sampler = graft.streaming.StreamingSampler
             val last = sampler.lastBatch(spark, cfg)

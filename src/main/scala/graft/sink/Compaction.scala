@@ -93,28 +93,4 @@ object Compaction {
     val (_, after) = parquetFiles(spark, dir)
     CompactionResult(files.length, after.length, totalBytes, rows)
   }
-
-  /** Recover an interrupted [[compact]] (or any swap using the same
-    * `__compact_old`/`__compact_tmp` convention) at `path`:
-    * directory missing + `__compact_old` present → the crash hit between
-    * the two renames, the old directory is authoritative — restore it;
-    * both present → the crash hit after install, the old copy is stale —
-    * drop it; a leftover `__compact_tmp` is always an incomplete rewrite
-    * — drop it. Readers of swap-compacted stores call this before the
-    * read so a crashed maintenance pass can never make the store LOOK
-    * empty (which, for the dedup index, would silently drop pairs). */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = new Path(dir.getParent, dir.getName + "__compact_old")
-    val tmp = new Path(dir.getParent, dir.getName + "__compact_tmp")
-    if (!fs.exists(dir) && fs.exists(old)) {
-      if (!fs.rename(old, dir))
-        throw new IllegalStateException(s"compaction recovery: $old")
-    } else if (fs.exists(dir) && fs.exists(old)) {
-      fs.delete(old, true); ()
-    }
-    fs.delete(tmp, true)
-    ()
-  }
 }

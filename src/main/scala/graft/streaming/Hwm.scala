@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Crash-safe high-water-mark sidecar files for the streaming stores.
   *
@@ -9,10 +10,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * empty file — and a reader that throws on it wedges the stream on
   * every restart. Writes here go through a temp file + rename (the
   * [[graft.meta.MetadataStore]] discipline), and reads tolerate a
-  * missing, empty, or torn file by returning -1: for the stores using
-  * these sidecars, replays are idempotent by construction (batch-scoped
-  * dynamic overwrite), so a lost HWM only costs a redundant-but-harmless
-  * rewrite — never a double-count and never a wedge.
+  * missing, empty, or torn file by returning -1.
+  *
+  * What a lost HWM costs depends on the store. Where replays are
+  * idempotent by construction (batch-scoped dynamic overwrite, or a
+  * max/union merge), it costs a redundant rewrite. Where the merge is
+  * ADDITIVE — the count-min sketch, the histogram, the day totals, the
+  * SCD runs, the text-index totals once folded — a replay the HWM does
+  * not cover double-counts, so the HWM is load-bearing: the swapped
+  * stores write it inside the generation it certifies, and one install
+  * commits both ([[SwapStore]], the SCD buckets).
   */
 private[streaming] object Hwm {
 
@@ -49,77 +56,144 @@ private[streaming] object Hwm {
         "pass the old HWM); reset the store or restore the checkpoint.")
   }
 
-  def write(fs: FileSystem, path: Path, value: Long): Unit = {
+  def write(fs: FileSystem, path: Path, value: Long): Unit =
+    write(fs, path, value.toString)
+
+  /** Install `text` at `path` through a temp file + rename. */
+  def write(fs: FileSystem, path: Path, text: String): Unit = {
     val tmp = new Path(path.getParent, path.getName + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(value.toString.getBytes("UTF-8"))
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
     fs.delete(path, false)
     if (!fs.rename(tmp, path))
-      throw new IllegalStateException(s"hwm write: cannot install $tmp")
+      throw new IllegalStateException(s"sidecar write: cannot install $tmp")
   }
 }
 
 /** Swap-managed relation directory: temp write + two renames install a
-  * new generation atomically, with crash recovery and swap-tolerant
-  * reads. The contract, spec-pinned on the rank store and shared by the
-  * community store:
-  *   - WRITERS heal: [[recover]] runs before an install (a crash between
-  *     the two renames leaves the aside but no current — rename it back).
+  * new generation, with crash recovery and swap-tolerant reads. This is
+  * the only code in the streaming stores that moves a generation aside
+  * or installs one. The contract, spec-pinned on the rank and community
+  * stores:
+  *   - WRITERS heal: [[recover]] runs before an install or a write into
+  *     the live directory (a crash between the two renames leaves the
+  *     aside but no current — rename it back).
   *   - READERS never heal: [[resolveForRead]] serves the aside when the
-  *     current dir is missing (a reader landing inside a LIVE writer's
-  *     rename window must not rename the aside back mid-install).
-  *   - The aside is RETAINED through the swap and reclaimed at the start
-  *     of the NEXT install: deleting it at swap end would fail a
-  *     concurrent reader still scanning the previous generation. */
+  *     current dir is missing. A reader that renamed the aside back
+  *     inside a LIVE writer's rename window would make the writer's
+  *     `rename(temp, current)` nest the new generation INSIDE the
+  *     resurrected one and still return true: the batch would be lost.
+  *   - The aside is RETAINED through the swap and reclaimed by the NEXT
+  *     install, after its temp is written: deleting it at swap end would
+  *     fail a concurrent reader still scanning the previous generation.
+  *     Every swap-managed directory therefore keeps one previous
+  *     generation on disk. */
 private[streaming] object SwapDir {
 
-  def current(storeDir: String, name: String): Path =
-    new Path(storeDir, name)
-  def aside(storeDir: String, name: String): Path =
-    new Path(storeDir, name + "__old")
+  /** The three paths of one swap-managed directory: the live
+    * generation, the temp the next one is written to, and the aside the
+    * previous one moves to. */
+  final case class Target(current: Path, temp: Path, aside: Path)
+
+  /** `dir`, `dir__tmp`, `dir__old`. */
+  def target(dir: Path): Target = beside(dir, "__tmp", "__old")
+
+  /** `dir`, `dir__compact_tmp`, `dir__compact_old` — the names of the
+    * batch-fold compactions. */
+  def compactTarget(dir: Path): Target =
+    beside(dir, "__compact_tmp", "__compact_old")
+
+  private def beside(dir: Path, tmp: String, old: String): Target =
+    Target(dir, new Path(dir.getParent, dir.getName + tmp),
+      new Path(dir.getParent, dir.getName + old))
 
   /** Writer-side crash recovery: current missing + aside present. */
-  def recover(fs: FileSystem, storeDir: String, name: String): Unit = {
-    val cur = current(storeDir, name)
-    val old = aside(storeDir, name)
-    if (!fs.exists(cur) && fs.exists(old) && !fs.rename(old, cur))
-      throw new IllegalStateException(s"$name swap recovery failed: $old")
-  }
+  def recover(fs: FileSystem, t: Target): Unit =
+    if (!fs.exists(t.current) && fs.exists(t.aside) &&
+        !fs.rename(t.aside, t.current))
+      throw new IllegalStateException(s"swap recovery failed: ${t.aside}")
 
   /** Read-side resolution — current, else the aside, else nothing; no
     * filesystem mutation ever. */
-  def resolveForRead(fs: FileSystem, storeDir: String,
-                     name: String): Option[Path] = {
-    val cur = current(storeDir, name)
-    if (fs.exists(cur)) Some(cur)
-    else {
-      val old = aside(storeDir, name)
-      if (fs.exists(old)) Some(old) else None
+  def resolveForRead(fs: FileSystem, t: Target): Option[Path] =
+    Seq(t.current, t.aside).find(fs.exists)
+
+  /** Install the generation `write` puts at the temp path it is given
+    * (with its partitioning, a riding `_hwm`, preserved partitions). The
+    * previous generation moves to the aside and STAYS there (deferred
+    * reclaim — see the object doc). */
+  def install(fs: FileSystem, t: Target)(write: Path => Unit): Unit = {
+    fs.delete(t.temp, true)
+    write(t.temp)
+    fs.delete(t.aside, true)
+    if (fs.exists(t.current) && !fs.rename(t.current, t.aside))
+      throw new IllegalStateException(s"${t.current}: cannot move aside")
+    if (!fs.rename(t.temp, t.current)) {
+      if (fs.exists(t.aside)) fs.rename(t.aside, t.current) // roll back
+      throw new IllegalStateException(s"${t.current}: cannot install")
     }
+  }
+}
+
+/** One swap-managed relation that every micro-batch merges into — the
+  * shared body of the merge stores ([[StreamingHll]], [[StreamingKmv]],
+  * [[StreamingSketch]], [[StreamingHistogram]], [[StreamingDayStats]]).
+  * A batch runs, in this order:
+  *   1. writer-side [[SwapDir.recover]] — an aside-renamed store must
+  *      never look empty, or the merge would reset every count;
+  *   2. the replay guard on [[lastBatch]];
+  *   3. the merge of the batch's `fresh` relation with the resident one;
+  *   4. one [[SwapDir.install]] whose temp carries the batch's `_hwm`, so
+  *      data and HWM commit in one rename — additive merges (counts,
+  *      sums) would double-count on a replay the HWM did not cover.
+  * Reads resolve, never heal. `schema` is the empty relation's columns. */
+private[streaming] final class SwapStore(
+    dir: String, name: String, label: String,
+    fresh: DataFrame => DataFrame,
+    merge: (DataFrame, DataFrame) => DataFrame,
+    schema: Seq[Column]) {
+
+  private val target = SwapDir.target(new Path(dir, name))
+  // where stores written before the HWM rode the install kept it
+  private val legacyHwm = new Path(dir, "_hwm")
+
+  private def fs(spark: SparkSession) =
+    target.current.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The committed batch id: the HWM inside the generation a reader
+    * would see, or the legacy beside-the-dir file, whichever is higher. */
+  def lastBatch(spark: SparkSession): Long = {
+    val f = fs(spark)
+    val riding = SwapDir.resolveForRead(f, target)
+      .map(d => Hwm.read(f, new Path(d, "_hwm"))).getOrElse(-1L)
+    math.max(riding, Hwm.read(f, legacyHwm))
   }
 
-  /** Write `df` as the new generation of `storeDir/name`. The previous
-    * generation moves to the aside and STAYS there (deferred reclaim —
-    * see the object doc). */
-  def install(spark: org.apache.spark.sql.SparkSession,
-              df: org.apache.spark.sql.DataFrame,
-              storeDir: String, name: String): Unit = {
-    val cur = current(storeDir, name)
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(storeDir, name + "__tmp")
-    fs.delete(tmp, true)
-    df.write.parquet(tmp.toString)
-    val old = aside(storeDir, name)
-    fs.delete(old, true)
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new IllegalStateException(s"$name install: cannot move aside")
-    if (!fs.rename(tmp, cur)) {
-      if (fs.exists(old)) fs.rename(old, cur)
-      throw new IllegalStateException(s"$name install: cannot install")
+  def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val f = fs(spark)
+    SwapDir.recover(f, target)
+    if (!Hwm.replayGuard(batchId, lastBatch(spark), label))
+      return // committed replay: skip
+    val merged =
+      if (f.exists(target.current))
+        merge(spark.read.parquet(target.current.toString), fresh(batch))
+      else fresh(batch)
+    SwapDir.install(f, target) { tmp =>
+      merged.write.parquet(tmp.toString)
+      Hwm.write(f, new Path(tmp, "_hwm"), batchId)
     }
+    f.delete(legacyHwm, false) // superseded by the riding HWM
     ()
   }
+
+  /** The resident relation (empty when nothing has arrived). */
+  def read(spark: SparkSession): DataFrame =
+    SwapDir.resolveForRead(fs(spark), target) match {
+      case Some(d) => spark.read.parquet(d.toString)
+      case None => spark.emptyDataFrame.select(schema: _*).limit(0)
+    }
 }
 
 /** Shared guard for the maintenance folds ([[StreamingDedup.compactIndex]],

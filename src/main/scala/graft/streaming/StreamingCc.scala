@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Cut.CutOps
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -51,13 +51,11 @@ object StreamingCc {
   private def labelsRoot(cfg: Config) = new Path(cfg.storeDir, "labels")
   private def aliasDir(cfg: Config) = new Path(cfg.storeDir, "aliases")
 
-  /** Crash recovery for [[compact]]'s aside-rename: a death between the
-    * two renames leaves labels__old but no labels — without this, every
-    * reader would silently see an EMPTY store and the next merge would
-    * discard the entire component history. The mechanics are the shared
-    * [[SwapDir]] contract (writers heal; readers never do). */
-  private def recoverLabels(fs: FileSystem, cfg: Config): Unit =
-    SwapDir.recover(fs, cfg.storeDir, "labels")
+  /** [[compact]]'s swap paths. A death between the two renames leaves
+    * labels__old but no labels: writers [[SwapDir.recover]] it before
+    * anything else (or the next merge would discard the entire
+    * component history), readers serve it without renaming. */
+  private def labelsTarget(cfg: Config) = SwapDir.target(labelsRoot(cfg))
 
   /** Transitive closure of the alias relation: (old_root, final_root).
     * Runs entirely on the merge-event-sized relation. */
@@ -114,7 +112,7 @@ object StreamingCc {
     val spark = batch.sparkSession
     val fs = labelsRoot(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverLabels(fs, cfg)
+    SwapDir.recover(fs, labelsTarget(cfg))
     val pairs = batch.select(col("id_a").cast("long"),
         col("id_b").cast("long"))
       .filter(col("id_a") =!= col("id_b"))
@@ -205,11 +203,12 @@ object StreamingCc {
   def resolved(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = labelsRoot(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverLabels(fs, cfg)
-    if (!fs.exists(labelsRoot(cfg)))
-      return spark.emptyDataFrame
+    val labelsDir = SwapDir.resolveForRead(fs, labelsTarget(cfg)) match {
+      case Some(d) => d
+      case None => return spark.emptyDataFrame
         .select(lit(0L).as("node"), lit(0L).as("root")).limit(0)
-    val labels = spark.read.parquet(labelsRoot(cfg).toString)
+    }
+    val labels = spark.read.parquet(labelsDir.toString)
       .select(col("node"), col("root0")).distinct()
     val closure =
       if (fs.exists(aliasDir(cfg)))
@@ -236,25 +235,15 @@ object StreamingCc {
   def compact(spark: SparkSession, cfg: Config): Unit = {
     val fs = labelsRoot(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverLabels(fs, cfg)
+    SwapDir.recover(fs, labelsTarget(cfg))
     if (!fs.exists(labelsRoot(cfg)) || !fs.exists(aliasDir(cfg))) return
     val folded = resolved(spark, cfg)
       .select(col("node"), col("root").as("root0"),
         pmod(col("node"), lit(cfg.buckets.toLong)).cast("int")
           .as("bucket"))
-    val tmp = new Path(cfg.storeDir, "labels__tmp")
-    fs.delete(tmp, true)
-    folded.write.mode("overwrite").partitionBy("bucket")
-      .parquet(tmp.toString)
-    val old = new Path(cfg.storeDir, "labels__old")
-    fs.delete(old, true)
-    if (!fs.rename(labelsRoot(cfg), old))
-      throw new IllegalStateException("cc compact: cannot move labels")
-    if (!fs.rename(tmp, labelsRoot(cfg))) {
-      fs.rename(old, labelsRoot(cfg))
-      throw new IllegalStateException("cc compact: cannot install labels")
+    SwapDir.install(fs, labelsTarget(cfg)) { tmp =>
+      folded.write.partitionBy("bucket").parquet(tmp.toString)
     }
-    fs.delete(old, true)
     fs.delete(aliasDir(cfg), true)
     ()
   }

@@ -59,6 +59,9 @@ object StreamingCommunities {
   private val refreshLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  private def labelsTarget(cfg: StreamingRank.Config) =
+    SwapDir.target(new org.apache.hadoop.fs.Path(cfg.storeDir, "labels"))
+
   def refresh(spark: SparkSession, cfg: StreamingRank.Config,
               rounds: Int = 4, warmStart: Boolean = false): Unit =
     refreshLocks.computeIfAbsent(cfg.storeDir, _ => new Object)
@@ -69,7 +72,7 @@ object StreamingCommunities {
       rounds: Int, warmStart: Boolean): Unit = {
     val store = new org.apache.hadoop.fs.Path(cfg.storeDir)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.storeDir, "labels")
+    SwapDir.recover(fs, labelsTarget(cfg))
     val pairs = StreamingRank.edges(spark, cfg)
     if (pairs.isEmpty) return
     val prev = communities(spark, cfg)
@@ -118,7 +121,9 @@ object StreamingCommunities {
         (math.min(ph.length, nh.length).toLong, shared.size.toLong,
           footrule)
       }
-      SwapDir.install(spark, next, cfg.storeDir, "labels")
+      SwapDir.install(fs, labelsTarget(cfg)) { tmp =>
+        next.write.parquet(tmp.toString)
+      }
       driftRow.foreach { r =>
         import spark.implicits._
         // max(refresh_seq)+1 over the same bounded read (r14 ask #8):
@@ -184,7 +189,7 @@ object StreamingCommunities {
                   cfg: StreamingRank.Config): DataFrame = {
     val store = new org.apache.hadoop.fs.Path(cfg.storeDir)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.resolveForRead(fs, cfg.storeDir, "labels") match {
+    SwapDir.resolveForRead(fs, labelsTarget(cfg)) match {
       case Some(d) => spark.read.parquet(d.toString)
         .select(col("node"), col("label"))
       case None => spark.emptyDataFrame

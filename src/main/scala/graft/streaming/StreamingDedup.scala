@@ -123,10 +123,10 @@ object StreamingDedup {
       // first: a compaction that crashed mid-swap leaves the index
       // aside-renamed, and mistaking that for "no index yet" would
       // silently drop every cross-batch pair
-      graft.sink.Compaction.recover(spark, cfg.indexPath)
       val indexFs = new org.apache.hadoop.fs.Path(cfg.indexPath)
       val ifs = indexFs
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      SwapDir.recover(ifs, SwapDir.compactTarget(indexFs))
       // one-time upgrade of pre-batch_id layouts (mixed-depth leaves
       // would make partition discovery throw, wedging the stream)
       LegacyLayout.fold(ifs, indexFs)
@@ -172,7 +172,7 @@ object StreamingDedup {
     * skipping survives the fold; new batches (id > HWM > -1) land
     * beside the folded partition. Maintenance only — [[probeIndex]] is
     * correct (just slower) without it, and a crashed pass is healed by
-    * the `recover()` call on the ingest/probe paths. */
+    * the next ingest or compaction ([[SwapDir.recover]]). */
   /** Path-only convenience — compaction touches nothing but the index. */
   def compactIndex(spark: SparkSession, indexPath: String)
       : graft.sink.Compaction.CompactionResult =
@@ -181,9 +181,9 @@ object StreamingDedup {
 
   def compactIndex(spark: SparkSession, cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
-    graft.sink.Compaction.recover(spark, cfg.indexPath)
     val dir = new org.apache.hadoop.fs.Path(cfg.indexPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapDir.recover(fs, SwapDir.compactTarget(dir))
     if (!fs.exists(dir))
       return graft.sink.Compaction.CompactionResult(0, 0, 0L, 0L)
     def fileCount(): Int =
@@ -209,21 +209,10 @@ object StreamingDedup {
       .select(col("sid"), col("band"), col("band_key"), col("bucket"))
       .withColumn("batch_id", lit(-1L))
       .repartition(col("bucket")) // one file per bucket after the fold
-    val tmp = new org.apache.hadoop.fs.Path(
-      dir.getParent, dir.getName + "__compact_tmp")
-    fs.delete(tmp, true)
-    folded.write.partitionBy("batch_id", "bucket").parquet(tmp.toString)
-    CommittedFold.preserveInto(fs, uncommitted, tmp)
-    val old = new org.apache.hadoop.fs.Path(
-      dir.getParent, dir.getName + "__compact_old")
-    fs.delete(old, true)
-    if (!fs.rename(dir, old))
-      throw new IllegalStateException(s"compact: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // roll back
-      throw new IllegalStateException(s"compact: cannot install $tmp")
+    SwapDir.install(fs, SwapDir.compactTarget(dir)) { tmp =>
+      folded.write.partitionBy("batch_id", "bucket").parquet(tmp.toString)
+      CommittedFold.preserveInto(fs, uncommitted, tmp)
     }
-    fs.delete(old, true)
     val rows = spark.read.parquet(cfg.indexPath).count()
     graft.sink.Compaction.CompactionResult(before, fileCount(), 0L, rows)
   }

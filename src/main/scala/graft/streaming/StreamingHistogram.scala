@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -9,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * store for distribution monitoring (length drift, latency percentiles)
   * without re-scanning history: each micro-batch contributes its bounded
   * (bucket, count) aggregate, the resident relation is one additive merge
-  * + aside-rename swap per batch, and [[quantileBounds]] answers any
+  * + [[SwapStore]] install per batch, and [[quantileBounds]] answers any
   * percentile from the resident histogram with error ≤ one bucket width.
   *
   * This is the STREAMING face of the exact-quantile family: the batch
@@ -39,20 +38,17 @@ object StreamingHistogram {
       }
       .start()
 
-  private def hwmPath(cfg: Config) =
-    new Path(new Path(cfg.storeDir, "hist"), "_hwm")
+  // HWM is LOAD-BEARING: counts are additive, replays double-count.
+  private def store(cfg: Config) = new SwapStore(cfg.storeDir,
+    "hist", "streaming histogram",
+    fresh = bucketize(_, cfg),
+    merge = (resident, fresh) => resident.unionByName(fresh)
+      .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt")),
+    schema = Seq(lit(0L).as("bucket"), lit(0L).as("cnt")))
 
   private[streaming] def lastBatch(spark: SparkSession,
-                                   cfg: Config): Long = {
-    val fs = new Path(cfg.storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hwmPath(cfg))) -1L
-    else {
-      val in = fs.open(hwmPath(cfg))
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
+                                   cfg: Config): Long =
+    store(cfg).lastBatch(spark)
 
   /** Floor-division bucketing: `div` truncates toward zero, which would
     * make bucket 0 span (-width, width) and shift every negative bucket —
@@ -68,54 +64,14 @@ object StreamingHistogram {
           "THEN 1L ELSE 0L END)").as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
 
-  /** One-shot merge — the CLI / batch-job face of the foreachBatch sink
-    * (same HWM idempotence per batchId). */
-  def mergeBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit =
-    processBatch(batch, batchId, cfg)
-
-  private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      cfg: Config): Unit = {
-    val spark = batch.sparkSession
-    // HWM is LOAD-BEARING: counts are additive, replays double-count.
-    if (!Hwm.replayGuard(batchId, lastBatch(spark, cfg),
-        "streaming histogram")) return // committed replay: skip
-    val fs = new Path(cfg.storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.storeDir, "hist")
-    val hist = new Path(cfg.storeDir, "hist")
-    val fresh = bucketize(batch, cfg)
-    val merged =
-      if (fs.exists(hist))
-        spark.read.parquet(hist.toString)
-          .unionByName(fresh)
-          .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      else fresh
-    val tmp = new Path(cfg.storeDir, "hist__tmp")
-    fs.delete(tmp, true)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
-    val old = new Path(cfg.storeDir, "hist__old")
-    fs.delete(old, true)
-    if (fs.exists(hist) && !fs.rename(hist, old))
-      throw new IllegalStateException(s"hist swap: cannot move $hist")
-    if (!fs.rename(tmp, hist)) {
-      if (fs.exists(old)) fs.rename(old, hist) // roll back
-      throw new IllegalStateException(s"hist swap: cannot install $tmp")
-    }
-    fs.delete(old, true)
-    ()
-  }
+  /** Merge one batch (idempotent per batchId) — the foreachBatch sink,
+    * and the CLI's `hist-merge`. */
+  def processBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit =
+    store(cfg).processBatch(batch, batchId)
 
   /** The resident (bucket, cnt) relation. */
-  def read(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = new Path(cfg.storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.storeDir, "hist")
-    val hist = new Path(cfg.storeDir, "hist")
-    if (fs.exists(hist)) spark.read.parquet(hist.toString)
-    else spark.emptyDataFrame
-      .select(lit(0L).as("bucket"), lit(0L).as("cnt")).limit(0)
-  }
+  def read(spark: SparkSession, cfg: Config): DataFrame =
+    store(cfg).read(spark)
 
   /** Percentile BOUNDS from the resident histogram: for each pct the
     * owning bucket's [lo, hi] value range (rank semantics identical to

@@ -85,9 +85,9 @@ object StreamingIvf {
   def compactIndex(spark: org.apache.spark.sql.SparkSession, cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
     import org.apache.spark.sql.functions.{col, lit}
-    graft.sink.Compaction.recover(spark, cfg.indexPath)
     val dir = new org.apache.hadoop.fs.Path(cfg.indexPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapDir.recover(fs, SwapDir.compactTarget(dir))
     if (!fs.exists(dir))
       return graft.sink.Compaction.CompactionResult(0, 0, 0L, 0L)
     def fileCount(): Int =
@@ -114,21 +114,10 @@ object StreamingIvf {
       .select(cols: _*)
       .withColumn("batch_id", lit(-1L))
       .repartition(col("ivf_cell")) // one file per cell after the fold
-    val tmp = new org.apache.hadoop.fs.Path(
-      dir.getParent, dir.getName + "__compact_tmp")
-    fs.delete(tmp, true)
-    folded.write.partitionBy("batch_id", "ivf_cell").parquet(tmp.toString)
-    CommittedFold.preserveInto(fs, uncommitted, tmp)
-    val old = new org.apache.hadoop.fs.Path(
-      dir.getParent, dir.getName + "__compact_old")
-    fs.delete(old, true)
-    if (!fs.rename(dir, old))
-      throw new IllegalStateException(s"compact: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // roll back
-      throw new IllegalStateException(s"compact: cannot install $tmp")
+    SwapDir.install(fs, SwapDir.compactTarget(dir)) { tmp =>
+      folded.write.partitionBy("batch_id", "ivf_cell").parquet(tmp.toString)
+      CommittedFold.preserveInto(fs, uncommitted, tmp)
     }
-    fs.delete(old, true)
     val rows = spark.read.parquet(cfg.indexPath).count()
     graft.sink.Compaction.CompactionResult(before, fileCount(), 0L, rows)
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Sketches
@@ -18,8 +18,9 @@ import graft.operators.Sketches
   * slot UNION, which is IDEMPOTENT — a replayed batch re-unions the same
   * hashes and changes nothing, so the sketch is correct with no
   * coordination at all. The high-water batch id kept here only skips the
-  * wasted merge work on replay (and the swap is the same aside-rename
-  * scheme, so a crash leaves the old or the new sketch, never a mix).
+  * wasted merge work on replay (and the install is the same
+  * [[SwapStore]] swap, so a crash leaves the old or the new sketch,
+  * never a mix).
   */
 object StreamingKmv {
 
@@ -35,60 +36,23 @@ object StreamingKmv {
       }
       .start()
 
-  private def hwmPath(cfg: Config) = new Path(cfg.sketchDir, "_hwm")
+  private def store(cfg: Config) = new SwapStore(cfg.sketchDir,
+    "slots", "streaming kmv",
+    fresh = Sketches.kmvSketch(_, cfg.k, cfg.groupCol, cfg.valueCol),
+    merge = Sketches.mergeKmv(cfg.k, _, _),
+    schema = Seq(lit("").as(cfg.groupCol),
+      array().cast("array<bigint>").as("hs")))
 
-  // tolerant read (shared Hwm helper): a torn HWM file degrades to -1 —
-  // safe here because the merge is idempotent (max/union), so a replayed
-  // batch re-merging is a no-op, never a double count
   private[streaming] def lastBatch(spark: org.apache.spark.sql.SparkSession,
                                    cfg: Config): Long =
-    Hwm.read(new Path(cfg.sketchDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), hwmPath(cfg))
+    store(cfg).lastBatch(spark)
 
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      cfg: Config): Unit = {
-    val spark = batch.sparkSession
-    if (!Hwm.replayGuard(batchId, lastBatch(spark, cfg),
-        "streaming kmv")) return // committed replay: skip
-    val fs = new Path(cfg.sketchDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.sketchDir, "slots")
-    val slots = new Path(cfg.sketchDir, "slots")
-    val fresh = Sketches.kmvSketch(batch, cfg.k, cfg.groupCol, cfg.valueCol)
-    val merged =
-      if (fs.exists(slots))
-        Sketches.mergeKmv(cfg.k,
-          spark.read.parquet(slots.toString), fresh)
-      else fresh
-    val tmp = new Path(cfg.sketchDir, "slots__tmp")
-    fs.delete(tmp, true)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(cfg.sketchDir, "slots__old")
-    fs.delete(old, true)
-    if (fs.exists(slots) && !fs.rename(slots, old))
-      throw new IllegalStateException(s"kmv swap: cannot move $slots")
-    if (!fs.rename(tmp, slots)) {
-      if (fs.exists(old)) fs.rename(old, slots) // roll back
-      throw new IllegalStateException(s"kmv swap: cannot install $tmp")
-    }
-    fs.delete(old, true)
-    Hwm.write(fs, hwmPath(cfg), batchId)
-  }
+                                      cfg: Config): Unit =
+    store(cfg).processBatch(batch, batchId)
 
   /** The resident sketch (empty relation when nothing has arrived). */
   def read(spark: org.apache.spark.sql.SparkSession,
-           cfg: Config): DataFrame = {
-    val fs = new Path(cfg.sketchDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.sketchDir, "slots")
-    val slots = new Path(cfg.sketchDir, "slots")
-    if (fs.exists(slots)) spark.read.parquet(slots.toString)
-    else {
-      import org.apache.spark.sql.functions._
-      spark.emptyDataFrame
-        .select(lit("").as(cfg.groupCol),
-          array().cast("array<bigint>").as("hs"))
-        .limit(0)
-    }
-  }
+           cfg: Config): DataFrame =
+    store(cfg).read(spark)
 }

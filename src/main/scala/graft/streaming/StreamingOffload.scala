@@ -112,16 +112,6 @@ object StreamingOffload {
         case _ => None // missing, torn, or stale: recount
       }
     }
-    def writeRows(snap: Long, total: Long): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(
-        rowsPath.getParent, rowsPath.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$snap:$total".getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(rowsPath, false)
-      if (!fs.rename(tmp, rowsPath))
-        throw new IllegalStateException(s"rows sidecar: cannot install $tmp")
-    }
 
     val markerHwm = previous
       .filter(_.pendingChunkKeys == Seq(cfg.hwmColumn))
@@ -189,6 +179,6 @@ object StreamingOffload {
       snapshotId = Some(batchId)))
     // running total AFTER the commit — a crash in between leaves a
     // sidecar bound to the OLD snapshot, detected and re-counted once
-    writeRows(batchId, preRows + batchRows)
+    Hwm.write(fs, rowsPath, s"$batchId:${preRows + batchRows}")
   }
 }

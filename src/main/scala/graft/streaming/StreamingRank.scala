@@ -53,7 +53,10 @@ object StreamingRank {
       dampingPct: Int = 85)
 
   private def edgesDir(cfg: Config) = new Path(cfg.storeDir, "edges")
-  private def ranksDir(cfg: Config) = new Path(cfg.storeDir, "ranks")
+  private def ranksTarget(cfg: Config) =
+    SwapDir.target(new Path(cfg.storeDir, "ranks"))
+  /** [[compactEdges]]' swap paths (`edges__compact_tmp`/`_old`). */
+  private def edgesTarget(cfg: Config) = SwapDir.compactTarget(edgesDir(cfg))
   private def hwmPath(cfg: Config) =
     new Path(cfg.storeDir, "edges__hwm")
   private def bucketsPath(cfg: Config) =
@@ -107,9 +110,9 @@ object StreamingRank {
     if (!Hwm.replayGuard(batchId, lastBatch(spark, cfg),
         "streaming rank")) return // committed replay: skip
     if (batch.isEmpty) return // new but empty: no write, HWM unchanged
-    graft.sink.Compaction.recover(spark, edgesDir(cfg).toString)
     val fs = edgesDir(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapDir.recover(fs, edgesTarget(cfg))
     val nBuckets = effectiveBuckets(fs, cfg)
     val fresh = batch
       .select(least(col("id_a"), col("id_b")).cast("long").as("a"),
@@ -146,15 +149,15 @@ object StreamingRank {
   /** The committed canonical edge set (uncommitted partitions — a batch
     * that crashed before its HWM — excluded; the replay rewrites them). */
   def edges(spark: SparkSession, cfg: Config): DataFrame = {
-    graft.sink.Compaction.recover(spark, edgesDir(cfg).toString)
     val fs = edgesDir(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(edgesDir(cfg)))
-      return spark.emptyDataFrame
+    SwapDir.resolveForRead(fs, edgesTarget(cfg)) match {
+      case Some(d) => spark.read.parquet(d.toString)
+        .filter(col("batch_id").cast("long") <= lastBatch(spark, cfg))
+        .select(col("a"), col("b"))
+      case None => spark.emptyDataFrame
         .select(lit(0L).as("a"), lit(0L).as("b")).limit(0)
-    spark.read.parquet(edgesDir(cfg).toString)
-      .filter(col("batch_id").cast("long") <= lastBatch(spark, cfg))
-      .select(col("a"), col("b"))
+    }
   }
 
   /** Current rank relation `(node, rank_e6)`; empty before the first
@@ -163,9 +166,9 @@ object StreamingRank {
     * window serves the aside and must not rename it back mid-install);
     * a crash that LEAVES the aside is healed by the next writer. */
   def ranks(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = ranksDir(cfg)
+    val fs = ranksTarget(cfg).current
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.resolveForRead(fs, cfg.storeDir, "ranks") match {
+    SwapDir.resolveForRead(fs, ranksTarget(cfg)) match {
       case Some(d) => spark.read.parquet(d.toString)
         .select(col("node"), col("rank_e6"))
       case None => spark.emptyDataFrame
@@ -180,15 +183,15 @@ object StreamingRank {
     * the fixpoint sense — each call advances the iteration count; see
     * the class doc. */
   def refreshRanks(spark: SparkSession, cfg: Config): Unit = {
-    val fs = ranksDir(cfg)
+    val fs = ranksTarget(cfg).current
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapDir.recover(fs, cfg.storeDir, "ranks")
+    SwapDir.recover(fs, ranksTarget(cfg))
     val pairs = edges(spark, cfg)
     if (pairs.isEmpty) return
     val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
     val init =
-      if (fs.exists(ranksDir(cfg))) Some(ranks(spark, cfg))
+      if (fs.exists(ranksTarget(cfg).current)) Some(ranks(spark, cfg))
       else None
     val next = Graph.pageRankFrom(sym, init, cfg.iterations,
       cfg.dampingPct)
@@ -218,7 +221,9 @@ object StreamingRank {
         (math.min(pt.length, nt.length).toLong, shared.size.toLong,
           footrule)
       }
-      SwapDir.install(spark, next, cfg.storeDir, "ranks")
+      SwapDir.install(fs, ranksTarget(cfg)) { tmp =>
+        next.write.parquet(tmp.toString)
+      }
       // appended only AFTER a successful install: the advisory log never
       // references a generation that failed to land (a crash in between
       // loses one row, never corrupts the ranks)
@@ -269,9 +274,9 @@ object StreamingRank {
     * are preserved for their replay. */
   def compactEdges(spark: SparkSession, cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
-    graft.sink.Compaction.recover(spark, edgesDir(cfg).toString)
     val dir = edgesDir(cfg)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapDir.recover(fs, edgesTarget(cfg))
     if (!fs.exists(dir))
       return graft.sink.Compaction.CompactionResult(0, 0, 0L, 0L)
     def fileCount(): Int =
@@ -287,19 +292,10 @@ object StreamingRank {
     val folded = committed.select(col("a"), col("b"), col("bucket"))
       .withColumn("batch_id", lit(-1L))
       .repartition(col("bucket"))
-    val tmp = new Path(dir.getParent, dir.getName + "__compact_tmp")
-    fs.delete(tmp, true)
-    folded.write.partitionBy("batch_id", "bucket").parquet(tmp.toString)
-    CommittedFold.preserveInto(fs, uncommitted, tmp)
-    val old = new Path(dir.getParent, dir.getName + "__compact_old")
-    fs.delete(old, true)
-    if (!fs.rename(dir, old))
-      throw new IllegalStateException(s"compact: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir)
-      throw new IllegalStateException(s"compact: cannot install $tmp")
+    SwapDir.install(fs, edgesTarget(cfg)) { tmp =>
+      folded.write.partitionBy("batch_id", "bucket").parquet(tmp.toString)
+      CommittedFold.preserveInto(fs, uncommitted, tmp)
     }
-    fs.delete(old, true)
     val rows = spark.read.parquet(dir.toString).count()
     graft.sink.Compaction.CompactionResult(before, fileCount(), 0L, rows)
   }

@@ -58,21 +58,15 @@ object StreamingSampler {
       .getFileSystem(spark.sparkContext.hadoopConfiguration),
       hwmPath(cfg))
 
-  /** Crash-window recovery for [[compact]]'s aside-rename swap: a
-    * death between `rename(cur → old)` and `rename(tmp → cur)` leaves
-    * the only full state in `__old` — restore it BEFORE any existence
-    * check or read, or the next batch would restart every source's
-    * offset at zero (the [[SwapDir.recover]] contract). */
-  private def massExists(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config): Boolean = {
-    val fs = new Path(cfg.massPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(cfg.massPath)
-    val old = new Path(cfg.massPath + "__old")
-    if (!fs.exists(cur) && fs.exists(old) && !fs.rename(old, cur))
-      throw new IllegalStateException(s"sampler swap recovery: $old")
-    fs.exists(cur)
-  }
+  /** [[compact]]'s swap paths: `mass`, `mass__tmp`, `mass__old`. A
+    * death between the two renames leaves the only full state in
+    * `__old`; a batch [[SwapDir.recover]]s it before any existence check
+    * or read, or it would restart every source's offset at zero. */
+  private def massTarget(cfg: Config) =
+    SwapDir.target(new Path(cfg.massPath))
+
+  private def fs(spark: org.apache.spark.sql.SparkSession, cfg: Config) =
+    new Path(cfg.massPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Advisory lock serializing batch commits against [[compact]]'s
     * two-rename swap (r16 VERDICT ask #6): blocking, so a compact arriving
@@ -100,10 +94,11 @@ object StreamingSampler {
     if (batch.isEmpty) return
     import org.apache.spark.sql.expressions.Window
     val b = batch.select(col("source"), col("doc_id"), col("n_chars"))
+    SwapDir.recover(fs(spark, cfg), massTarget(cfg))
     // offsets = everyone ELSE's deltas (self-exclusion: a mid-crash
     // rerun must start where its first attempt started)
     val offsets: DataFrame =
-      if (massExists(spark, cfg))
+      if (fs(spark, cfg).exists(massTarget(cfg).current))
         spark.read.parquet(cfg.massPath)
           .filter(col("batch_id").cast("long") =!= batchId)
           .groupBy(col("source"))
@@ -161,15 +156,16 @@ object StreamingSampler {
       .limit(0)
   }
 
-  /** The per-source running char mass (the sampler's whole state). */
+  /** The per-source running char mass (the sampler's whole state).
+    * Renames nothing: mid-compact, the aside is served. */
   def offsets(spark: org.apache.spark.sql.SparkSession,
-              cfg: Config): DataFrame = {
-    if (massExists(spark, cfg))
-      spark.read.parquet(cfg.massPath)
+              cfg: Config): DataFrame =
+    SwapDir.resolveForRead(fs(spark, cfg), massTarget(cfg)) match {
+      case Some(d) => spark.read.parquet(d.toString)
         .groupBy(col("source")).agg(sum(col("mass")).as("mass"))
-    else spark.emptyDataFrame
-      .select(lit("").as("source"), lit(0L).as("mass")).limit(0)
-  }
+      case None => spark.emptyDataFrame
+        .select(lit("").as("source"), lit(0L).as("mass")).limit(0)
+    }
 
   /** Fold every COMMITTED per-batch mass delta into one
     * `batch_id = -1` partition (the *-compact discipline the dedup /
@@ -178,14 +174,14 @@ object StreamingSampler {
     * the running stream's self-exclusion (−1 never equals a real batch
     * id) and against replays (only batches ≤ the committed HWM fold —
     * an uncommitted partition from a mid-crash attempt stays in place
-    * for its rerun to overwrite). Same aside-rename swap + rollback as
+    * for its rerun to overwrite). The swap is [[SwapDir.install]], as for
     * every other store; the HWM file is a SIBLING of the swapped
     * directory and survives it.
     *
     * Concurrency: the whole compact (existence check through swap) runs
     * under the SAME advisory lock as every batch commit
     * ([[withStoreLock]]), so the non-atomic two-rename swap can never
-    * interleave with a processBatch's `__old` recovery rename — the race
+    * interleave with a processBatch's [[SwapDir.recover]] — the race
     * that previously had to be excluded by an operational "run between
     * batches" contract is now structurally impossible on one driver host
     * (`StreamingSamplerSpec` forces it and observes mutual exclusion). */
@@ -196,7 +192,8 @@ object StreamingSampler {
 
   private def compactLocked(spark: org.apache.spark.sql.SparkSession,
               cfg: Config): Unit = {
-    if (!massExists(spark, cfg)) return
+    SwapDir.recover(fs(spark, cfg), massTarget(cfg))
+    if (!fs(spark, cfg).exists(massTarget(cfg).current)) return
     val committed = lastBatch(spark, cfg)
     val all = spark.read.parquet(cfg.massPath)
     val fold = all.filter(col("batch_id").cast("long") <= committed)
@@ -207,21 +204,8 @@ object StreamingSampler {
       .unionByName(keep
         .select(col("source"), col("mass"),
           col("batch_id").cast("long").as("batch_id")))
-    val fs = new Path(cfg.massPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(cfg.massPath + "__tmp")
-    fs.delete(tmp, true)
-    merged.write.mode("overwrite").partitionBy("batch_id")
-      .parquet(tmp.toString)
-    val old = new Path(cfg.massPath + "__old")
-    fs.delete(old, true)
-    if (!fs.rename(new Path(cfg.massPath), old))
-      throw new IllegalStateException("sampler compact: cannot move")
-    if (!fs.rename(tmp, new Path(cfg.massPath))) {
-      fs.rename(old, new Path(cfg.massPath)) // roll back
-      throw new IllegalStateException("sampler compact: cannot install")
+    SwapDir.install(fs(spark, cfg), massTarget(cfg)) { tmp =>
+      merged.write.partitionBy("batch_id").parquet(tmp.toString)
     }
-    fs.delete(old, true)
-    ()
   }
 }

@@ -60,41 +60,17 @@ object StreamingScd {
       .start()
 
   private def runsRoot(cfg: Config) = new Path(cfg.storeDir, "runs")
-  private def bucketDir(cfg: Config, b: Int) =
-    new Path(runsRoot(cfg), s"bucket=$b")
-  /** Aside dirs live OUTSIDE the partitioned root so partition discovery
-    * never sees a half-swapped directory as a phantom bucket value. */
-  private def tmpDir(cfg: Config, b: Int) =
-    new Path(cfg.storeDir, s"tmp_bucket_$b")
-  private def oldDir(cfg: Config, b: Int) =
-    new Path(cfg.storeDir, s"old_bucket_$b")
+  /** Bucket `b`'s swap paths. The temp and aside live OUTSIDE the
+    * partitioned root so partition discovery never sees a half-swapped
+    * directory as a phantom bucket value. */
+  private def bucketTarget(cfg: Config, b: Int) = SwapDir.Target(
+    new Path(runsRoot(cfg), s"bucket=$b"),
+    new Path(cfg.storeDir, s"tmp_bucket_$b"),
+    new Path(cfg.storeDir, s"old_bucket_$b"))
 
-  private[streaming] def recoverBucket(fs: FileSystem, cfg: Config,
-                                       b: Int): Unit = {
-    val cur = bucketDir(cfg, b)
-    val old = oldDir(cfg, b)
-    if (!fs.exists(cur) && fs.exists(old) && !fs.rename(old, cur))
-      throw new IllegalStateException(s"scd swap recovery failed: $old")
-  }
-
-  private[streaming] def bucketHwm(fs: FileSystem, cfg: Config,
-                                   b: Int): Long = {
-    val p = new Path(bucketDir(cfg, b), "_hwm")
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** One-shot merge of a batch of change events — the CLI / batch-job
-    * face of the foreachBatch sink (same HWM idempotence per batchId). */
-  def mergeBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit =
-    processBatch(batch, batchId, cfg)
-
-  private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      cfg: Config): Unit = {
+  /** Merge one batch of change events (idempotent per batchId) — the
+    * foreachBatch sink, and the CLI's `scd-merge`. */
+  def processBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val fs = runsRoot(cfg)
@@ -113,16 +89,16 @@ object StreamingScd {
     val touched = ev.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).sorted
     touched.foreach { b =>
-      recoverBucket(fs, cfg, b)
+      val t = bucketTarget(cfg, b)
+      SwapDir.recover(fs, t)
       // Per-bucket HWM: a replayed batch skips buckets it already
       // installed (a crash mid-batch installs a prefix; the rest merge
       // on retry — each bucket merges this batch exactly once).
-      if (bucketHwm(fs, cfg, b) < batchId) {
+      if (Hwm.read(fs, new Path(t.current, "_hwm")) < batchId) {
         val slice = ev.filter(col("bucket") === b).drop("bucket")
-        val cur = bucketDir(cfg, b)
         val (merged, late) =
-          if (fs.exists(cur)) {
-            val resident = spark.read.parquet(cur.toString)
+          if (fs.exists(t.current)) {
+            val resident = spark.read.parquet(t.current.toString)
             val (inOrder, lateEv) = Scd.lateSplit(resident, slice)
             (Scd.merge(resident, inOrder), lateEv)
           } else (Scd.runs(slice), slice.limit(0))
@@ -133,40 +109,38 @@ object StreamingScd {
         if (!late.isEmpty)
           lateRows.write.mode("append")
             .parquet(new Path(cfg.storeDir, "late").toString)
-        val tmp = tmpDir(cfg, b)
-        fs.delete(tmp, true)
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
-        val old = oldDir(cfg, b)
-        fs.delete(old, true)
-        if (fs.exists(cur) && !fs.rename(cur, old))
-          throw new IllegalStateException(s"scd swap: cannot move $cur")
-        if (!fs.rename(tmp, cur)) {
-          if (fs.exists(old)) fs.rename(old, cur) // roll back
-          throw new IllegalStateException(s"scd swap: cannot install $tmp")
+        SwapDir.install(fs, t) { tmp =>
+          merged.write.parquet(tmp.toString)
+          Hwm.write(fs, new Path(tmp, "_hwm"), batchId)
         }
-        fs.delete(old, true)
-        ()
       }
     }
   }
 
   /** The resident dimension (all buckets; empty-schema frame when no
-    * batch has arrived). */
+    * batch has arrived). Renames nothing: a bucket caught between its
+    * swap renames is served from its aside. */
   def read(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = runsRoot(cfg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (0 until cfg.buckets).foreach(recoverBucket(fs, cfg, _))
-    if (fs.exists(runsRoot(cfg)))
-      spark.read.parquet(runsRoot(cfg).toString)
-    else
+    val live =
+      if (fs.exists(runsRoot(cfg)) && fs.listStatus(runsRoot(cfg))
+          .exists(_.getPath.getName.startsWith("bucket=")))
+        Seq(spark.read.parquet(runsRoot(cfg).toString))
+      else Nil
+    val asides = (0 until cfg.buckets).flatMap { b =>
+      val t = bucketTarget(cfg, b)
+      SwapDir.resolveForRead(fs, t).filter(_ == t.aside)
+        .map(d => spark.read.parquet(d.toString).withColumn("bucket", lit(b)))
+    }
+    (live ++ asides).reduceOption(_ unionByName _).getOrElse(
       spark.emptyDataFrame
         .select(lit(0L).as("user_id"), lit(0L).as("run_id"),
           lit("").as("tier"), lit(0L).as("eff_from_us"),
           lit(null).cast("long").as("eff_to_us"), lit(0L).as("n_events"),
           lit(0L).as("last_us"), lit(0L).as("last_eid"),
           lit(0L).as("is_current"), lit(0).as("bucket"))
-        .limit(0)
+        .limit(0))
   }
 
   /** One key's version history — prunes to a single bucket (the point of

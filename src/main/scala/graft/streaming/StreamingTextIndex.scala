@@ -69,21 +69,29 @@ object StreamingTextIndex {
     Hwm.read(new Path(cfg.totalsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), hwmPath(cfg))
 
+  private def totalsRoot(cfg: Config) =
+    new Path(cfg.totalsPath, "totals").toString
+
+  /** [[compact]]'s swap paths for one root (`__compact_tmp`/`_old`). */
+  private def target(root: String) = SwapDir.compactTarget(new Path(root))
+
+  /** The generation of `root` a reader should scan: the root, or its
+    * aside while a fold is between its two renames. Renames nothing. */
+  private def resolve(spark: SparkSession, root: String): Option[String] =
+    SwapDir.resolveForRead(new Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), target(root))
+      .map(_.toString)
+
   private[streaming] def readTotals(spark: SparkSession,
-                                    cfg: Config): (Long, Long) = {
-    val fs = new Path(cfg.totalsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sink.Compaction.recover(spark,
-      new Path(cfg.totalsPath, "totals").toString)
-    val t = new Path(cfg.totalsPath, "totals")
-    if (!fs.exists(t)) (0L, 0L)
-    else {
-      val r = spark.read.parquet(t.toString)
-        .agg(sum(col("n_docs")), sum(col("corpus_len"))).head()
-      (Option(r.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-       Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
+                                    cfg: Config): (Long, Long) =
+    resolve(spark, totalsRoot(cfg)) match {
+      case None => (0L, 0L)
+      case Some(t) =>
+        val r = spark.read.parquet(t)
+          .agg(sum(col("n_docs")), sum(col("corpus_len"))).head()
+        (Option(r.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
+         Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
     }
-  }
 
   /** Batch-scoped dynamic-overwrite writer: rewrites only this batch's
     * partitions, making a (partial-)replay a clean rewrite. */
@@ -102,10 +110,9 @@ object StreamingTextIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crashed compact left the root aside-renamed: restore BEFORE any
     // write, or the fresh root would shadow the old data and the next
-    // recover() would drop it
-    Seq(cfg.indexPath, cfg.lengthsPath,
-      new Path(cfg.totalsPath, "totals").toString)
-      .foreach(graft.sink.Compaction.recover(spark, _))
+    // install would reclaim it
+    Seq(cfg.indexPath, cfg.lengthsPath, totalsRoot(cfg))
+      .foreach(root => SwapDir.recover(fs, target(root)))
     if (!batch.isEmpty) {
       writeBatchPartitions(
         postings(batch, cfg).withColumn("batch_id", lit(batchId)),
@@ -121,7 +128,7 @@ object StreamingTextIndex {
         Seq((agg.getLong(0),
           Option(agg.getAs[Long]("l")).getOrElse(0L), batchId))
           .toDF("n_docs", "corpus_len", "batch_id"),
-        Seq("batch_id"), new Path(cfg.totalsPath, "totals").toString)
+        Seq("batch_id"), totalsRoot(cfg))
     }
     Hwm.write(fs, hwmPath(cfg), batchId)
   }
@@ -130,10 +137,9 @@ object StreamingTextIndex {
   private[streaming] def prunedPostings(spark: SparkSession, cfg: Config,
                                         terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    graft.sink.Compaction.recover(spark, cfg.indexPath)
     val buckets = terms.toDF("term").select(bucketCol(cfg.termBuckets))
       .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(cfg.indexPath)
+    spark.read.parquet(resolve(spark, cfg.indexPath).getOrElse(cfg.indexPath))
       .filter(col("bucket").isInCollection(buckets) &&
         col("term").isin(terms: _*))
   }
@@ -151,9 +157,10 @@ object StreamingTextIndex {
     * Replay-safe: the high-water mark rides `_hwm` BESIDE the swapped
     * `totals` directory and is untouched, so a replayed batch id still
     * skips; new batches (id > HWM > -1) write their own partitions and
-    * never collide with the folded one. Crash-safe by the standard
-    * aside-rename swap; readers call [[graft.sink.Compaction.recover]]
-    * first, so an interrupted fold can never make the index look empty. */
+    * never collide with the folded one. Crash-safe by one
+    * [[SwapDir.install]] per root; readers resolve to the aside while a
+    * fold is between its renames, so an interrupted fold can never make
+    * the index look empty, and the next batch or fold heals it. */
   def compact(spark: SparkSession, cfg: Config): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     // fold ONLY committed batches (id <= HWM; negative migrated/folded
@@ -163,28 +170,18 @@ object StreamingTextIndex {
     // it into -1 would double its postings once the replay lands
     val hwm = lastBatch(spark, cfg)
     def swapIn(root: String)(write: String => Unit): Unit = {
-      graft.sink.Compaction.recover(spark, root)
       val dir = new Path(root)
       val fs = dir.getFileSystem(hc)
+      SwapDir.recover(fs, target(root))
       if (!fs.exists(dir)) return
       val uncommitted = CommittedFold.uncommittedDirs(fs, dir, hwm)
       if (uncommitted.length == fs.listStatus(dir).count(st =>
           CommittedFold.batchIdOf(st.getPath.getName).isDefined))
         return // nothing committed to fold
-      val tmp = new Path(dir.getParent, dir.getName + "__compact_tmp")
-      val old = new Path(dir.getParent, dir.getName + "__compact_old")
-      fs.delete(tmp, true)
-      write(tmp.toString)
-      CommittedFold.preserveInto(fs, uncommitted, tmp)
-      fs.delete(old, true)
-      if (!fs.rename(dir, old))
-        throw new IllegalStateException(s"compact: cannot move $dir aside")
-      if (!fs.rename(tmp, dir)) {
-        fs.rename(old, dir) // roll back
-        throw new IllegalStateException(s"compact: cannot install $tmp")
+      SwapDir.install(fs, target(root)) { tmp =>
+        write(tmp.toString)
+        CommittedFold.preserveInto(fs, uncommitted, tmp)
       }
-      fs.delete(old, true)
-      ()
     }
     def committed(root: String) =
       spark.read.parquet(root).filter(col("batch_id").cast("long") <= hwm)
@@ -202,8 +199,8 @@ object StreamingTextIndex {
         .repartition(col("doc_id")) // file sizing via shuffle.partitions
         .write.partitionBy("batch_id").parquet(tmp)
     }
-    swapIn(new Path(cfg.totalsPath, "totals").toString) { tmp =>
-      committed(new Path(cfg.totalsPath, "totals").toString)
+    swapIn(totalsRoot(cfg)) { tmp =>
+      committed(totalsRoot(cfg))
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("corpus_len")).as("corpus_len"))
         .withColumn("batch_id", lit(-1L))
@@ -224,8 +221,8 @@ object StreamingTextIndex {
       .select(col("doc_id"), col("term"), col("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val (nDocs, corpusLen) = readTotals(spark, cfg)
-    graft.sink.Compaction.recover(spark, cfg.lengthsPath)
-    val lens = spark.read.parquet(cfg.lengthsPath)
+    val lens = spark.read
+      .parquet(resolve(spark, cfg.lengthsPath).getOrElse(cfg.lengthsPath))
       .select(col("doc_id"), col("dl"))
     TextAnalysis.bm25ScoreTopK(
       tf.join(broadcast(dfreq), "term")

@@ -81,8 +81,11 @@ class StreamingDayStatsSpec extends SparkSpec {
     val days = new org.apache.hadoop.fs.Path(s"$base/days/days")
     val old = new org.apache.hadoop.fs.Path(s"$base/days/days__old")
     assert(fs.rename(days, old))
-    // read() must roll the aside copy back — data AND its riding HWM
+    // read() must serve the aside copy — data AND its riding HWM —
+    // without renaming it back
     assert(daysOf(StreamingDayStats.read(spark, c)) === before)
+    assert(!fs.exists(days) && fs.exists(old),
+      "a reader must never rename the aside back")
     assert(StreamingDayStats.lastBatch(spark, c) === 0L)
     // and processing resumes where it left off
     StreamingDayStats.processBatch(

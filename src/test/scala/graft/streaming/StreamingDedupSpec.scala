@@ -167,6 +167,10 @@ class StreamingDedupSpec extends SparkSpec {
     // rather than probing "no index" and silently dropping pairs
     val fs = new org.apache.hadoop.fs.Path(c.indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the compaction above kept its aside; an install reclaims it right
+    // before its first rename, so the crash state has only this aside
+    fs.delete(new org.apache.hadoop.fs.Path(c.indexPath + "__compact_old"),
+      true)
     assert(fs.rename(new org.apache.hadoop.fs.Path(c.indexPath),
       new org.apache.hadoop.fs.Path(c.indexPath + "__compact_old")))
     StreamingDedup.processBatch(

@@ -50,6 +50,54 @@ class StreamingHistogramSpec extends SparkSpec {
     assert(after === docs.count())
   }
 
+  private def fsOf(c: StreamingHistogram.Config) =
+    new org.apache.hadoop.fs.Path(c.storeDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def same(got: DataFrame, want: DataFrame): Boolean =
+    got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty
+
+  test("a crash between the swap renames: the read serves the aside " +
+      "and leaves it in place; the next batch recovers it") {
+    val c = cfg()
+    StreamingHistogram.processBatch(docs, 0L, c)
+    val cur = new org.apache.hadoop.fs.Path(c.storeDir, "hist")
+    val aside = new org.apache.hadoop.fs.Path(c.storeDir, "hist__old")
+    val fs = fsOf(c)
+    assert(fs.rename(cur, aside))
+    assert(same(StreamingHistogram.read(spark, c),
+      StreamingHistogram.bucketize(docs, c)))
+    assert(!fs.exists(cur) && fs.exists(aside),
+      "a reader must never rename the aside back")
+    assert(StreamingHistogram.lastBatch(spark, c) === 0L)
+    StreamingHistogram.processBatch(docs, 1L, c)
+    assert(StreamingHistogram.read(spark, c)
+      .agg(sum(col("cnt"))).head.getLong(0) === 2 * docs.count())
+  }
+
+  test("a read inside a writer's rename window cannot lose the batch") {
+    val c = cfg()
+    val b0 = docs.filter(col("doc_id") % 2 === 0)
+    val b1 = docs.filter(col("doc_id") % 2 === 1)
+    StreamingHistogram.processBatch(b0, 0L, c)
+    val cur = new org.apache.hadoop.fs.Path(c.storeDir, "hist")
+    val tmp = new org.apache.hadoop.fs.Path(c.storeDir, "hist__tmp")
+    val fs = fsOf(c)
+    // batch 1's writer between its two renames: the temp holds batch
+    // 0+1 with its riding HWM, and the resident moved aside
+    StreamingHistogram.bucketize(b0.unionByName(b1), c)
+      .write.parquet(tmp.toString)
+    Hwm.write(fs, new org.apache.hadoop.fs.Path(tmp, "_hwm"), 1L)
+    assert(fs.rename(cur,
+      new org.apache.hadoop.fs.Path(c.storeDir, "hist__old")))
+    StreamingHistogram.read(spark, c).count() // a reader lands here
+    assert(fs.rename(tmp, cur)) // the writer's install rename
+    assert(same(StreamingHistogram.read(spark, c),
+      StreamingHistogram.bucketize(docs, c)))
+    assert(StreamingHistogram.lastBatch(spark, c) === 1L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(cur, "hist__tmp")))
+  }
+
   test("quantile bounds bracket the exact batch quantiles") {
     val c = cfg()
     StreamingHistogram.processBatch(docs, 0L, c)

@@ -59,9 +59,35 @@ class StreamingHllSpec extends SparkSpec {
     assert(fs.rename(
       new org.apache.hadoop.fs.Path(c.sketchDir, "registers"),
       new org.apache.hadoop.fs.Path(c.sketchDir, "registers__old")))
-    // both the read path and the next batch must restore history first
+    // the read serves the aside and leaves it in place; the next batch
+    // restores history first
+    assert(regs(StreamingHll.read(spark, c)) == regs(oneShot(b1)))
+    assert(!fs.exists(
+      new org.apache.hadoop.fs.Path(c.sketchDir, "registers")) &&
+      fs.exists(
+        new org.apache.hadoop.fs.Path(c.sketchDir, "registers__old")),
+      "a reader must never rename the aside back")
+    StreamingHll.processBatch(b2, 1L, c)
+    assert(regs(StreamingHll.read(spark, c)) ==
+      regs(oneShot(b1.unionByName(b2))))
+  }
+
+  test("an HWM beside the registers dir (the older layout) still " +
+      "guards replays; the next install moves it inside") {
+    val base = Files.createTempDirectory("shll_legacy").toString
+    val c = cfg(base)
+    val b1 = Seq(SrcDoc("web", "alpha")).toDF()
+    val b2 = Seq(SrcDoc("web", "delta")).toDF()
+    StreamingHll.processBatch(b1, 0L, c)
+    val inside = new org.apache.hadoop.fs.Path(c.sketchDir, "registers/_hwm")
+    val beside = new org.apache.hadoop.fs.Path(c.sketchDir, "_hwm")
+    val fs = inside.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(inside, beside))
+    assert(StreamingHll.lastBatch(spark, c) === 0L)
+    StreamingHll.processBatch(b2, 0L, c) // committed replay: skipped
     assert(regs(StreamingHll.read(spark, c)) == regs(oneShot(b1)))
     StreamingHll.processBatch(b2, 1L, c)
+    assert(Hwm.read(fs, inside) === 1L && !fs.exists(beside))
     assert(regs(StreamingHll.read(spark, c)) ==
       regs(oneShot(b1.unionByName(b2))))
   }

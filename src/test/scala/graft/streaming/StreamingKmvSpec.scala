@@ -42,6 +42,27 @@ class StreamingKmvSpec extends SparkSpec {
     assert(est == Map("web" -> 3L, "book" -> 2L))
   }
 
+  test("a crash between the swap renames: the read serves the aside " +
+      "and leaves it in place; the next batch recovers it") {
+    val base = Files.createTempDirectory("skmv_crash").toString
+    val c = cfg(base)
+    val b1 = Seq(SrcDoc("web", "alpha"), SrcDoc("book", "gamma")).toDF()
+    val b2 = Seq(SrcDoc("web", "delta")).toDF()
+    StreamingKmv.processBatch(b1, 0L, c)
+    val cur = new org.apache.hadoop.fs.Path(c.sketchDir, "slots")
+    val aside = new org.apache.hadoop.fs.Path(c.sketchDir, "slots__old")
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(cur, aside))
+    assert(slots(StreamingKmv.read(spark, c)) ==
+      slots(Sketches.kmvSketch(b1, 8)))
+    assert(!fs.exists(cur) && fs.exists(aside),
+      "a reader must never rename the aside back")
+    assert(StreamingKmv.lastBatch(spark, c) === 0L)
+    StreamingKmv.processBatch(b2, 1L, c)
+    assert(slots(StreamingKmv.read(spark, c)) ==
+      slots(Sketches.kmvSketch(b1.unionByName(b2), 8)))
+  }
+
   test("streaming end-to-end over MemoryStream") {
     val base = Files.createTempDirectory("skmv_e2e").toString
     val c = cfg(base)

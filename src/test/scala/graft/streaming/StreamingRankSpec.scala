@@ -211,6 +211,25 @@ class StreamingRankSpec extends SparkSpec {
       "next refresh must reclaim the stale aside, not accumulate")
   }
 
+  test("edges inside a compaction's rename window serve the aside and " +
+      "leave it in place; the next ingest recovers it") {
+    val c = cfg(Files.createTempDirectory("srank_edgeswap").toString)
+    StreamingRank.ingestBatch(batch0.toDF(), 0L, c)
+    val cur = new org.apache.hadoop.fs.Path(s"${c.storeDir}/edges")
+    val aside =
+      new org.apache.hadoop.fs.Path(s"${c.storeDir}/edges__compact_old")
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(cur, aside))
+    def stored() = StreamingRank.edges(spark, c).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(stored() === Set((1L, 2L), (2L, 3L), (1L, 3L)))
+    assert(!fs.exists(cur) && fs.exists(aside),
+      "a reader must never rename the aside back")
+    StreamingRank.ingestBatch(batch1.toDF(), 1L, c)
+    assert(stored() ===
+      Set((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)))
+  }
+
   test("continuous centrality: StreamingDedup's pair stream feeds " +
       "StreamingRank — ranks equal batch PageRank of the accumulated " +
       "candidate graph") {

@@ -115,6 +115,29 @@ class StreamingSamplerSpec extends SparkSpec {
         SampDoc("b", 11L, 40L)), 100L))
   }
 
+  test("offsets inside a compact's rename window serve the aside and " +
+      "leave it in place; the next batch recovers it") {
+    val base = Files.createTempDirectory("ssamp_swap").toString
+    val c = cfg(base)
+    StreamingSampler.processBatch(
+      Seq(SampDoc("a", 1L, 60L)).toDF(), 0L, c)
+    val cur = new org.apache.hadoop.fs.Path(c.massPath)
+    val aside = new org.apache.hadoop.fs.Path(c.massPath + "__old")
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(cur, aside))
+    def mass() = StreamingSampler.offsets(spark, c).collect()
+      .map(r => r.getString(0) -> r.getAs[Long]("mass")).toMap
+    assert(mass() === Map("a" -> 60L))
+    assert(!fs.exists(cur) && fs.exists(aside),
+      "a reader must never rename the aside back")
+    // the batch recovers the aside before its offset read: 60 + 60
+    // crosses the 100 stride
+    StreamingSampler.processBatch(
+      Seq(SampDoc("a", 2L, 60L)).toDF(), 1L, c)
+    assert(pickedIds(c) === Set(2L))
+    assert(mass() === Map("a" -> 120L))
+  }
+
   test("compact queues behind a live batch's store lock: the forced race " +
       "observes mutual exclusion, then compacts correctly") {
     val base = Files.createTempDirectory("ssamp_lock").toString

@@ -89,8 +89,11 @@ class StreamingScdSpec extends SparkSpec {
     val old = new Path(s"${c.storeDir}/old_bucket_2")
     assert(fs.exists(cur))
     assert(fs.rename(cur, old))
+    // the read serves bucket 2 from its aside and renames nothing
     val recovered = StreamingScd.read(spark, c)
     assert(recovered.filter(col("bucket") === 2).count() > 0)
+    assert(!fs.exists(cur) && fs.exists(old),
+      "a reader must never rename the aside back")
     // And the next batch proceeds normally on all buckets.
     StreamingScd.processBatch(parts(1), 1L, c)
     val want = Scd.runs(StreamingScd.prepare(

@@ -54,7 +54,11 @@ class StreamingSketchSpec extends SparkSpec {
     assert(fs.rename(
       new org.apache.hadoop.fs.Path(s"$base/sketch/cells"),
       new org.apache.hadoop.fs.Path(s"$base/sketch/cells__old")))
-    assert(cellMap(StreamingSketch.read(spark, c)) == committed) // healed
+    // the aside serves the read, and the reader leaves it in place
+    assert(cellMap(StreamingSketch.read(spark, c)) == committed)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/sketch/cells")) &&
+      fs.exists(new org.apache.hadoop.fs.Path(s"$base/sketch/cells__old")),
+      "a reader must never rename the aside back")
     val b1 = Seq(Doc(3, "a c c d")).toDF()
     StreamingSketch.processBatch(b1, 1L, c)
     val all = Seq(Doc(1, "a a b"), Doc(2, "b c"), Doc(3, "a c c d")).toDF()

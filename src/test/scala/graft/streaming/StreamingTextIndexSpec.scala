@@ -200,6 +200,10 @@ class StreamingTextIndexSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(c.indexPath),
       new org.apache.hadoop.fs.Path(c.indexPath + "__compact_old")))
+    // the query serves the aside and leaves it for the next writer
     assert(rows(StreamingTextIndex.query(spark, c, terms, 10)) == expected)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(c.indexPath)) &&
+      fs.exists(new org.apache.hadoop.fs.Path(c.indexPath + "__compact_old")),
+      "a reader must never rename the aside back")
   }
 }
