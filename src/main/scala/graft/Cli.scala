@@ -12,8 +12,8 @@ import graft.verify.CrossValidator
   * Usage:
   * {{{
   *   graft.Cli offload --source <parquet> --final <path> --meta <dir>
-  *     [--staging <path>] [--predicate "<dsl>"] [--incremental-key k1,k2]
-  *     [--partition-by c1,c2] [--dry-run]
+  *     [--<field> <value>]...  (the fields of OffloadConfig.fields, `-`
+  *     for `_`: --partition-by c1,c2, --dry-run [true|false], ...)
   *   graft.Cli agg-validate --left <parquet> --right <parquet>
   *     [--group-by c1,c2] [--columns c1,c2]
   *   graft.Cli status-report --meta <dir>
@@ -35,58 +35,6 @@ object Cli {
     out.result()
   }
 
-  /** `--ddl-dialect` values → renderer dialects. */
-  private[graft] def dialectOf(name: String): graft.sink.DdlRenderer.Dialect = {
-    import graft.sink.DdlRenderer.Dialect
-    name.toLowerCase(java.util.Locale.ROOT) match {
-      case "spark" | "sparksql" => Dialect.SparkSql
-      case "bigquery" | "bq"    => Dialect.BigQuery
-      case "hive"               => Dialect.Hive
-      case "snowflake"          => Dialect.Snowflake
-      case "synapse"            => Dialect.Synapse
-      case "impala"             => Dialect.Impala
-      case other => throw new IllegalArgumentException(
-        s"unknown --ddl-dialect: $other " +
-          "(spark|bigquery|hive|snowflake|synapse|impala)")
-    }
-  }
-
-  /** Data-type override flags, reference-compatible names (`offload.py:
-    * 532-603`): `--integer-N-columns`, repeatable paired `--decimal-columns`
-    * + `--decimal-columns-type`, `--date-columns`, `--double-columns`,
-    * `--variable-string-columns`, `--timestamp-tz-columns`,
-    * `--unicode-string-columns`. */
-  private[graft] def overridesFrom(pairs: Seq[(String, String)])
-      : graft.types.TypeOverrides = {
-    import graft.types.TypeOverrides
-    def csv(k: String): Seq[String] =
-      pairs.collect { case (`k`, v) => v }.flatMap(_.split(',')).map(_.trim)
-        .filter(_.nonEmpty)
-    val decCols = pairs.collect { case ("decimal-columns", v) => v }
-    val decTypes = pairs.collect { case ("decimal-columns-type", v) => v }
-    require(decCols.length == decTypes.length,
-      "--decimal-columns and --decimal-columns-type must appear in pairs")
-    val decimals = decCols.zip(decTypes).map { case (cols, t) =>
-      val ps = t.split(',').map(_.trim)
-      require(ps.length == 2,
-        s"--decimal-columns-type must be \"precision,scale\": $t")
-      TypeOverrides.DecimalOverride(cols.split(',').toSeq.map(_.trim),
-        ps(0).toInt, ps(1).toInt)
-    }
-    TypeOverrides(
-      integer1 = csv("integer-1-columns"),
-      integer2 = csv("integer-2-columns"),
-      integer4 = csv("integer-4-columns"),
-      integer8 = csv("integer-8-columns"),
-      integer38 = csv("integer-38-columns"),
-      decimals = decimals,
-      dates = csv("date-columns"),
-      doubles = csv("double-columns"),
-      variableStrings = csv("variable-string-columns"),
-      timestampTz = csv("timestamp-tz-columns"),
-      unicodeStrings = csv("unicode-string-columns"))
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Cli <offload|agg-validate|status-report> ...")
     val cmd = args.head
@@ -99,31 +47,10 @@ object Cli {
     try {
       cmd match {
         case "offload" =>
-          val steps = OffloadRunner.offload(spark, OffloadRunner.OffloadConfig(
-            sourceTable = opts.getOrElse("table",
-              opts("source").split('/').last.stripSuffix(".parquet")),
-            sourcePath = opts("source"),
-            stagingPath = opts.getOrElse("staging", opts("final") + "_staging"),
-            finalPath = opts("final"),
-            metadataDir = opts("meta"),
-            predicateDsl = opts.get("predicate"),
-            incrementalKey = opts.get("incremental-key")
-              .map(_.split(',').toSeq).getOrElse(Nil),
-            partitionCols = opts.get("partition-by")
-              .map(_.split(',').toSeq).getOrElse(Nil),
-            dryRun = opts.contains("dry-run"),
-            ddlFile = opts.get("ddl-file"),
-            ddlDialect = opts.get("ddl-dialect").map(dialectOf)
-              .getOrElse(graft.sink.DdlRenderer.Dialect.SparkSql),
-            typeOverrides = overridesFrom(pairs),
-            // --expect <rules.jsonl>: data-quality gate on the final
-            // table, audited as its own step; violations fail the command
-            expectations = opts.get("expect")
-              .map(p => graft.verify.Expectations.parseRules(spark, p))
-              .getOrElse(Nil)))
-          steps.foreach(s => println(
-            f"${if (s.ok) "ok " else "ERR"} ${s.name}%-18s ${s.millis}%6d ms  ${s.detail}"))
-          if (!steps.forall(_.ok)) sys.exit(1)
+          // `--partition-by` is the offload field partition_by
+          OffloadRunner.offload(spark, OffloadRunner.OffloadConfig.fromFields(
+            spark, pairs.groupMap(_._1.replace('-', '_'))(_._2), None))
+            .foreach(s => println(s.line))
 
         case "agg-validate" =>
           val left = spark.read.parquet(opts("left"))

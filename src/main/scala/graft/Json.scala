@@ -16,7 +16,8 @@ import com.fasterxml.jackson.databind.json.JsonMapper
   * are part of what clients and specs match, so only string values go
   * through the quoter. Readers parse to a tree and read typed fields. A
   * field that is missing, `null` or of another type reads as None (or
-  * Nil), so documents written before a field existed still load.
+  * Nil), so documents written before a field existed still load; only
+  * request input ([[Obj.values]]) rejects a field of another type.
   */
 object Json {
 
@@ -78,8 +79,16 @@ object Json {
       field(key).filter(_.isNumber).map(_.longValue)
     def double(key: String): Option[Double] =
       field(key).filter(_.isNumber).map(_.doubleValue)
-    def bool(key: String): Option[Boolean] =
-      field(key).filter(_.isBoolean).map(_.booleanValue)
+    /** The object's keys, in document order. */
+    def keys: Seq[String] = node.fieldNames.asScala.toSeq
+    /** A string, boolean or array-of-strings field as text (Nil when
+      * missing or null); a field of any other type raises. */
+    def values(key: String): Seq[String] = field(key).map {
+      case n if n.isTextual || n.isBoolean => Seq(n.asText)
+      case n if n.isArray && n.elements.asScala.forall(_.isTextual) => texts(n)
+      case n => throw new IllegalArgumentException(s"$key: expected a " +
+        s"string, an array of strings or a boolean, got ${n.getNodeType}")
+    }.getOrElse(Nil)
     /** An array field's elements as text; Nil when it is not an array. */
     def strs(key: String): Seq[String] =
       field(key).filter(_.isArray).map(texts).getOrElse(Nil)

@@ -32,11 +32,10 @@ import graft.meta.{MetadataStore, StatsStore}
   *     `conductor/hybrid_view_service.py:1-334`)
   *   - `GET /api/orchestration/offloads/` — offload metadata inventory
   *   - `GET /api/orchestration/offloads/{table}/` — one table's metadata
-  *   - `POST /api/orchestration/offload/` — run an offload (JSON body:
-  *     `source`, `final`, `meta`, optional `table`/`staging`/`predicate`/
-  *     `incremental_key` (an array, or one comma-separated string) and
-  *     `dry_run` (a boolean, or the string "true"); a body that is not a
-  *     JSON object is a 422)
+  *   - `POST /api/orchestration/offload/` — run an offload: a JSON
+  *     object of `OffloadConfig.fields` (`meta` defaults to the
+  *     listener's); a bad body or field is a 422 whose `detail` says
+  *     why, a failed step a 500
   * Auth mirrors `Security(valid_api_token)`: when a token is configured,
   * every request must carry it in `x-api-token`.
   *
@@ -878,57 +877,32 @@ object Listener {
       },
 
       route("POST", "/api/orchestration/offload",
-        "run an offload (json body: source, final, ...)") { (ex, _) =>
-        val parsed = scala.util.Try(Json.parse(new String(
+        "run an offload (json body: the offload fields)") { (ex, _) =>
+        val request = scala.util.Try(Json.parse(new String(
           ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)))
-        (for (b <- parsed.toOption; source <- b.str("source");
-              finalPath <- b.str("final")) yield (b, source, finalPath)) match {
-          case Some((b, source, finalPath)) =>
-            val table = b.str("table").getOrElse(
-              source.split('/').last.stripSuffix(".parquet"))
+          .toEither.left.map(e => "body is not a JSON object: " +
+            String.valueOf(e.getMessage).takeWhile(_ != '\n'))
+          .flatMap(b => try Right(OffloadRunner.OffloadConfig.fromFields(
+              spark, b.keys.map(k => k -> b.values(k)).toMap, Some(metadataDir)))
+            catch { case e @ (_: IllegalArgumentException |
+                              _: NoSuchElementException) => Left(e.getMessage) })
+        request match {
+          case Right(cfg) =>
             val execId = graft.meta.CommandAudit.newExecutionId()
-            val cfg = OffloadRunner.OffloadConfig(
-              sourceTable = table,
-              sourcePath = source,
-              stagingPath = b.str("staging")
-                .getOrElse(finalPath + "_staging"),
-              finalPath = finalPath,
-              metadataDir = b.str("meta").getOrElse(metadataDir),
-              predicateDsl = b.str("predicate"),
-              // a JSON array of column names, or one comma-separated string
-              incrementalKey = b.strs("incremental_key") match {
-                case Nil => b.str("incremental_key")
-                  .map(_.split(',').toSeq).getOrElse(Nil)
-                case keys => keys
-              },
-              // a JSON boolean, or the string "true"
-              dryRun = b.bool("dry_run")
-                .getOrElse(b.str("dry_run").contains("true")),
-              executionId = Some(execId),
-              // live heartbeat: every step lands on the progress bus as
-              // it completes, while the command is still running
-              progress = Some(sr => bus.publish(
-                s"""{"event":"step","execution_id":${q(execId)},""" +
-                s""""table":${q(table)},"step":${q(sr.name)},""" +
-                s""""ok":${sr.ok},"millis":${sr.millis},""" +
-                s""""detail":${q(sr.detail)}}""")))
-            bus.publish(s"""{"event":"command_begin",""" +
-              s""""execution_id":${q(execId)},"table":${q(table)}}""")
+            val frame = s""""execution_id":${q(execId)},""" +
+              s""""table":${q(cfg.sourceTable)}"""
+            bus.publish(s"""{"event":"command_begin",$frame}""")
             val steps =
-              try OffloadRunner.offload(spark, cfg)
-              finally bus.publish(s"""{"event":"command_end",""" +
-                s""""execution_id":${q(execId)},"table":${q(table)}}""")
-            val js = steps.map(s =>
-              s"""{"step": ${q(s.name)}, "ok": ${s.ok}, """ +
-              s""""detail": ${q(s.detail)}, "millis": ${s.millis}}""")
-              .mkString("[", ", ", "]")
-            respond(ex, if (steps.forall(_.ok)) 200 else 500, js)
-          case _ =>
-            val detail = parsed.fold(
-              e => "body is not a JSON object: " +
-                String.valueOf(e.getMessage).takeWhile(_ != '\n'),
-              _ => "source and final required")
-            respond(ex, 422, s"""{"detail": ${q(detail)}}""")
+              try OffloadRunner.offload(spark, cfg.copy(
+                executionId = Some(execId),
+                // live heartbeat: every step lands on the progress bus as
+                // it completes, while the command is still running
+                progress = Some(sr => bus.publish(
+                  s"""{"event":"step",$frame,${sr.jsonFields}}"""))))
+              finally bus.publish(s"""{"event":"command_end",$frame}""")
+            respond(ex, 200,
+              steps.map(s => s"{${s.jsonFields}}").mkString("[", ", ", "]"))
+          case Left(detail) => respond(ex, 422, s"""{"detail": ${q(detail)}}""")
         }
       })
 

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.meta.{MetadataStore, OffloadMetadata}
 import graft.plan.Boundary
 import graft.predicate.OffloadPredicate
-import graft.sink.StagedLoad
-import graft.types.TypeMapper
+import graft.sink.{DdlRenderer, StagedLoad}
+import graft.types.{TypeMapper, TypeOverrides}
 import graft.verify.CrossValidator
 
 /** Offload orchestration: the step runner + the end-to-end offload command.
@@ -24,8 +24,16 @@ import graft.verify.CrossValidator
   */
 object OffloadRunner {
 
+  /** One step's record: JSON fields for the REST response and the SSE
+    * step frame, a text line for the CLI. */
   final case class StepResult(name: String, ok: Boolean, detail: String,
-                              millis: Long)
+                              millis: Long) {
+    def jsonFields: String =
+      s""""step": ${graft.Json.quote(name)}, "ok": $ok, "detail": """ +
+        s"""${graft.Json.quote(detail)}, "millis": $millis"""
+    def line: String =
+      f"${if (ok) "ok " else "ERR"} $name%-18s $millis%6d ms  $detail"
+  }
 
   /** Persisted-audit hookup: when present, every [[Runner.step]] writes
     * step_begin/step_end rows into the metadata store's command audit —
@@ -90,7 +98,7 @@ object OffloadRunner {
       withLock: Boolean = false,
       // per-type-class column overrides (--integer-8-columns etc.) applied
       // to the canonical schema before the typed load
-      typeOverrides: graft.types.TypeOverrides = graft.types.TypeOverrides(),
+      typeOverrides: TypeOverrides = TypeOverrides(),
       // BigQuery final-table sink (assembled always; executed only behind
       // spark.graft.bigquery.execute — see BigQuerySink)
       bigquerySink: Option[graft.sink.BigQuerySink.Config] = None,
@@ -100,8 +108,7 @@ object OffloadRunner {
       // table is created/loaded — the reference's ddl_file operation
       // forces execute off (`operation/ddl_file.py`, `offload.py:66-87`).
       ddlFile: Option[String] = None,
-      ddlDialect: graft.sink.DdlRenderer.Dialect =
-        graft.sink.DdlRenderer.Dialect.SparkSql,
+      ddlDialect: DdlRenderer.Dialect = DdlRenderer.Dialect.SparkSql,
       // Orchestration execution id (the reference's ExecutionId UUID,
       // `execution_id.py`); generated per command when absent. All audit
       // rows of one command invocation share it.
@@ -125,6 +132,50 @@ object OffloadRunner {
         * detail, never fatal. Same one-pass fold, same slice. */
       gradedExpectations: Seq[graft.verify.Expectations.Graded] = Nil)
 
+  object OffloadConfig {
+
+    /** The offload request's fields: `Cli offload`'s flags
+      * (`--partition-by`) and the REST body's keys (`partition_by`).
+      * Column lists are comma-separated, repeated or both; any other
+      * field takes its last value. `expect` is a JSONL rules file. */
+    val fields: Seq[String] = Seq("source", "final", "meta", "table",
+      "staging", "predicate", "incremental_key", "partition_by", "dry_run",
+      "ddl_file", "ddl_dialect", "expect") ++ TypeOverrides.fields
+
+    /** `source`, `final` and (without `defaultMeta`) `meta` are required:
+      * a missing one raises NoSuchElementException, an unknown field or
+      * a malformed value IllegalArgumentException, naming the field. */
+    def fromFields(spark: SparkSession, values: Map[String, Seq[String]],
+                   defaultMeta: Option[String]): OffloadConfig = {
+      val unknown = values.keys.filterNot(fields.contains)
+      require(unknown.isEmpty,
+        s"unknown offload field: ${unknown.toSeq.sorted.mkString(", ")}")
+      def get(k: String) = values.getOrElse(k, Nil)
+      def opt(k: String) = get(k).lastOption
+      def req(k: String) = opt(k).getOrElse(throw
+        new NoSuchElementException(s"missing required offload field: $k"))
+      val (source, finalPath) = (req("source"), req("final"))
+      OffloadConfig(
+        sourceTable = opt("table")
+          .getOrElse(source.split('/').last.stripSuffix(".parquet")),
+        sourcePath = source,
+        stagingPath = opt("staging").getOrElse(finalPath + "_staging"),
+        finalPath = finalPath,
+        metadataDir = opt("meta").orElse(defaultMeta).getOrElse(req("meta")),
+        predicateDsl = opt("predicate"),
+        incrementalKey = TypeOverrides.columnList(get("incremental_key")),
+        partitionCols = TypeOverrides.columnList(get("partition_by")),
+        dryRun = opt("dry_run").exists(v => v.toBooleanOption.getOrElse(
+          throw new IllegalArgumentException(s"dry_run: not true or false: $v"))),
+        ddlFile = opt("ddl_file"),
+        ddlDialect = opt("ddl_dialect").map(DdlRenderer.Dialect.parse)
+          .getOrElse(DdlRenderer.Dialect.SparkSql),
+        typeOverrides = TypeOverrides.fromFields(get),
+        expectations = opt("expect")
+          .map(graft.verify.Expectations.parseRules(spark, _)).getOrElse(Nil))
+    }
+  }
+
   /** Full offload command: lock → read → (predicate/HWM filter) →
     * transforms + extraction projection → stage → validate → final load →
     * verify → metadata save, with per-task metrics collected. The
@@ -133,8 +184,7 @@ object OffloadRunner {
     */
   def offload(spark: SparkSession, cfg: OffloadConfig): Seq[StepResult] =
     audited(cfg, Map("dry_run" -> cfg.dryRun.toString,
-        "incremental_key" -> cfg.incrementalKey.mkString(",")))(
-        (res: Seq[StepResult]) => res.forall(_.ok)) { ctx =>
+        "incremental_key" -> cfg.incrementalKey.mkString(","))) { ctx =>
       if (cfg.withLock)
         // fsScratch: lock files need a filesystem even when the metadata
         // "dir" is a JDBC repository URL
@@ -205,10 +255,10 @@ object OffloadRunner {
 
   /** Command begin/end audit bracket — the reference's `_command_begin` /
     * `_command_end` / `_command_fail` (`orchestration_runner.py:139-226`):
-    * one command_begin row up front, a command_end row with
-    * SUCCESS/ERROR when the body returns (as `ok` judges it) or throws. */
+    * one command_begin row up front, a command_end row with SUCCESS when
+    * the body returns (a failed step throws) or ERROR when it throws. */
   private def audited[T](cfg: OffloadConfig, parameters: Map[String, String])
-                        (ok: T => Boolean)(body: AuditContext => T): T = {
+                        (body: AuditContext => T): T = {
     import graft.meta.CommandAudit
     val audit = CommandAudit.open(cfg.metadataDir)
     val execId = cfg.executionId.getOrElse(CommandAudit.newExecutionId())
@@ -219,8 +269,7 @@ object OffloadRunner {
         "final_path" -> cfg.finalPath) ++ parameters)
     try {
       val res = body(ctx)
-      audit.endCommand(cid,
-        if (ok(res)) CommandAudit.Success else CommandAudit.Error)
+      audit.endCommand(cid, CommandAudit.Success)
       res
     } catch {
       case e: Throwable =>
@@ -282,7 +331,7 @@ object OffloadRunner {
         val path = graft.sink.DdlFile.resolve(
           raw, cfg.sourceTable,
           graft.meta.JdbcMetaRepo.fsScratch(cfg.metadataDir) + "/log")
-        val ddl = graft.sink.DdlRenderer.createTable(
+        val ddl = DdlRenderer.createTable(
           cfg.finalPath, schema, cfg.ddlDialect,
           partitionBy = cfg.partitionCols, clusterBy = cfg.sortCols)
         val written = graft.sink.DdlFile.write(path, Seq(ddl))
@@ -429,8 +478,7 @@ object OffloadRunner {
                      planFromCopiedStats: Boolean = false)
       : Seq[Seq[StepResult]] =
     audited(cfg, Map("chunked" -> "true",
-        "max_rows_per_chunk" -> maxRowsPerChunk.toString))(
-        (res: Seq[Seq[StepResult]]) => res.forall(_.forall(_.ok))) { ctx =>
+        "max_rows_per_chunk" -> maxRowsPerChunk.toString)) { ctx =>
       offloadChunkedBody(spark, cfg, chunkKeyCol, hwmCol, maxRowsPerChunk,
         planFromCopiedStats, ctx)
     }

@@ -28,6 +28,15 @@ object DdlRenderer {
     case object Snowflake extends Dialect
     case object Synapse extends Dialect
     case object Impala extends Dialect
+
+    /** The dialect an offload request's `ddl_dialect` names. */
+    def parse(name: String): Dialect = Map[String, Dialect](
+      "spark" -> SparkSql, "sparksql" -> SparkSql, "bigquery" -> BigQuery,
+      "bq" -> BigQuery, "hive" -> Hive, "snowflake" -> Snowflake,
+      "synapse" -> Synapse, "impala" -> Impala)
+      .getOrElse(name.toLowerCase(java.util.Locale.ROOT),
+        throw new IllegalArgumentException(s"unknown ddl_dialect: $name " +
+          "(spark|bigquery|hive|snowflake|synapse|impala)"))
   }
 
   private def sparkType(c: CanonicalColumn): String =

@@ -122,15 +122,27 @@ private[streaming] object SwapDir {
   /** Install the generation `write` puts at the temp path it is given
     * (with its partitioning, a riding `_hwm`, preserved partitions). The
     * previous generation moves to the aside and STAYS there (deferred
-    * reclaim — see the object doc). */
+    * reclaim — see the object doc).
+    *
+    * Hadoop's rename onto an existing directory moves the source INTO it
+    * and returns true, so a `current` put back inside the window (another
+    * writer's [[recover]]) would turn the install into a nested
+    * generation Spark cannot read. The second rename therefore must find
+    * `current` absent and must not leave `current/<temp name>`; when
+    * either fails, the nested generation moves back out to the temp and
+    * install throws, so the batch fails and replays. */
   def install(fs: FileSystem, t: Target)(write: Path => Unit): Unit = {
     fs.delete(t.temp, true)
     write(t.temp)
     fs.delete(t.aside, true)
     if (fs.exists(t.current) && !fs.rename(t.current, t.aside))
       throw new IllegalStateException(s"${t.current}: cannot move aside")
-    if (!fs.rename(t.temp, t.current)) {
-      if (fs.exists(t.aside)) fs.rename(t.aside, t.current) // roll back
+    val nested = new Path(t.current, t.temp.getName)
+    if (fs.exists(t.current) || !fs.rename(t.temp, t.current) ||
+        fs.exists(nested)) {
+      if (fs.exists(nested)) fs.rename(nested, t.temp)
+      else if (!fs.exists(t.current) && fs.exists(t.aside))
+        fs.rename(t.aside, t.current) // roll back
       throw new IllegalStateException(s"${t.current}: cannot install")
     }
   }

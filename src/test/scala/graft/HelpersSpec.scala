@@ -356,16 +356,19 @@ class CliSpec extends SparkSpec {
 
   test("repeatable decimal pairs and csv/html report outputs") {
     import graft.types.{CanonicalType, TypeOverrides}
+    // the repeated request fields as the CLI parses them, in flag order
+    def fields(pairs: (String, String)*): String => Seq[String] =
+      k => pairs.collect { case (`k`, v) => v }
     // two decimal groups with different types, reference-style repetition
-    val o = Cli.overridesFrom(Seq(
-      "decimal-columns-type" -> "18,2", "decimal-columns" -> "price,cost",
-      "decimal-columns-type" -> "6,4", "decimal-columns" -> "ratio"))
+    val o = TypeOverrides.fromFields(fields(
+      "decimal_columns_type" -> "18,2", "decimal_columns" -> "price,cost",
+      "decimal_columns_type" -> "6,4", "decimal_columns" -> "ratio"))
     assert(o.decimals == Seq(
       TypeOverrides.DecimalOverride(Seq("price", "cost"), 18, 2),
       TypeOverrides.DecimalOverride(Seq("ratio"), 6, 4)))
     // unpaired lists are rejected
     intercept[IllegalArgumentException] {
-      Cli.overridesFrom(Seq("decimal-columns" -> "price"))
+      TypeOverrides.fromFields(fields("decimal_columns" -> "price"))
     }
     // status-report --csv/--html write the rendered files
     val base = Files.createTempDirectory("graft_cli_csv").toString

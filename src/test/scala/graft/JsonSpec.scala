@@ -56,7 +56,9 @@ class JsonSpec extends AnyFunSuite {
     assert(o.str("s").contains("x") && o.str("n").isEmpty)
     assert(o.long("n").contains(12L) && o.long("s").isEmpty)
     assert(o.double("d").contains(0.0015))
-    assert(o.bool("b").contains(true) && o.bool("s").isEmpty)
+    assert(o.values("b") == Seq("true") && o.values("s") == Seq("x"))
+    assert(o.values("a") == Seq("p", "q") && o.values("nul") == Nil)
+    intercept[IllegalArgumentException](o.values("n"))
     assert(o.str("nul").isEmpty && o.str("missing").isEmpty)
     assert(o.strs("a") == Seq("p", "q") && o.strs("s") == Nil)
     assert(o.objs("objs").flatMap(_.str("k")) == Seq("v"))

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[SwapDir]] is the only code in `streaming/` that moves a store
@@ -42,5 +44,66 @@ class SwapDirSpec extends AnyFunSuite {
       p.getFileName.toString == "Hwm.scala" &&
         code(p).contains("fs.rename(t.temp, t.current)") &&
         code(p).contains("fs.rename(t.current, t.aside)")))
+  }
+
+  private val local = FileSystem.getLocal(new Configuration())
+
+  /** The local filesystem with every rename going through `onRename(fs,
+    * src, dst)`, where `fs` is the plain local one: another writer can
+    * act inside an install's window. */
+  private def racing(onRename: (FileSystem, HPath, HPath) => Boolean) =
+    new FilterFileSystem(local) {
+      override def rename(src: HPath, dst: HPath): Boolean =
+        onRename(fs, src, dst)
+    }
+
+  /** A store holding generation "g1", and a reader of one generation. */
+  private def store(): (Path, SwapDir.Target, String => String) = {
+    val root = Files.createTempDirectory("graft_swapdir")
+    val t = SwapDir.target(new HPath(root.resolve("store").toUri))
+    SwapDir.install(local, t)(gen(local, "g1"))
+    (root, t, name => Files.readString(root.resolve(name).resolve("part")))
+  }
+
+  private def gen(fs: FileSystem, text: String)(dir: HPath): Unit = {
+    val out = fs.create(new HPath(dir, "part"))
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** After a failed install: nothing nested, the old generation live, the
+    * new one back in the temp; the replay then installs it. */
+  private def assertReplayable(root: Path, t: SwapDir.Target,
+                               read: String => String): Unit = {
+    assert(!Files.exists(root.resolve("store").resolve("store__tmp")))
+    assert(read("store") == "g1" && read("store__tmp") == "g2")
+    SwapDir.install(local, t)(gen(local, "g2"))
+    assert(read("store") == "g2" && read("store__old") == "g1")
+  }
+
+  test("install fails, nesting nothing, when current is back before " +
+      "its second rename") {
+    val (root, t, read) = store()
+    // a concurrent writer's recover renames the aside straight back
+    val fs = racing { (fs, src, dst) =>
+      val moved = fs.rename(src, dst)
+      if (moved && src == t.current) assert(fs.rename(dst, src))
+      moved
+    }
+    val e = intercept[IllegalStateException](
+      SwapDir.install(fs, t)(gen(fs, "g2")))
+    assert(e.getMessage.contains("cannot install"))
+    assertReplayable(root, t, read)
+  }
+
+  test("install moves a generation nested under a resurrected current " +
+      "back out to the temp and fails") {
+    val (root, t, read) = store()
+    // the recover lands between install's check and its second rename
+    val fs = racing { (fs, src, dst) =>
+      if (src == t.temp) assert(fs.rename(t.aside, t.current))
+      fs.rename(src, dst)
+    }
+    intercept[IllegalStateException](SwapDir.install(fs, t)(gen(fs, "g2")))
+    assertReplayable(root, t, read)
   }
 }
