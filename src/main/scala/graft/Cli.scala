@@ -12,8 +12,8 @@ import graft.verify.CrossValidator
   * Usage:
   * {{{
   *   graft.Cli offload --source <parquet> --final <path> --meta <dir>
-  *     [--<field> <value>]...  (the fields of OffloadConfig.fields, `-`
-  *     for `_`: --partition-by c1,c2, --dry-run [true|false], ...)
+  *     [--<field> <value>]...  (the fields OffloadConfig.fromFields
+  *     reads, `-` for `_`: --partition-by c1,c2, --dry-run [true|false])
   *   graft.Cli agg-validate --left <parquet> --right <parquet>
   *     [--group-by c1,c2] [--columns c1,c2]
   *   graft.Cli status-report --meta <dir>
@@ -49,7 +49,7 @@ object Cli {
         case "offload" =>
           // `--partition-by` is the offload field partition_by
           OffloadRunner.offload(spark, OffloadRunner.OffloadConfig.fromFields(
-            spark, pairs.groupMap(_._1.replace('-', '_'))(_._2), None))
+            spark, pairs.groupMap(_._1.replace('-', '_'))(_._2)))
             .foreach(s => println(s.line))
 
         case "agg-validate" =>

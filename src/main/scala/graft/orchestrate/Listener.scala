@@ -33,9 +33,9 @@ import graft.meta.{MetadataStore, StatsStore}
   *   - `GET /api/orchestration/offloads/` — offload metadata inventory
   *   - `GET /api/orchestration/offloads/{table}/` — one table's metadata
   *   - `POST /api/orchestration/offload/` — run an offload: a JSON
-  *     object of `OffloadConfig.fields` (`meta` defaults to the
-  *     listener's); a bad body or field is a 422 whose `detail` says
-  *     why, a failed step a 500
+  *     object of the fields `OffloadConfig.fromFields` reads (`meta`
+  *     defaults to the listener's); a bad body or field is a 422 whose
+  *     `detail` says why, a failed step a 500
   * Auth mirrors `Security(valid_api_token)`: when a token is configured,
   * every request must carry it in `x-api-token`.
   *
@@ -882,8 +882,9 @@ object Listener {
           ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)))
           .toEither.left.map(e => "body is not a JSON object: " +
             String.valueOf(e.getMessage).takeWhile(_ != '\n'))
-          .flatMap(b => try Right(OffloadRunner.OffloadConfig.fromFields(
-              spark, b.keys.map(k => k -> b.values(k)).toMap, Some(metadataDir)))
+          .flatMap(b => try Right(OffloadRunner.OffloadConfig.fromFields(spark,
+              Map("meta" -> Seq(metadataDir)) ++
+                b.keys.map(k => k -> b.values(k))))
             catch { case e @ (_: IllegalArgumentException |
                               _: NoSuchElementException) => Left(e.getMessage) })
         request match {

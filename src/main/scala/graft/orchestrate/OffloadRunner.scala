@@ -134,45 +134,51 @@ object OffloadRunner {
 
   object OffloadConfig {
 
-    /** The offload request's fields: `Cli offload`'s flags
-      * (`--partition-by`) and the REST body's keys (`partition_by`).
-      * Column lists are comma-separated, repeated or both; any other
-      * field takes its last value. `expect` is a JSONL rules file. */
-    val fields: Seq[String] = Seq("source", "final", "meta", "table",
-      "staging", "predicate", "incremental_key", "partition_by", "dry_run",
-      "ddl_file", "ddl_dialect", "expect") ++ TypeOverrides.fields
-
-    /** `source`, `final` and (without `defaultMeta`) `meta` are required:
-      * a missing one raises NoSuchElementException, an unknown field or
-      * a malformed value IllegalArgumentException, naming the field. */
-    def fromFields(spark: SparkSession, values: Map[String, Seq[String]],
-                   defaultMeta: Option[String]): OffloadConfig = {
-      val unknown = values.keys.filterNot(fields.contains)
-      require(unknown.isEmpty,
-        s"unknown offload field: ${unknown.toSeq.sorted.mkString(", ")}")
-      def get(k: String) = values.getOrElse(k, Nil)
+    /** The offload request: `Cli offload`'s flags (`--partition-by`) and
+      * the REST body's keys (`partition_by`) are its fields — `source`,
+      * `final` and `meta` (required), `table`, `staging`, `predicate`,
+      * `incremental_key`, `partition_by`, `dry_run` (`true` or `false`),
+      * `ddl_file`, `ddl_dialect`, `expect` (a JSONL rules file) and the
+      * type overrides of [[TypeOverrides.fromFields]]. Column lists are
+      * comma-separated, repeated or both; any other field takes its last
+      * value. The fields are the keys read here, so a key nothing reads
+      * is unknown. A missing field raises NoSuchElementException, an
+      * unknown field or a malformed value IllegalArgumentException,
+      * naming the field. */
+    def fromFields(spark: SparkSession, values: Map[String, Seq[String]])
+        : OffloadConfig = {
+      val read = scala.collection.mutable.Set.empty[String]
+      def get(k: String) = { read += k; values.getOrElse(k, Nil) }
       def opt(k: String) = get(k).lastOption
       def req(k: String) = opt(k).getOrElse(throw
         new NoSuchElementException(s"missing required offload field: $k"))
+      def columns(v: String) =
+        v.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      def list(k: String) = get(k).flatMap(columns)
       val (source, finalPath) = (req("source"), req("final"))
-      OffloadConfig(
+      val expect = opt("expect")
+      val cfg = OffloadConfig(
         sourceTable = opt("table")
           .getOrElse(source.split('/').last.stripSuffix(".parquet")),
         sourcePath = source,
         stagingPath = opt("staging").getOrElse(finalPath + "_staging"),
         finalPath = finalPath,
-        metadataDir = opt("meta").orElse(defaultMeta).getOrElse(req("meta")),
+        metadataDir = req("meta"),
         predicateDsl = opt("predicate"),
-        incrementalKey = TypeOverrides.columnList(get("incremental_key")),
-        partitionCols = TypeOverrides.columnList(get("partition_by")),
+        incrementalKey = list("incremental_key"),
+        partitionCols = list("partition_by"),
         dryRun = opt("dry_run").exists(v => v.toBooleanOption.getOrElse(
           throw new IllegalArgumentException(s"dry_run: not true or false: $v"))),
         ddlFile = opt("ddl_file"),
         ddlDialect = opt("ddl_dialect").map(DdlRenderer.Dialect.parse)
           .getOrElse(DdlRenderer.Dialect.SparkSql),
-        typeOverrides = TypeOverrides.fromFields(get),
-        expectations = opt("expect")
-          .map(graft.verify.Expectations.parseRules(spark, _)).getOrElse(Nil))
+        typeOverrides = TypeOverrides.fromFields(get(_).map(columns)))
+      val unknown = values.keySet -- read
+      require(unknown.isEmpty,
+        s"unknown offload field: ${unknown.toSeq.sorted.mkString(", ")}")
+      // the rules file is read (a Spark job) only for an accepted request
+      cfg.copy(expectations = expect
+        .map(graft.verify.Expectations.parseRules(spark, _)).getOrElse(Nil))
     }
   }
 

@@ -127,10 +127,10 @@ private[streaming] object SwapDir {
     * Hadoop's rename onto an existing directory moves the source INTO it
     * and returns true, so a `current` put back inside the window (another
     * writer's [[recover]]) would turn the install into a nested
-    * generation Spark cannot read. The second rename therefore must find
-    * `current` absent and must not leave `current/<temp name>`; when
-    * either fails, the nested generation moves back out to the temp and
-    * install throws, so the batch fails and replays. */
+    * generation Spark cannot read. The second rename therefore must not
+    * leave `current/<temp name>`; when it does (or fails), the nested
+    * generation moves back out to the temp and install throws, so the
+    * batch fails and replays. */
   def install(fs: FileSystem, t: Target)(write: Path => Unit): Unit = {
     fs.delete(t.temp, true)
     write(t.temp)
@@ -138,8 +138,7 @@ private[streaming] object SwapDir {
     if (fs.exists(t.current) && !fs.rename(t.current, t.aside))
       throw new IllegalStateException(s"${t.current}: cannot move aside")
     val nested = new Path(t.current, t.temp.getName)
-    if (fs.exists(t.current) || !fs.rename(t.temp, t.current) ||
-        fs.exists(nested)) {
+    if (!fs.rename(t.temp, t.current) || fs.exists(nested)) {
       if (fs.exists(nested)) fs.rename(nested, t.temp)
       else if (!fs.exists(t.current) && fs.exists(t.aside))
         fs.rename(t.aside, t.current) // roll back

@@ -3,7 +3,7 @@ package graft.types
 /** Data-type override controls.
   *
   * Re-expression of the reference's per-type-class column override flags
-  * ([[TypeOverrides.fields]]) with the same wildcard expansion
+  * ([[TypeOverrides.fromFields]]) with the same wildcard expansion
   * (`offload_functions.py:128-160`), conflict
   * detection and type-class validation
   * (`operation/data_type_controls.py:70-135,151-200`), applied over the
@@ -50,34 +50,25 @@ object TypeOverrides {
   final class OverrideException(msg: String)
       extends IllegalArgumentException(msg)
 
-  /** The override lists as offload request fields, the reference's flag
-    * names (`src/goe/offload/offload.py:532-603`) in snake_case. */
-  val fields: Seq[String] =
-    Seq(1, 2, 4, 8, 38).map(n => s"integer_${n}_columns") ++
-      Seq("decimal_columns", "decimal_columns_type", "date_columns",
-        "double_columns", "variable_string_columns", "timestamp_tz_columns",
-        "unicode_string_columns")
-
-  /** A column list given comma-separated, repeated or both. */
-  def columnList(values: Seq[String]): Seq[String] =
-    values.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-
-  /** The overrides [[fields]]' values give: the n-th `decimal_columns`
-    * list takes the n-th `decimal_columns_type` ("precision,scale"). */
-  def fromFields(get: String => Seq[String]): TypeOverrides = {
+  /** The overrides an offload request's fields give, the reference's
+    * flag names (`src/goe/offload/offload.py:532-603`) in snake_case:
+    * `integer_{1,2,4,8,38}_columns`, paired `decimal_columns` and
+    * `decimal_columns_type`, `date_columns`, `double_columns`,
+    * `variable_string_columns`, `timestamp_tz_columns` and
+    * `unicode_string_columns`. `lists(k)` is field k's values, each as
+    * its parsed comma list; the n-th `decimal_columns` list takes the
+    * n-th `decimal_columns_type` (precision, scale). */
+  def fromFields(lists: String => Seq[Seq[String]]): TypeOverrides = {
     val (decCols, decTypes) =
-      (get("decimal_columns"), get("decimal_columns_type"))
+      (lists("decimal_columns"), lists("decimal_columns_type"))
     require(decCols.length == decTypes.length,
       "decimal_columns and decimal_columns_type must appear in pairs")
-    val decimals = decCols.zip(decTypes).map { case (cols, t) =>
-      t.split(',').map(_.trim) match {
-        case Array(p, s) =>
-          DecimalOverride(columnList(Seq(cols)), p.toInt, s.toInt)
-        case _ => throw new IllegalArgumentException(
-          s"decimal_columns_type must be \"precision,scale\": $t")
-      }
+    val decimals = decCols.zip(decTypes).map {
+      case (cols, Seq(p, s)) => DecimalOverride(cols, p.toInt, s.toInt)
+      case (_, t) => throw new IllegalArgumentException("decimal_columns_" +
+        s"type must be \"precision,scale\": ${t.mkString(",")}")
     }
-    def list(k: String) = columnList(get(k))
+    def list(k: String) = lists(k).flatten
     TypeOverrides(list("integer_1_columns"), list("integer_2_columns"),
       list("integer_4_columns"), list("integer_8_columns"),
       list("integer_38_columns"), decimals, list("date_columns"),

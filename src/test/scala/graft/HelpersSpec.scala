@@ -356,9 +356,10 @@ class CliSpec extends SparkSpec {
 
   test("repeatable decimal pairs and csv/html report outputs") {
     import graft.types.{CanonicalType, TypeOverrides}
-    // the repeated request fields as the CLI parses them, in flag order
-    def fields(pairs: (String, String)*): String => Seq[String] =
-      k => pairs.collect { case (`k`, v) => v }
+    // the repeated request fields as the CLI parses them, in flag order,
+    // each value as its comma list
+    def fields(pairs: (String, String)*): String => Seq[Seq[String]] =
+      k => pairs.collect { case (`k`, v) => v.split(',').toSeq }
     // two decimal groups with different types, reference-style repetition
     val o = TypeOverrides.fromFields(fields(
       "decimal_columns_type" -> "18,2", "decimal_columns" -> "price,cost",

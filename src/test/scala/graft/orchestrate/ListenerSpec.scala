@@ -259,8 +259,9 @@ class ListenerSpec extends SparkSpec {
       assert(stepIdx < endIdx, "step frames must precede command_end")
       assert(endIdx == seen.length - 1, "stream must close at command_end")
       val step = graft.Json.parse(seen(stepIdx))
+      // `ok` is the JSON boolean true: `str` reads only a string
       assert(step.str("table").contains("region") &&
-        step.values("ok") == Seq("true"))
+        step.values("ok") == Seq("true") && step.str("ok").isEmpty)
     } finally srv.stop()
   }
 

@@ -61,8 +61,11 @@ class OffloadFieldsSpec extends SparkSpec {
            | "incremental_key": ["n_nationkey"],
            | "integer_4_columns": "n_nationkey"}""".stripMargin)
       assert(resp.statusCode() == 200, resp.body())
-      Json.parse(s"""{"steps": ${resp.body()}}""").objs("steps")
-        .map(_.str("step").get)
+      val steps = Json.parse(s"""{"steps": ${resp.body()}}""").objs("steps")
+      // every step is ok, as the JSON boolean true: `str` reads only a string
+      assert(steps.forall(s =>
+        s.values("ok") == Seq("true") && s.str("ok").isEmpty))
+      steps.map(_.str("step").get)
     }
     assert(cliSteps.nonEmpty && cliSteps == restSteps)
     // the metadata documents differ only in the final table's path

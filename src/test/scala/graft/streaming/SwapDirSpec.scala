@@ -98,7 +98,7 @@ class SwapDirSpec extends AnyFunSuite {
   test("install moves a generation nested under a resurrected current " +
       "back out to the temp and fails") {
     val (root, t, read) = store()
-    // the recover lands between install's check and its second rename
+    // the recover lands right before install's second rename
     val fs = racing { (fs, src, dst) =>
       if (src == t.temp) assert(fs.rename(t.aside, t.current))
       fs.rename(src, dst)
