@@ -183,8 +183,9 @@ object OffloadRunner {
   }
 
   /** Full offload command: lock → read → (predicate/HWM filter) →
-    * transforms + extraction projection → stage → validate → final load →
-    * verify → metadata save, with per-task metrics collected. The
+    * transforms + extraction projection → typed stage (validated on the
+    * write) → move into the final table → verify → metadata save, with
+    * per-task metrics collected. The
     * file-source stand-in for the JDBC frontend (same planner surface;
     * `TESTDATA.md` tables play Oracle).
     */
@@ -364,8 +365,9 @@ object OffloadRunner {
     // the delta across the stage is the transport's own row count
     val preStageWritten = if (cfg.dryRun) 0L else settledRecordsWritten()
 
-    // observed on the final load's scan of staging; the steps below use
-    // it, so nothing reads staging again
+    // observed on the one write of the slice (to staging, whose files then
+    // move into the final table); the steps below use it, so nothing reads
+    // staging or the final table back
     var staged: Option[StagedLoad.Staged] = None
     r.step("stage_and_load",
         s"staging=${cfg.stagingPath} final=${cfg.finalPath} " +
@@ -401,7 +403,8 @@ object OffloadRunner {
 
     r.step("verify_counts", "count source slice vs staged slice") {
       planned.foreach { df =>
-        // the source slice is counted fresh: that is the row-loss gate
+        // the source slice is counted fresh, independent of the count
+        // observed on the write: that is the row-loss gate
         val s = df.count()
         val t = staged.get.rows
         if (s != t)
@@ -414,8 +417,9 @@ object OffloadRunner {
         // An empty increment must NOT regress the HWM: keep the previous one.
         val previousHwm = MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
           .map(_.incrementalHighValue).getOrElse(Nil)
-        // the HWM observed over the STAGED slice, which verify_counts
-        // has gated row-equal to the source slice: no Spark work here
+        // the HWM observed on the staging write's input, which
+        // verify_counts has gated row-equal to the source slice: no Spark
+        // work here
         val newHwm: Seq[String] =
           if (cfg.incrementalKey.nonEmpty)
             staged.get.hwm.map(_.map(String.valueOf)).getOrElse(previousHwm)
@@ -437,9 +441,10 @@ object OffloadRunner {
     // Transport row accounting — what the reference scraped from Spark logs
     // (`offload_transport.py:1811-1838`), natively from the listener, and
     // CROSS-CHECKED against the staged slice: stage_and_load writes each
-    // transported row exactly twice (staging, then the final table), so
-    // for a SERIAL offload the listener's delta across the stage window
-    // equals 2 × the staged row count — the spec pins that equality.
+    // transported row exactly once (to staging, whose files then move into
+    // the final table), so for a SERIAL offload the listener's delta
+    // across the stage window equals the staged row count — the spec pins
+    // that equality.
     // REPORT-ONLY by design: the task listener's output counters are
     // JVM-global (the same aliasing the reference's log-scrape had —
     // concurrent offloads in one session see each other's tasks), so a
@@ -455,7 +460,7 @@ object OffloadRunner {
       r.step("task_metrics",
         s"recordsWritten=$totalWritten " +
           s"transport_rows=$transportRows staged_rows=$stagedRows " +
-          s"transport_exact=${transportRows == 2 * stagedRows} " +
+          s"transport_exact=${transportRows == stagedRows} " +
           s"tasks=${metrics.snapshot.length}")(())
     }
 

@@ -5,29 +5,35 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
 import graft.types.{CanonicalColumn, TypeMapper}
 
-/** Staged load: staging write → staged-data validation → typed final insert.
+/** Staged load: one typed write to staging, then a move into the final
+  * table.
   *
   * Mirrors the reference's load phase: staging files exposed to the backend
-  * (`bigquery_backend_table.py:116-149`), validation scans over staged data
+  * (`bigquery_backend_table.py:116-149`), validation over the staged slice
   * (`backend_table.py:1209-1505`), SAFE_CAST probes
   * (`backend_table.py:281-313, 1120-1208`), and the final typed
   * INSERT…SELECT with per-column cast expressions
-  * (`bigquery_backend_table.py:290-454`). The violation probes are capped
-  * filters over staging (no read at all when every mapping is safe and
-  * nullable); the final insert's scan also observes the staged row count
-  * and HWM ([[Staged]]), so staging is never read back to count it.
+  * (`bigquery_backend_table.py:290-454`). Here both sides are Parquet
+  * directories, so the INSERT…SELECT is done the way Hive does an INSERT:
+  * staging is written once, already in the final table's form (cast
+  * projection, clustering, partitioning), and its files are renamed into
+  * the table. The row count, the HWM and the violation count are observed
+  * on the write's input ([[Staged]]); the capped violation probes run only
+  * when that count says a row failed. Staging does not outlive a
+  * successful load.
   */
 object StagedLoad {
 
-  /** Observed on the final load's scan of staging: the row count and the
-    * lexicographic `max(struct(hwmKeys))`, i.e. what
-    * [[graft.verify.CrossValidator.maxProbe]] gives over the staged files
+  /** Observed on the staging write's input, the slice before the cast: the
+    * row count and the lexicographic `max(struct(hwmKeys))`, i.e. what
+    * [[graft.verify.CrossValidator.maxProbe]] gives over the slice
     * (`None` for an empty slice or no keys). */
   final case class Staged(rows: Long, hwm: Option[Seq[Any]])
 
@@ -54,34 +60,32 @@ object StagedLoad {
       casted.as(cc.name)
     }
 
+  /** Rows whose non-null value fails an unsafe target cast; `None` when
+    * every mapping is safe. */
+  private def castViolation(cols: Seq[CanonicalColumn]): Option[Column] =
+    cols.filterNot(_.safeMapping).map { cc =>
+      col(cc.name).isNotNull &&
+        col(cc.name).try_cast(TypeMapper.toSpark(cc.ctype)).isNull
+    }.reduceOption(_ || _)
+
+  /** Rows with a NULL in a declared non-nullable column; `None` when every
+    * column is nullable. */
+  private def notNullViolation(cols: Seq[CanonicalColumn]): Option[Column] =
+    cols.filterNot(_.nullable).map(c => col(c.name).isNull).reduceOption(_ || _)
+
   /** Violation probe: staged rows whose value fails the target cast while
     * being non-null at the source — the reference's
     * `_validate_final_table_casts` raises with offending rows; we return them
     * (`.limit(k)`) so the caller can raise with examples. */
   def castViolations(staged: DataFrame, cols: Seq[CanonicalColumn], k: Int = 10)
-      : DataFrame = {
-    val unsafe = cols.filterNot(_.safeMapping)
-    if (unsafe.isEmpty) staged.limit(0)
-    else {
-      val bad = unsafe
-        .map { cc =>
-          val t = TypeMapper.toSpark(cc.ctype)
-          col(cc.name).isNotNull && col(cc.name).try_cast(t).isNull
-        }
-        .reduce(_ || _)
-      staged.filter(bad).limit(k)
-    }
-  }
+      : DataFrame =
+    castViolation(cols).fold(staged.limit(0))(staged.filter(_).limit(k))
 
   /** NOT NULL violations per declared non-nullable column
     * (`backend_table.py:1209-1505`). */
   def notNullViolations(staged: DataFrame, cols: Seq[CanonicalColumn], k: Int = 10)
-      : DataFrame = {
-    val required = cols.filterNot(_.nullable)
-    if (required.isEmpty) staged.limit(0)
-    else staged.filter(required.map(c => col(c.name).isNull).reduce(_ || _))
-      .limit(k)
-  }
+      : DataFrame =
+    notNullViolation(cols).fold(staged.limit(0))(staged.filter(_).limit(k))
 
   /** Decimal precision/scale overflow probe: |x| must fit in
     * (precision-scale) integral digits (ABS/ROUND range check in the
@@ -128,13 +132,20 @@ object StagedLoad {
       "sample capped at 10 per check; e.g. " + sample.take(3).mkString("; ")
   }
 
-  /** Stage then load: write staging parquet, probe it for violations, write
-    * the final table (partitioned by synthetic keys when given). Kept
-    * two-phase like the reference so the staged slice is an auditable,
-    * atomic retry unit. Returns `Left(violations)` (a capped sample; nothing
-    * written to `finalPath`) or `Right(Staged)` observed on the final
-    * write's scan. Staging is read with the schema just written, so no
-    * footer inference runs. */
+  /** Stage then load, with one write: the slice, cast to the final
+    * table's types, clustered and partitioned as the final table, is
+    * written to staging, then its files are moved into `finalPath` — the
+    * Hive INSERT pattern, so every row is encoded once. One `observe` on
+    * the slice below the cast gathers the row count, the HWM (over the
+    * pre-cast values) and the number of rows that fail a cast or a NOT
+    * NULL; the write runs it, so on success nothing reads staging or the
+    * slice again. Returns `Left(violations)` (a capped sample taken over
+    * the slice, so it shows source values; nothing moved, `finalPath`
+    * untouched) or `Right(Staged)`. In overwrite mode staging replaces
+    * `finalPath`; in append mode each data file moves to its relative
+    * path under it. Staging does not outlive a successful load, and it
+    * must be on the same filesystem as `finalPath` (checked before the
+    * write). */
   def stageAndLoad(
       df: DataFrame,
       stagingPath: String,
@@ -144,34 +155,82 @@ object StagedLoad {
       partitionCols: Seq[String] = Nil,
       finalMode: String = "overwrite",
       sortCols: Seq[String] = Nil): Either[DataFrame, Staged] = {
-    df.write.mode("overwrite").parquet(stagingPath)
-    val staged = df.sparkSession.read.schema(df.schema).parquet(stagingPath)
-    val bad = castViolations(staged, schema)
-      .unionByName(notNullViolations(staged, schema), allowMissingColumns = true)
-    if (!bad.isEmpty) Left(bad)
+    require(finalMode == "overwrite" || finalMode == "append",
+      s"staged load: final mode must be overwrite or append: $finalMode")
+    val spark = df.sparkSession
+    val (staging, target) = (new Path(stagingPath), new Path(finalPath))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = staging.getFileSystem(conf)
+    val finalFs = target.getFileSystem(conf)
+    if (fs.getUri != finalFs.getUri)
+      throw new IllegalArgumentException(s"staged load: staging " +
+        s"$stagingPath (${fs.getUri}) and final $finalPath " +
+        s"(${finalFs.getUri}) are on different filesystems; the load " +
+        "moves staged files by rename")
+    val obs = Observation()
+    val hwmMax = Option.when(hwmKeys.nonEmpty)(
+      max(struct(hwmKeys.map(col): _*)).as("hwm"))
+    val violating = (castViolation(schema) ++ notNullViolation(schema))
+      .reduceOption(_ || _).map(bad => count(when(bad, lit(1))).as("violations"))
+    val projected = df
+      .observe(obs, count(lit(1)).as("rows"), hwmMax.toSeq ++ violating: _*)
+      .select(castProjection(schema): _*)
+    // Sort/cluster columns (reference operation/sort_columns.py; BigQuery
+    // clustering): sortWithinPartitions gives per-file clustering ->
+    // better min/max pruning on the sorted columns, no extra shuffle.
+    val clustered =
+      if (sortCols.nonEmpty)
+        projected.sortWithinPartitions(sortCols.map(col): _*)
+      else projected
+    val writer = clustered.write.mode("overwrite")
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
+     else writer).parquet(stagingPath)
+    val row = try Await.result(obs.future, ObservedMetricsTimeout)
+      catch { case e: TimeoutException => throw new IllegalStateException(
+        s"staged load $stagingPath -> $finalPath: observed row count and " +
+          s"HWM did not arrive within $ObservedMetricsTimeout", e) }
+    val failed = violating.isDefined && row.getLong(row.length - 1) > 0
+    if (failed)
+      Left(castViolations(df, schema)
+        .unionByName(notNullViolations(df, schema), allowMissingColumns = true))
     else {
-      val obs = Observation()
-      val hwmMax = Option.when(hwmKeys.nonEmpty)(
-        max(struct(hwmKeys.map(col): _*)).as("hwm")).toSeq
-      val projected = staged.observe(obs, count(lit(1)).as("rows"), hwmMax: _*)
-        .select(castProjection(schema): _*)
-      // Sort/cluster columns (reference operation/sort_columns.py; BigQuery
-      // clustering): sortWithinPartitions gives per-file clustering ->
-      // better min/max pruning on the sorted columns, no extra shuffle.
-      val clustered =
-        if (sortCols.nonEmpty)
-          projected.sortWithinPartitions(sortCols.map(col): _*)
-        else projected
-      val writer = clustered.write.mode(finalMode)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-       else writer).parquet(finalPath)
-      val row = try Await.result(obs.future, ObservedMetricsTimeout)
-        catch { case e: TimeoutException => throw new IllegalStateException(
-          s"staged load $stagingPath -> $finalPath: observed row count and " +
-            s"HWM did not arrive within $ObservedMetricsTimeout", e) }
-      val hwm = if (hwmKeys.isEmpty) None
-        else Option(row.getStruct(1)).map(s => hwmKeys.indices.map(s.get))
+      if (finalMode == "append") moveFiles(fs, staging, target)
+      else install(fs, staging, target)
+      fs.delete(staging, true)
+      spark.catalog.refreshByPath(finalPath)
+      val hwm = hwmMax.flatMap(_ => Option(row.getStruct(1)))
+        .map(s => hwmKeys.indices.map(s.get))
       Right(Staged(row.getLong(0), hwm))
+    }
+  }
+
+  /** Overwrite: staging replaces `target`. Hadoop's rename onto an
+    * existing directory nests the source inside it and still returns
+    * true, so a `target` that came back after the delete is an error. */
+  private def install(fs: FileSystem, staging: Path, target: Path): Unit = {
+    fs.delete(target, true)
+    fs.mkdirs(target.getParent)
+    val nested = new Path(target, staging.getName)
+    if (!fs.rename(staging, target) || fs.exists(nested)) {
+      if (fs.exists(nested)) fs.rename(nested, staging)
+      throw new IllegalStateException(s"staged load: cannot move $staging " +
+        s"onto $target")
+    }
+  }
+
+  /** Append: every data file under `from` moves to the same relative path
+    * under `to`; `_`/`.` names (`_SUCCESS`, checksums) stay behind. */
+  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
+    fs.mkdirs(to)
+    fs.listStatus(from).filterNot { st =>
+      val name = st.getPath.getName
+      name.startsWith("_") || name.startsWith(".")
+    }.foreach { st =>
+      val dst = new Path(to, st.getPath.getName)
+      if (st.isDirectory) moveFiles(fs, st.getPath, dst)
+      else if (fs.exists(dst) || !fs.rename(st.getPath, dst))
+        throw new IllegalStateException(
+          s"staged load: cannot move ${st.getPath} to $dst")
     }
   }
 }

@@ -147,6 +147,23 @@ private[streaming] object SwapDir {
   }
 }
 
+/** Advisory lock serializing a store's ingest against its own compaction,
+  * keyed by the store root (the lock file sits in `<root>__lock`). A
+  * compaction's [[SwapDir.install]] moves the live generation aside and
+  * installs a temp built from it: an ingest writing into the live root or
+  * running [[SwapDir.recover]] inside that window would land its rows in
+  * the generation being replaced, or put `current` back. Blocking, so a
+  * compaction arriving mid-batch runs right after the batch and a batch
+  * arriving mid-compaction waits instead of failing the stream. Local
+  * driver-host scope, like every [[graft.orchestrate.OffloadLock]].
+  * NOT re-entrant: the OS file lock is held per JVM, so a locked call
+  * must never reach another locked call on the same store. */
+private[streaming] object StoreLock {
+  def apply[T](root: String)(body: => T): T =
+    graft.orchestrate.OffloadLock.withBlockingLock(
+      root.stripPrefix("file:") + "__lock", "store")(body)
+}
+
 /** One swap-managed relation that every micro-batch merges into — the
   * shared body of the merge stores ([[StreamingHll]], [[StreamingKmv]],
   * [[StreamingSketch]], [[StreamingHistogram]], [[StreamingDayStats]]).

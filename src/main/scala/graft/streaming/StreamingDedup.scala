@@ -103,9 +103,12 @@ object StreamingDedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration), hwmPath(cfg))
 
   /** One micro-batch: sign → band → probe index → append pairs → append
-    * banded index rows. */
+    * banded index rows, under the index's [[StoreLock]]. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      cfg: Config): Unit = {
+                                      cfg: Config): Unit =
+    StoreLock(cfg.indexPath) { ingest(batch, batchId, cfg) }
+
+  private def ingest(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // fully-committed batches skip on replay; a batch that crashed after
@@ -172,7 +175,8 @@ object StreamingDedup {
     * skipping survives the fold; new batches (id > HWM > -1) land
     * beside the folded partition. Maintenance only — [[probeIndex]] is
     * correct (just slower) without it, and a crashed pass is healed by
-    * the next ingest or compaction ([[SwapDir.recover]]). */
+    * the next ingest or compaction ([[SwapDir.recover]]). Runs under the
+    * index's [[StoreLock]], so it never interleaves with an ingest. */
   /** Path-only convenience — compaction touches nothing but the index. */
   def compactIndex(spark: SparkSession, indexPath: String)
       : graft.sink.Compaction.CompactionResult =
@@ -180,6 +184,10 @@ object StreamingDedup {
       pairsPath = indexPath, checkpointDir = indexPath))
 
   def compactIndex(spark: SparkSession, cfg: Config)
+      : graft.sink.Compaction.CompactionResult =
+    StoreLock(cfg.indexPath) { compactLocked(spark, cfg) }
+
+  private def compactLocked(spark: SparkSession, cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
     val dir = new org.apache.hadoop.fs.Path(cfg.indexPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)

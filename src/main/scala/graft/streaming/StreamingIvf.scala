@@ -53,10 +53,15 @@ object StreamingIvf {
       .getFileSystem(spark.sparkContext.hadoopConfiguration), hwmPath(cfg))
 
   /** One micro-batch: assign with the pinned model, land the batch's own
-    * (batch_id, cell) partitions — replay-idempotent by construction. */
+    * (batch_id, cell) partitions — replay-idempotent by construction —
+    * under the index's [[StoreLock]]. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
                                       model: IvfIndex.Model,
-                                      cfg: Config): Unit = {
+                                      cfg: Config): Unit =
+    StoreLock(cfg.indexPath) { ingest(batch, batchId, model, cfg) }
+
+  private def ingest(batch: DataFrame, batchId: Long, model: IvfIndex.Model,
+                     cfg: Config): Unit = {
     val spark = batch.sparkSession
     // guard BEFORE the empty short-circuit (the StreamingRank fix): a
     // misbound store must fail loudly even on an empty batch
@@ -80,9 +85,15 @@ object StreamingIvf {
     * rewrite into ONE `batch_id=-1` partition per cell, preserving the
     * `ivf_cell` directory (the probe's pruning unit). The HWM rides a
     * sibling file, untouched. Same maintenance contract as
-    * [[StreamingDedup.compactIndex]]; the batch-built (cell-only) index
-    * keeps using the generic [[graft.sink.Compaction]] pass. */
+    * [[StreamingDedup.compactIndex]], the same [[StoreLock]]; the
+    * batch-built (cell-only) index keeps using the generic
+    * [[graft.sink.Compaction]] pass. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, cfg: Config)
+      : graft.sink.Compaction.CompactionResult =
+    StoreLock(cfg.indexPath) { compactLocked(spark, cfg) }
+
+  private def compactLocked(spark: org.apache.spark.sql.SparkSession,
+                            cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
     import org.apache.spark.sql.functions.{col, lit}
     val dir = new org.apache.hadoop.fs.Path(cfg.indexPath)

@@ -99,9 +99,13 @@ object StreamingRank {
     * (bucket-pruned probe, own batch excluded), batch-scoped dynamic
     * overwrite, HWM last. Exactly-once under replay and mid-crash.
     * Public for the CLI's `rank-merge` (batch-at-a-time driving, the
-    * [[StreamingCc.mergeBatch]] pattern). */
+    * [[StreamingCc.mergeBatch]] pattern). Runs under the store's
+    * [[StoreLock]], as [[compactEdges]] does. */
   def ingestBatch(batch: DataFrame, batchId: Long,
-                  cfg: Config): Unit = {
+                  cfg: Config): Unit =
+    StoreLock(cfg.storeDir) { ingest(batch, batchId, cfg) }
+
+  private def ingest(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     val spark = batch.sparkSession
     // guard BEFORE the empty short-circuit: a reset checkpoint or
     // misbound store (batchId below the committed HWM) must fail loudly
@@ -271,8 +275,13 @@ object StreamingRank {
   /** Fold committed edge batches into one `batch_id=-1` partition per
     * bucket (the [[StreamingDedup.compactIndex]] scheme): the probe's
     * file cost stays flat as batch count grows; uncommitted partitions
-    * are preserved for their replay. */
+    * are preserved for their replay. Runs under the store's
+    * [[StoreLock]], so it never interleaves with an ingest. */
   def compactEdges(spark: SparkSession, cfg: Config)
+      : graft.sink.Compaction.CompactionResult =
+    StoreLock(cfg.storeDir) { compactLocked(spark, cfg) }
+
+  private def compactLocked(spark: SparkSession, cfg: Config)
       : graft.sink.Compaction.CompactionResult = {
     val dir = edgesDir(cfg)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -68,20 +68,9 @@ object StreamingSampler {
   private def fs(spark: org.apache.spark.sql.SparkSession, cfg: Config) =
     new Path(cfg.massPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Advisory lock serializing batch commits against [[compact]]'s
-    * two-rename swap (r16 VERDICT ask #6): blocking, so a compact arriving
-    * mid-batch queues behind the batch instead of corrupting the swap, and
-    * a batch arriving mid-compact waits instead of crashing the stream.
-    * Keyed by the mass store path; the lock directory rides beside it
-    * (local driver-host scope, like every OffloadLock — a cluster
-    * deployment swaps the lock backend, not the call sites). */
-  private def withStoreLock[T](cfg: Config)(body: => T): T =
-    graft.orchestrate.OffloadLock.withBlockingLock(
-      cfg.massPath.stripPrefix("file:") + "__lock", "sampler-store")(body)
-
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
                                       cfg: Config): Unit =
-    withStoreLock(cfg) { processBatchLocked(batch, batchId, cfg) }
+    StoreLock(cfg.massPath) { processBatchLocked(batch, batchId, cfg) }
 
   private def processBatchLocked(batch: DataFrame, batchId: Long,
                                       cfg: Config): Unit = {
@@ -180,13 +169,13 @@ object StreamingSampler {
     *
     * Concurrency: the whole compact (existence check through swap) runs
     * under the SAME advisory lock as every batch commit
-    * ([[withStoreLock]]), so the non-atomic two-rename swap can never
+    * ([[StoreLock]]), so the non-atomic two-rename swap can never
     * interleave with a processBatch's [[SwapDir.recover]] — the race
     * that previously had to be excluded by an operational "run between
     * batches" contract is now structurally impossible on one driver host
     * (`StreamingSamplerSpec` forces it and observes mutual exclusion). */
   def compact(spark: org.apache.spark.sql.SparkSession,
-              cfg: Config): Unit = withStoreLock(cfg) {
+              cfg: Config): Unit = StoreLock(cfg.massPath) {
     compactLocked(spark, cfg)
   }
 

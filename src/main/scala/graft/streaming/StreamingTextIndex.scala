@@ -101,8 +101,13 @@ object StreamingTextIndex {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(parts: _*).parquet(path)
 
+  /** One micro-batch under the store's [[StoreLock]] (keyed by the
+    * totals root, which holds the HWM), as [[compact]] runs. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      cfg: Config): Unit = {
+                                      cfg: Config): Unit =
+    StoreLock(cfg.totalsPath) { ingest(batch, batchId, cfg) }
+
+  private def ingest(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     val spark = batch.sparkSession
     if (!Hwm.replayGuard(batchId, lastBatch(spark, cfg),
         "streaming text index")) return // committed replay: skip
@@ -160,8 +165,13 @@ object StreamingTextIndex {
     * never collide with the folded one. Crash-safe by one
     * [[SwapDir.install]] per root; readers resolve to the aside while a
     * fold is between its renames, so an interrupted fold can never make
-    * the index look empty, and the next batch or fold heals it. */
-  def compact(spark: SparkSession, cfg: Config): Unit = {
+    * the index look empty, and the next batch or fold heals it. The fold
+    * holds the [[StoreLock]] every batch takes, so no ingest lands in a
+    * generation being replaced. */
+  def compact(spark: SparkSession, cfg: Config): Unit =
+    StoreLock(cfg.totalsPath) { compactLocked(spark, cfg) }
+
+  private def compactLocked(spark: SparkSession, cfg: Config): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     // fold ONLY committed batches (id <= HWM; negative migrated/folded
     // ids included): an uncommitted partition — its batch crashed

@@ -178,13 +178,13 @@ class OffloadRunnerSpec extends SparkSpec {
       "staged_rows=\\d+ transport_exact=true tasks=\\d+"), m.detail)
     // the transport accounting is EXACT for a serial offload (r15 ask
     // #8): the listener's rows-written delta across stage_and_load
-    // equals twice the staged count (staging write + final write), and
-    // the slice is non-empty
+    // equals the staged count (one write to staging, whose files then
+    // move into the final table), and the slice is non-empty
     val kv = m.detail.split(" ")
       .map(_.split("=")).map(a => a(0) -> a(1)).toMap
     val staged = kv("staged_rows").toLong
     assert(staged > 0L)
-    assert(kv("transport_rows").toLong === 2 * staged)
+    assert(kv("transport_rows").toLong === staged)
     val out = spark.read.parquet(s"$base/final")
     assert(out.filter(org.apache.spark.sql.functions.col("p_brand")
       .contains("#")).count() == 0)
@@ -194,10 +194,11 @@ class OffloadRunnerSpec extends SparkSpec {
     assert(OffloadLock.tryAcquire(s"$base/meta/locks", "part").isDefined)
   }
 
-  test("a serial full offload reads the source twice and staging once") {
-    // source → staging, staging → final (which also observes the staged
-    // count and HWM), and verify_counts' fresh count of the source slice.
-    // A recount of staging or a separate HWM probe adds one more pass.
+  test("a serial full offload reads the source twice and nothing else") {
+    // source → staging (which also observes the staged count and HWM;
+    // the staged files then move into the final table), and
+    // verify_counts' fresh count of the source slice. A read of staging
+    // or the final table, or a separate HWM probe, adds one more pass.
     val base = tmpBase()
     val cfg = OffloadRunner.OffloadConfig(
       sourceTable = "lineitem",
@@ -218,11 +219,71 @@ class OffloadRunnerSpec extends SparkSpec {
     assert(steps.forall(_.ok), steps.mkString("\n"))
     val landed = spark.read.parquet(cfg.finalPath).count()
     assert(landed > 0L)
-    assert(listener.snapshot.map(_.recordsRead).sum == 3 * landed)
+    assert(listener.snapshot.map(_.recordsRead).sum == 2 * landed)
     val meta = MetadataStore.load(cfg.metadataDir, "lineitem").get
     val expectedMax = spark.read.parquet(cfg.sourcePath)
       .agg(max(col("l_orderkey"))).head().getLong(0)
     assert(meta.incrementalHighValue == Seq(expectedMax.toString))
+  }
+
+  /** Spark jobs started while `body` runs, counted between listener-bus
+    * drains; `mark` (drains, then reads the count so far) lets a body
+    * split its own count. */
+  private def jobsDuring[T](body: (() => Int) => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def mark(): Int = {
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      jobs.get
+    }
+    mark()
+    spark.sparkContext.addSparkListener(listener)
+    try { val out = body(() => mark()); (out, mark()) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def lineitemCfg(base: String, key: String) =
+    OffloadRunner.OffloadConfig(
+      sourceTable = "lineitem",
+      sourcePath = sf("sf0.001") + "/lineitem.parquet",
+      stagingPath = s"$base/staging",
+      finalPath = s"$base/final",
+      metadataDir = s"$base/meta",
+      incrementalKey = Seq(key))
+
+  test("Spark jobs per offload path: full, append and one chunk") {
+    // full offload with an HWM key: the source's schema read, the staging
+    // write (which observes the rows and HWM) and verify_counts' recount
+    // (two jobs: its shuffle stage and the result); no job reads staging
+    // or the final table back. An append runs the same four.
+    val full = lineitemCfg(tmpBase(), "l_orderkey")
+    val (fullSteps, fullJobs) = jobsDuring(_ => OffloadRunner.offload(spark,
+      full.copy(predicateDsl = Some("(column(l_orderkey) < numeric(700))"))))
+    assert(fullSteps.forall(_.ok), fullSteps.mkString("\n"))
+    assert(fullJobs == 4, s"full offload ran $fullJobs jobs")
+    // the next run appends the rows beyond the stored HWM
+    val (appendSteps, appendJobs) =
+      jobsDuring(_ => OffloadRunner.offload(spark, full))
+    assert(appendSteps.exists(_.detail.contains("mode=append")), appendSteps)
+    assert(appendJobs == 4, s"append offload ran $appendJobs jobs")
+    // one append chunk, from the second chunk's plan to the third's: the
+    // pre-append HWM probe (two jobs) and the staging write
+    val chunked = lineitemCfg(tmpBase(), "l_shipdate")
+    val marks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    jobsDuring { mark =>
+      OffloadRunner.offloadChunked(spark, chunked.copy(progress = Some(s =>
+          if (s.name == "chunk_plan") marks += mark())),
+        c => date_format(col(c), "yyyy-MM"), hwmCol = "l_shipdate",
+        maxRowsPerChunk = 2000L)
+    }
+    assert(marks.length > 2, marks)
+    assert(marks(2) - marks(1) == 3,
+      s"one append chunk ran ${marks(2) - marks(1)} jobs")
   }
 
   test("dry run renders steps without writing anything") {

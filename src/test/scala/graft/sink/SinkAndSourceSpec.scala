@@ -2,6 +2,8 @@ package graft.sink
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -57,9 +59,10 @@ class StagedLoadSpec extends SparkSpec {
   }
 
   /** Stage and load `df`, then check the observed [[StagedLoad.Staged]]
-    * against the recount it replaces: a fresh count of the staging files
-    * and `CrossValidator.maxProbe` over them, compared as rendered HWM
-    * strings. */
+    * against the recount it replaces: a fresh count of the staged files,
+    * now moved into the final table, and `CrossValidator.maxProbe` over
+    * them, compared as rendered HWM strings. Staging is gone after the
+    * move. */
   private def observedMatchesRecount(df: org.apache.spark.sql.DataFrame,
       keys: Seq[String], partitionCols: Seq[String] = Nil,
       sortCols: Seq[String] = Nil): StagedLoad.Staged = {
@@ -69,11 +72,11 @@ class StagedLoadSpec extends SparkSpec {
       schema, keys, partitionCols, sortCols = sortCols)
     assert(out.isRight)
     val st = out.toOption.get
-    val staging = spark.read.parquet(s"$base/staging")
-    assert(st.rows == staging.count())
+    val loaded = spark.read.parquet(s"$base/final")
+    assert(st.rows == loaded.count())
     def rendered(h: Option[Seq[Any]]) = h.map(_.map(String.valueOf))
-    assert(rendered(st.hwm) == rendered(CrossValidator.maxProbe(staging, keys)))
-    assert(spark.read.parquet(s"$base/final").count() == st.rows)
+    assert(rendered(st.hwm) == rendered(CrossValidator.maxProbe(loaded, keys)))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/staging")))
     st
   }
 
@@ -130,6 +133,78 @@ class StagedLoadSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/final")))
   }
 
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(root.relativize(_).toString)
+      .filterNot(_.split('/').last.matches("[_.].*")).toSet
+  }
+
+  test("an overwrite load replaces a final table holding other files") {
+    val base = Files.createTempDirectory("graft_move_overwrite").toString
+    Seq(("x", 1)).toDF("a", "b").write.parquet(s"$base/final")
+    val old = dataFiles(s"$base/final")
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+    val out = StagedLoad.stageAndLoad(li, s"$base/staging", s"$base/final",
+      graft.types.TypeMapper.fromStructType(li.schema), hwmKeys = Nil)
+    assert(out.toOption.get.rows == li.count())
+    val now = dataFiles(s"$base/final")
+    assert(now.nonEmpty && (now intersect old).isEmpty, now)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/final/staging")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/staging")))
+    assert(spark.read.parquet(s"$base/final").count() == li.count())
+  }
+
+  test("an append load moves each file under its partition directory") {
+    val base = Files.createTempDirectory("graft_move_append").toString
+    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+      .withColumn("part_m", date_format(col("l_shipdate"), "yyyy"))
+    val schema = graft.types.TypeMapper.fromStructType(li.schema)
+    val (first, second) =
+      (li.filter(col("l_orderkey") < 700), li.filter(col("l_orderkey") >= 700))
+    def load(df: org.apache.spark.sql.DataFrame, mode: String) =
+      StagedLoad.stageAndLoad(df, s"$base/staging", s"$base/final", schema,
+        hwmKeys = Nil, partitionCols = Seq("part_m"), finalMode = mode)
+    assert(load(first, "overwrite").isRight)
+    val old = dataFiles(s"$base/final")
+    assert(load(second, "append").toOption.get.rows == second.count())
+    val now = dataFiles(s"$base/final")
+    assert(old.subsetOf(now) && now.size > old.size)
+    assert(now.forall(_.matches("part_m=\\d{4}/[^/]+\\.parquet")), now)
+    // every file holds only its directory's partition value
+    (now -- old).foreach { f =>
+      val year = f.stripPrefix("part_m=").take(4)
+      val years = spark.read.parquet(s"$base/final/$f")
+        .select(date_format(col("l_shipdate"), "yyyy")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      assert(years == Seq(year), f)
+    }
+    val loaded = spark.read.parquet(s"$base/final")
+    assert(loaded.count() == li.count())
+    assert(loaded.groupBy("part_m").count().collect().map(r =>
+      r.get(0).toString -> r.getLong(1)).toMap ==
+      li.groupBy("part_m").count().collect().map(r =>
+        r.getString(0) -> r.getLong(1)).toMap)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/staging")))
+  }
+
+  test("staging on another filesystem than final is refused before any " +
+      "write") {
+    val base = Files.createTempDirectory("graft_move_fs").toString
+    spark.sparkContext.hadoopConfiguration
+      .setClass("fs.otherfs.impl", classOf[OtherSchemeFs],
+        classOf[org.apache.hadoop.fs.FileSystem])
+    val df = Seq(1, 2).toDF("v")
+    val e = intercept[IllegalArgumentException] {
+      StagedLoad.stageAndLoad(df, s"otherfs://$base/staging",
+        s"$base/final", graft.types.TypeMapper.fromStructType(df.schema),
+        hwmKeys = Nil)
+    }
+    assert(e.getMessage.contains(s"otherfs://$base/staging") &&
+      e.getMessage.contains(s"$base/final"), e.getMessage)
+    assert(Files.list(java.nio.file.Paths.get(base)).count() == 0L)
+  }
+
   test("transforms: suppress drops, null nulls, translate/regexp rewrite") {
     import StagedLoad.Transform
     val df = Seq(("a#b", "hello", 1.0, 5)).toDF("t", "r", "p", "s")
@@ -144,6 +219,14 @@ class StagedLoadSpec extends SparkSpec {
     assert(row.getString(1) == "heLo")
     assert(row.isNullAt(2))
   }
+}
+
+/** The local filesystem under a second scheme: a staging path on it is a
+  * different filesystem from a `file:` final path. */
+class OtherSchemeFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.LocalFileSystem()) {
+  override def getScheme: String = "otherfs"
+  override def getUri: java.net.URI = java.net.URI.create("otherfs:///")
 }
 
 class SamplingSpec extends SparkSpec {

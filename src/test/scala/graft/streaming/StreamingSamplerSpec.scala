@@ -151,8 +151,7 @@ class StreamingSamplerSpec extends SparkSpec {
     val releaseHolder = new java.util.concurrent.CountDownLatch(1)
     val compactDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val holder = new Thread(() =>
-      graft.orchestrate.OffloadLock.withBlockingLock(
-        c.massPath + "__lock", "sampler-store") {
+      StoreLock(c.massPath) {
         holderHasLock.countDown()
         releaseHolder.await()
       })
