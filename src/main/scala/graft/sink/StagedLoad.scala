@@ -196,7 +196,6 @@ object StagedLoad {
     else {
       if (finalMode == "append") moveFiles(fs, staging, target)
       else install(fs, staging, target)
-      fs.delete(staging, true)
       spark.catalog.refreshByPath(finalPath)
       val hwm = hwmMax.flatMap(_ => Option(row.getStruct(1)))
         .map(s => hwmKeys.indices.map(s.get))
@@ -218,19 +217,34 @@ object StagedLoad {
     }
   }
 
-  /** Append: every data file under `from` moves to the same relative path
-    * under `to`; `_`/`.` names (`_SUCCESS`, checksums) stay behind. */
-  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
-    fs.mkdirs(to)
-    fs.listStatus(from).filterNot { st =>
-      val name = st.getPath.getName
-      name.startsWith("_") || name.startsWith(".")
-    }.foreach { st =>
-      val dst = new Path(to, st.getPath.getName)
-      if (st.isDirectory) moveFiles(fs, st.getPath, dst)
-      else if (fs.exists(dst) || !fs.rename(st.getPath, dst))
-        throw new IllegalStateException(
-          s"staged load: cannot move ${st.getPath} to $dst")
+  /** Append: every data file under `staging` moves to the same relative
+    * path under `target`, then staging is deleted. Every directory is
+    * walked, whatever its name: a partition directory is `<col>=<value>`,
+    * and the column may start with `_`. Only plain files named `_…`/`.…`
+    * (`_SUCCESS`, checksums) stay behind; staging is kept, and the load
+    * fails, if a data file is still in it after the move. */
+  private def moveFiles(fs: FileSystem, staging: Path, target: Path): Unit = {
+    def move(from: Path, to: Path): Unit = {
+      fs.mkdirs(to)
+      fs.listStatus(from).foreach { st =>
+        val dst = new Path(to, st.getPath.getName)
+        if (st.isDirectory) move(st.getPath, dst)
+        else if (isDataFile(st.getPath) &&
+                 (fs.exists(dst) || !fs.rename(st.getPath, dst)))
+          throw new IllegalStateException(
+            s"staged load: cannot move ${st.getPath} to $dst")
+      }
     }
+    move(staging, target)
+    val left = fs.listFiles(staging, true)
+    while (left.hasNext) {
+      val f = left.next().getPath
+      if (isDataFile(f)) throw new IllegalStateException(
+        s"staged load: $f is still in staging after the move to $target")
+    }
+    fs.delete(staging, true)
   }
+
+  private def isDataFile(p: Path): Boolean =
+    !p.getName.startsWith("_") && !p.getName.startsWith(".")
 }

@@ -188,6 +188,25 @@ class StagedLoadSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/staging")))
   }
 
+  test("an append into a final partitioned by a column named _p keeps " +
+      "every row") {
+    val base = Files.createTempDirectory("graft_move_underscore").toString
+    val df = (1 to 40).map(i => (i, s"k${i % 4}")).toDF("v", "_p")
+    val schema = graft.types.TypeMapper.fromStructType(df.schema)
+    def load(part: org.apache.spark.sql.DataFrame, mode: String) =
+      StagedLoad.stageAndLoad(part, s"$base/staging", s"$base/final", schema,
+        hwmKeys = Nil, partitionCols = Seq("_p"), finalMode = mode)
+    assert(load(df.filter(col("v") <= 10), "overwrite").isRight)
+    assert(load(df.filter(col("v") > 10), "append").toOption.get.rows == 30)
+    assert(dataFiles(s"$base/final").forall(_.matches("_p=k\\d/[^/]+")))
+    val loaded = spark.read.parquet(s"$base/final")
+    assert(loaded.count() == 40)
+    assert(loaded.groupBy("_p").count().collect().map(r =>
+      r.getString(0) -> r.getLong(1)).toMap ==
+      (0 to 3).map(i => s"k$i" -> 10L).toMap)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/staging")))
+  }
+
   test("staging on another filesystem than final is refused before any " +
       "write") {
     val base = Files.createTempDirectory("graft_move_fs").toString
