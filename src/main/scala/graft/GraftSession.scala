@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions, cpus from `SPARK_GRAFT_CPUS` (default: the host's
   * processors); a deployment `master` (default `SPARK_GRAFT_MASTER`)
   * replaces the local master. UTC session time, nanosecond parquet
-  * timestamps read as longs (see `Tables.normalizeTs`), AQE on, UI off.
+  * timestamps read as longs (see `Tables.normalizeTs`), AQE on, UI off,
+  * round-robin repartition sorted first (which `Tables.fanOut` requires).
   * Under a deployment master the UI stays off too and the shuffle
   * partitions still follow cpus, i.e. the driver host's processors unless
   * `SPARK_GRAFT_CPUS` is set to the cluster's core count. Two builders
@@ -29,6 +30,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config(Tables.SortBeforeRepartition, "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -33,9 +33,7 @@ object Json {
     * backslash-escaped; every control character, tab and newline too,
     * becomes a four-hex-digit unicode escape, so a rendered value never
     * breaks a line-oriented log. Everything else, U+2028 and non-BMP
-    * characters included, passes through. Bench ring lines are matched
-    * by re-rendering their `sf` value, so this output must stay
-    * byte-stable. */
+    * characters included, passes through. */
   def quote(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 2).append('"')
     s.foreach {
@@ -79,6 +77,11 @@ object Json {
       field(key).filter(_.isNumber).map(_.longValue)
     def double(key: String): Option[Double] =
       field(key).filter(_.isNumber).map(_.doubleValue)
+    def bool(key: String): Option[Boolean] =
+      field(key).filter(_.isBoolean).map(_.booleanValue)
+    /** An object field. */
+    def obj(key: String): Option[Obj] =
+      field(key).filter(_.isObject).map(new Obj(_))
     /** The object's keys, in document order. */
     def keys: Seq[String] = node.fieldNames.asScala.toSeq
     /** A string, boolean or array-of-strings field as text (Nil when

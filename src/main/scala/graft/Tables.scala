@@ -62,12 +62,12 @@ object Tables {
   def fanOut(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val n = sess.sparkContext.defaultParallelism
-    // determinism-under-retry contract ENFORCED, not assumed (r17
-    // advice): round-robin repartition is only safe against task
-    // retries while sortBeforeRepartition holds; a session that
-    // disabled it would silently void the guarantee this comment
-    // promises, so the helper re-asserts the default.
-    sess.conf.set("spark.sql.execution.sortBeforeRepartition", "true")
+    // Round-robin repartition is only safe against task retries while
+    // sortBeforeRepartition holds. GraftSession sets it (Spark's default
+    // too); a session that turned it off is refused, not changed.
+    require(sess.conf.get(SortBeforeRepartition).toBoolean,
+      s"fanOut needs $SortBeforeRepartition=true: round-robin repartition " +
+        "is deterministic under task retries only with it")
     // The probe (`df.rdd.getNumPartitions`) forces full physical
     // planning of the scan — double planning per CALL, growing with
     // file count at scale (r17 advice). The planned split count of a
@@ -82,6 +82,8 @@ object Tables {
     }
     if (planned * 2 < n) df.repartition(n) else df
   }
+
+  val SortBeforeRepartition = "spark.sql.execution.sortBeforeRepartition"
 
   private val fanOutProbe =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]

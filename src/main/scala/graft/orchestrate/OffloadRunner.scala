@@ -510,8 +510,13 @@ object OffloadRunner {
     // re-append); otherwise clear the marker and let the chunk re-run.
     MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
       .filter(_.pendingChunkKeys.nonEmpty).foreach { m =>
+        // final table absent: the append never started. Checked before the
+        // read, which would log a PATH_NOT_FOUND error for the absent path.
+        val finalDir = new org.apache.hadoop.fs.Path(cfg.finalPath)
         val appended =
-          try {
+          finalDir.getFileSystem(spark.sessionState.newHadoopConf())
+            .exists(finalDir) &&
+          (try {
             val fin = spark.read.parquet(cfg.finalPath)
             val beyond =
               if (m.incrementalHighValue.nonEmpty)
@@ -520,9 +525,9 @@ object OffloadRunner {
             !beyond.filter(
               chunkKeyCol(hwmCol).isInCollection(m.pendingChunkKeys)).isEmpty
           } catch {
-            // final table absent: the append never started
+            // a final directory with no data files: nothing was appended
             case _: org.apache.spark.sql.AnalysisException => false
-          }
+          })
         val hwm = if (appended) m.pendingChunkHwm else m.incrementalHighValue
         MetadataStore.save(cfg.metadataDir, m.copy(
           incrementalHighValue = hwm,

@@ -175,17 +175,6 @@ object JoinAdvisor {
     }
   }
 
-  /** [[adviseKeys]] + [[executeAdvised]] in one call. */
-  def adviseAndJoinKeys(left: DataFrame, right: DataFrame,
-                        keys: Seq[String], joinType: String = "inner",
-                        broadcastRowLimit: Long = 500000L,
-                        skewSharePpm: Long = 100000L,
-                        saltBuckets: Int = 16): (DataFrame, Advice) = {
-    val a = adviseKeys(left, right, keys, broadcastRowLimit, skewSharePpm)
-    (executeAdvised(left, right, keys, joinType, a, skewSharePpm,
-      saltBuckets), a)
-  }
-
   /** Quantile view of a key's frequency distribution (feeds the skew
     * report beside the single hottest-key share). */
   def keyQuantiles(df: DataFrame, key: String,

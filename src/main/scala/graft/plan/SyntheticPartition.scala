@@ -17,15 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object SyntheticPartition {
 
-  /** Date-truncated partition key (Y/M/D granularity) as a timestamp. */
-  def dateTruncKey(src: Column, granularity: String): Column =
-    granularity.toUpperCase match {
-      case "Y" => date_trunc("year", src)
-      case "M" => date_trunc("month", src)
-      case "D" => date_trunc("day", src)
-      case g   => throw new IllegalArgumentException(s"granularity $g")
-    }
-
   /** String-form date partition key, zero-padded — the `GOE_PART_M_...`
     * string shape (`LPAD(EXTRACT(...))` in the reference,
     * `backend_table.py:1878-1927`). "Y" -> "2024", "M" -> "2024-01",

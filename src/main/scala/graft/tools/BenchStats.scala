@@ -114,36 +114,35 @@ object BenchStats {
 
   /** Per-query medians, the `contended` self-label, and the SCALE
     * FACTOR of a PRIOR Bench artifact (the engine's own
-    * `bench/last_run.json` format — one `"name": {"median_sec":X…}`
-    * line per query). Pure text parsing so the cross-run defence needs
-    * no JSON library and stays unit-testable; a file that is not a
-    * Bench artifact parses to (false, "", empty) and the defence
-    * silently stands down. The sf comes along because the artifact
-    * path is shared across scale factors: comparing an sf0.1 run's
-    * medians against an sf0.001 smoke's would escalate the whole
-    * suite — the caller must stand down on an sf mismatch.
+    * `bench/last_run.json` format). A file that is not a whole Bench
+    * artifact (junk, or torn by a crash mid-write) parses to
+    * (false, "", empty) and the defence silently stands down. The sf
+    * comes along because the artifact path is shared across scale
+    * factors: comparing an sf0.1 run's medians against an sf0.001
+    * smoke's would escalate the whole suite — the caller must stand
+    * down on an sf mismatch.
     *
     * Queries that ERRORED in the prior run are EXCLUDED (r14 advice):
     * their median_sec is time-to-error, not a baseline — a query fixed
     * this round would otherwise trip the cross-run defence against a
     * meaningless tiny number (5 wasted re-runs, a permanent false
-    * `suspect` flag). Per-query objects are flat (no nested braces),
-    * so the body capture is a simple brace-free span. */
+    * `suspect` flag). */
   def parseArtifact(text: String)
-      : (Boolean, String, Map[String, Double]) = {
-    val contended = """"contended"\s*:\s*true""".r.findFirstIn(text).nonEmpty
-    val sf = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse("")
-    val q = """"([^"\\]+)"\s*:\s*\{([^{}]*)\}""".r
-    val med = """"median_sec"\s*:\s*([0-9.]+)""".r
-    (contended, sf,
-      q.findAllMatchIn(text).flatMap { m =>
-        val body = m.group(2)
-        if (body.contains("\"error\"")) None
-        else med.findFirstMatchIn(body)
-          .map(mm => m.group(1) -> mm.group(1).toDouble)
-      }.toMap)
-  }
+      : (Boolean, String, Map[String, Double]) =
+    doc(text).fold((false, "", Map.empty[String, Double])) { o =>
+      val medians = for {
+        q <- o.obj("queries").toSeq
+        name <- q.keys
+        entry <- q.obj(name) if !entry.keys.contains("error")
+        sec <- entry.double("median_sec")
+      } yield name -> sec
+      (o.bool("contended").contains(true), o.str("sf").getOrElse(""),
+        medians.toMap)
+    }
+
+  /** One JSON document, or None when the text does not parse. */
+  private[tools] def doc(text: String): Option[Json.Obj] =
+    scala.util.Try(Json.parse(text)).toOption
 
   /** Millisecond-precision seconds, Locale.ROOT — the one number
     * formatter every artifact line shares. */
@@ -227,9 +226,7 @@ object BenchStats {
     def flat(xs: Seq[(String, Double)]): String = xs.sortBy(_._1)
       .map { case (k, v) => Json.quote(k) + ":" + ms3(v) }
       .mkString("{", ",", "}")
-    // spreads AFTER queries, and both objects are FLAT — the parsers
-    // bound each at its closing brace, so neither map bleeds into the
-    // other and pre-spreads ring lines stay parseable
+    // spreads is optional: ring lines written before it still parse
     val sp = if (spreads.isEmpty) ""
              else s""","spreads":${flat(spreads)}"""
     s"""{"ts_ms":$tsMillis,"sf":${Json.quote(sf)},""" +
@@ -251,9 +248,7 @@ object BenchStats {
     * and rotate together. Pure so the spec pins the policy without
     * touching a filesystem. */
   def rotateRing(lines: Seq[String], keep: Int = RingKeep): Seq[String] = {
-    val sfRe = """"sf"\s*:\s*"([^"]*)"""".r
-    def sfOf(l: String): String =
-      sfRe.findFirstMatchIn(l).map(_.group(1)).getOrElse("")
+    def sfOf(l: String): String = doc(l).flatMap(_.str("sf")).getOrElse("")
     val k = math.max(keep, 1)
     val keepIdx = lines.zipWithIndex.groupBy { case (l, _) => sfOf(l) }
       .values.flatMap(_.takeRight(k).map(_._2)).toSet
@@ -262,8 +257,8 @@ object BenchStats {
 
   /** Parse `ring.jsonl` text into the per-run query-median maps
     * ELIGIBLE as a baseline: same scale factor, self-labeled
-    * uncontended. Oldest first. Same pure-text discipline as
-    * [[parseArtifact]]: a malformed line contributes nothing. */
+    * uncontended. Oldest first. A line that does not
+    * parse contributes nothing. */
   def parseRing(text: String, sf: String): Seq[Map[String, Double]] =
     parseRingObject(text, sf, "queries")
 
@@ -277,27 +272,15 @@ object BenchStats {
       : Seq[Map[String, Double]] =
     parseRingObject(text, sf, "spreads")
 
-  /** One flat `"key":{…}` object per eligible ring line, BOUNDED at
-    * the object's closing brace — the queries and spreads maps are
-    * siblings on one line, so an unbounded scan would swallow the
-    * later map into the earlier one. */
+  /** The `key` object of each eligible ring line, as name -> seconds. */
   private def parseRingObject(text: String, sf: String,
-      key: String): Seq[Map[String, Double]] = {
-    val sfEsc = "\"sf\":" + Json.quote(sf)
-    val tag = "\"" + key + "\":{"
-    val q = """"([^"\\]+)"\s*:\s*([0-9.]+)""".r
-    text.linesIterator
-      .filter(l => l.contains(sfEsc) && l.contains("\"contended\":false"))
-      .map { l =>
-        val start = l.indexOf(tag)
-        val end = if (start < 0) -1 else l.indexOf('}', start)
-        if (end < 0) Map.empty[String, Double]
-        else q.findAllMatchIn(l.substring(start + tag.length, end))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      key: String): Seq[Map[String, Double]] =
+    text.linesIterator.flatMap(doc)
+      .filter(o => o.str("sf").contains(sf) && o.bool("contended").contains(false))
+      .map(o => o.obj(key).fold(Map.empty[String, Double])(m =>
+        m.keys.flatMap(k => m.double(k).map(k -> _)).toMap))
       .filter(_.nonEmpty)
       .toSeq
-  }
 
   /** The ring baseline for one query: the median of its medians across
     * the eligible runs — None when no eligible run recorded it (the

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json
+
 /** Empirical scaling-exponent probe (the r16-verdict ask): correctness is
   * proven at sf0.01 and the 100 TB story rests on plan reading — this tool
   * adds the measured slope. It explodes sf0.1 by ×A and ×B (default 8/32)
@@ -117,14 +119,28 @@ object ScaleProbe {
     Files.write(out.resolve("_DONE"), Array.emptyByteArray)
   }
 
-  /** Slowest-N query names from the last bench artifact (regex-parsed: the
-    * artifact is our own fixed writer format, a JSON lib adds nothing). */
+  /** Slowest-N query names from the last bench artifact; a query that
+    * errored there is left out, as [[BenchStats.parseArtifact]] does. */
   private[tools] def slowestFromBench(artifact: String, n: Int)
-      : Seq[String] = {
-    val re = """"(q[0-9][^"]*)": \{"median_sec":([0-9.]+)""".r
-    re.findAllMatchIn(artifact).map(m => (m.group(1), m.group(2).toDouble))
-      .toSeq.sortBy(-_._2).take(n).map(_._1)
-  }
+      : Seq[String] =
+    BenchStats.parseArtifact(artifact)._3.toSeq
+      .sortBy { case (q, sec) => (-sec, q) }.take(n).map(_._1)
+
+  /** The entry lines of a previous probe artifact for the queries not in
+    * `fresh`; nothing when the text does not parse. */
+  private[tools] def keptEntries(prev: String, fresh: Set[String])
+      : Seq[String] = (for {
+    doc <- BenchStats.doc(prev)
+    queries <- doc.obj("queries")
+  } yield queries.keys.filterNot(fresh).flatMap { q =>
+    queries.obj(q).map(e =>
+      entryLine(q, e.keys.flatMap(k => e.double(k).map(k -> _))))
+  }).getOrElse(Nil)
+
+  /** One `"query": {"field": 1.234, …}` line of the probe artifact. */
+  private def entryLine(q: String, fields: Seq[(String, Double)]): String =
+    fields.map { case (k, v) => s"${Json.quote(k)}: ${BenchStats.ms3(v)}" }
+      .mkString(s"    ${Json.quote(q)}: {", ", ", "}")
 
   def main(args: Array[String]): Unit = {
     val nSlow = args.lift(0).map(_.toInt).getOrElse(12)
@@ -177,23 +193,18 @@ object ScaleProbe {
     // MERGE, don't clobber: a focused re-probe (e.g. re-measuring one
     // suspect query in a fresh JVM — the isolation discipline SCALE.md
     // documents) refreshes ONLY its own entries; every other committed
-    // entry survives verbatim. Entries parse with the same regex the
-    // ScaleProbeSpec gate uses, so the merged artifact is exactly what
-    // the gate reads. A full run (every entry re-probed) still replaces
-    // the artifact wholesale.
+    // entry is kept with its fields and values. A full run (every entry
+    // re-probed) still replaces the artifact wholesale. A previous
+    // artifact that does not parse keeps nothing.
     val artifact = Paths.get("bench/scale_probe.json")
     val fresh = rows.map(_._1).toSet
-    val keptPrev: Seq[String] =
+    val keptPrev =
       if (!Files.exists(artifact)) Nil
-      else {
-        val prev = new String(Files.readAllBytes(artifact),
-          StandardCharsets.UTF_8)
-        """"(q[0-9][^"]*)": \{[^}]*\}""".r.findAllMatchIn(prev)
-          .filterNot(m => fresh.contains(m.group(1)))
-          .map(m => "    " + m.matched).toSeq
-      }
+      else keptEntries(new String(Files.readAllBytes(artifact),
+        StandardCharsets.UTF_8), fresh)
     val freshJson = rows.map { case (q, a, b, e) =>
-      f"""    "$q": {"t${factors.head}": $a%.3f, "t${factors.last}": $b%.3f, "exponent": $e%.3f}"""
+      entryLine(q, Seq(s"t${factors.head}" -> a, s"t${factors.last}" -> b,
+        "exponent" -> e))
     }
     val json = (freshJson ++ keptPrev).mkString(
       "{\n  \"base_sf_dir\": \"" + srcDir + "\",\n  \"factors\": [" +

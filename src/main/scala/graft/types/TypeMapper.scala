@@ -59,12 +59,6 @@ object TypeMapper {
     case _ => LargeString // nested/exotic: opaque
   }
 
-  def toStructField(c: CanonicalColumn): StructField =
-    StructField(c.name, toSpark(c.ctype), c.nullable)
-
-  def toStructType(cols: Seq[CanonicalColumn]): StructType =
-    StructType(cols.map(toStructField))
-
   def fromStructType(s: StructType): Seq[CanonicalColumn] =
     s.fields.toSeq.map { f =>
       CanonicalColumn(f.name, fromSpark(f.dataType), f.nullable,

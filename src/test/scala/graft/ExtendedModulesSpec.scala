@@ -7,37 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.meta.MetadataStore
 import graft.operators.IvfIndex
 import graft.orchestrate.OffloadLock
-import graft.predicate.{DialectRenderers, OffloadPredicate}
 import graft.source.ExtractionProjection
 import graft.streaming.StreamingOffload
 import graft.types.{CanonicalColumn, CanonicalType}
-
-class DialectRenderersSpec extends org.scalatest.funsuite.AnyFunSuite {
-
-  private val p = OffloadPredicate.parseUnsafe(
-    "((column(Time_Id) >= datetime(2020-01-01)) AND " +
-      "(column(channel_id) IN (numeric(17), numeric(18)))) OR " +
-      "(column(Promo) IS NULL)")
-
-  test("Oracle rendering: upper-cased identifiers, ANSI literals") {
-    assert(DialectRenderers.oracle(p) ==
-      "((TIME_ID >= DATE '2020-01-01' AND CHANNEL_ID IN (17, 18)) " +
-        "OR PROMO IS NULL)")
-  }
-
-  test("BigQuery rendering: lower-cased identifiers, DATETIME literals") {
-    val q = OffloadPredicate.parseUnsafe(
-      "(column(TS) < datetime(2021-06-01 10:00:00))")
-    assert(DialectRenderers.bigquery(q) == "ts < DATETIME '2021-06-01 10:00:00'")
-    assert(DialectRenderers.bigquery(p).startsWith("((time_id >= DATE"))
-  }
-
-  test("string values escape quotes in every dialect") {
-    val q = OffloadPredicate.parseUnsafe("(column(S) = string(\"o'brien\"))")
-    assert(DialectRenderers.oracle(q) == "S = 'o''brien'")
-    assert(DialectRenderers.bigquery(q) == "s = 'o''brien'")
-  }
-}
 
 class ExtractionProjectionSpec extends SparkSpec {
   import spark.implicits._

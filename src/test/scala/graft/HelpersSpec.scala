@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.plan.SyntheticPartition
-import graft.sink.{StagedLoad, Views}
+import graft.sink.StagedLoad
 import graft.source.TableStats
 import graft.types.TypeMapper
 
@@ -32,26 +32,18 @@ class TableStatsSpec extends SparkSpec {
   }
 }
 
-class ViewsSpec extends SparkSpec {
+class FanOutSpec extends SparkSpec {
 
-  test("conversion view presents the cast projection") {
-    val orders = Tables.load(spark, sf("sf0.001"), "orders")
-    val schema = TypeMapper.fromStructType(orders.schema)
-    val v = Views.conversionView(spark, orders, schema, "orders_conv")
-    assert(v.count() == orders.count())
-    assert(spark.catalog.tableExists("orders_conv"))
-    Views.drop(spark, "orders_conv")
-    assert(!spark.catalog.tableExists("orders_conv"))
-  }
-
-  test("result cache view is queryable by name") {
-    val agg = Tables.load(spark, sf("sf0.001"), "orders")
-      .groupBy("o_orderstatus").count()
-    Views.resultCacheView(spark, agg, "orders_by_status")
-    val n = spark.sql("SELECT SUM(count) FROM orders_by_status")
-      .head().getLong(0)
-    assert(n == 1500L)
-    Views.drop(spark, "orders_by_status")
+  test("fanOut refuses a session with sortBeforeRepartition off, " +
+      "naming the key") {
+    val path = sf("sf0.001") + "/nation.parquet"
+    val off = spark.newSession()
+    off.conf.set(Tables.SortBeforeRepartition, "false")
+    val e = intercept[IllegalArgumentException](
+      Tables.fanOut(off.read.parquet(path)))
+    assert(e.getMessage.contains("spark.sql.execution.sortBeforeRepartition"))
+    // GraftSession's session has it on
+    assert(Tables.fanOut(spark.read.parquet(path)).count() == 25L)
   }
 }
 

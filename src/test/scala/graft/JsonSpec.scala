@@ -62,6 +62,9 @@ class JsonSpec extends AnyFunSuite {
     assert(o.str("nul").isEmpty && o.str("missing").isEmpty)
     assert(o.strs("a") == Seq("p", "q") && o.strs("s") == Nil)
     assert(o.objs("objs").flatMap(_.str("k")) == Seq("v"))
+    assert(o.bool("b").contains(true) && o.bool("s").isEmpty)
+    assert(Json.parse("""{"m": {"k": 1}}""").obj("m").flatMap(_.long("k"))
+      .contains(1L) && o.obj("objs").isEmpty && o.obj("missing").isEmpty)
     Seq("", "{", "[1]", "{\"a\": 1} {}", "{\"a\": 1}x", "not json")
       .foreach(t => assert(scala.util.Try(Json.parse(t)).isFailure, t))
   }

@@ -226,6 +226,36 @@ class OffloadRunnerSpec extends SparkSpec {
     assert(meta.incrementalHighValue == Seq(expectedMax.toString))
   }
 
+  /** ERROR log events (message and exception) while `body` runs, up to
+    * a listener-bus drain: a listener's error is logged on the bus thread. */
+  private def errorsDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("errorsDuring", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(s"${e.getMessage.getFormattedMessage} ${e.getThrown}")
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    try {
+      val out = body
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      (out, seen.toArray.toSeq.map(_.toString))
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   /** Spark jobs started while `body` runs, counted between listener-bus
     * drains; `mark` (drains, then reads the count so far) lets a body
     * split its own count. */
@@ -461,10 +491,17 @@ class OffloadRunnerSpec extends SparkSpec {
       offloadType = "INCREMENTAL", incrementalKey = Seq("l_shipdate"),
       incrementalHighValue = Nil,
       pendingChunkKeys = Seq("1992-01"), pendingChunkHwm = Seq("1992-01-31 00:00:00")))
-    val runs = OffloadRunner.offloadChunked(spark, cfg,
+    // once a session has used an Observation, Spark's observation
+    // listener logs an ERROR for every failed read, such as one of an
+    // absent final table
+    spark.range(1).observe(org.apache.spark.sql.Observation(),
+      count(lit(1))).collect()
+    val (runs, errors) = errorsDuring(OffloadRunner.offloadChunked(spark, cfg,
       c => date_format(col(c), "yyyy-MM"), hwmCol = "l_shipdate",
-      maxRowsPerChunk = 2000L)
+      maxRowsPerChunk = 2000L))
     assert(runs.nonEmpty && runs.forall(_.forall(_.ok)))
+    // the reconcile checks for the absent final table before reading it
+    assert(!errors.exists(_.contains("PATH_NOT_FOUND")), errors.mkString("\n"))
     val src = spark.read.parquet(cfg.sourcePath)
     assert(spark.read.parquet(s"$base/final").count() == src.count())
   }

@@ -334,60 +334,6 @@ class DdlRendererSpec extends SparkSpec {
   }
 }
 
-class BackendLiteralsSpec extends SparkSpec {
-  import java.time.{LocalDate, LocalDateTime, LocalTime}
-  import graft.types.{BackendLiterals => L}
-  import CanonicalType._
-
-  test("Hive literal matrix (hive_literal.py:46-91)") {
-    assert(L.hive(null) == "NULL")
-    assert(L.hive("it's") == "'it''s'")
-    assert(L.hive(BigDecimal("12.30")) == "12.30")
-    assert(L.hive(LocalDate.of(2030, 1, 2), Some(Date)) == "date '2030-01-02'")
-    // date bound for a timestamp column renders midnight, zero fraction trimmed
-    assert(L.hive(LocalDate.of(2030, 1, 2)) == "timestamp '2030-01-02 00:00:00'")
-    // trailing fractional zeros stripped entirely (trim_unnecessary_subseconds)
-    assert(L.hive(LocalDateTime.of(2030, 1, 2, 0, 0, 0, 3000)) ==
-      "timestamp '2030-01-02 00:00:00.000003'")
-    assert(L.hive(LocalDateTime.of(2030, 1, 2, 12, 30, 45)) ==
-      "timestamp '2030-01-02 12:30:45'")
-    // no Hive TIME type: plain string
-    assert(L.hive(LocalTime.of(7, 8, 9)) == "'07:08:09'")
-  }
-
-  test("Impala literal matrix (impala_literal.py:42-58): bare temporals, type ignored") {
-    assert(L.impala(null) == "NULL")
-    assert(L.impala("it's") == "'it''s'")
-    // no keyword prefix, and even a DATE-typed date carries its midnight
-    // time part (data_type is ignored for Impala)
-    assert(L.impala(LocalDate.of(2030, 1, 2), Some(Date)) ==
-      "'2030-01-02 00:00:00'")
-    assert(L.impala(LocalDateTime.of(2030, 1, 2, 0, 0, 0, 3000)) ==
-      "'2030-01-02 00:00:00.000003'")
-    assert(L.impala(LocalDateTime.of(2030, 1, 2, 12, 30, 45)) ==
-      "'2030-01-02 12:30:45'")
-    assert(L.impala(LocalTime.of(7, 8, 9)) == "'07:08:09'")
-  }
-
-  test("Snowflake literal matrix (snowflake_literal.py:47-124)") {
-    assert(L.snowflake(null) == "NULL")
-    assert(L.snowflake("x") == "'x'")
-    assert(L.snowflake(LocalDate.of(2030, 1, 2)) == "'2030-01-02'::DATE")
-    // NTZ keeps at least one fractional digit after stripping
-    assert(L.snowflake(LocalDateTime.of(2030, 1, 2, 0, 0, 0, 3000)) ==
-      "'2030-01-02 00:00:00.000003'::TIMESTAMP_NTZ")
-    assert(L.snowflake(LocalDateTime.of(2030, 1, 2, 12, 30, 45)) ==
-      "'2030-01-02 12:30:45'::TIMESTAMP_NTZ")
-    // TZ-less value bound for TIMESTAMP_TZ assumes UTC with HH:MM offset
-    assert(L.snowflake(LocalDateTime.of(2030, 1, 2, 12, 30, 45), Some(TimestampTz)) ==
-      "'2030-01-02 12:30:45.000000 +00:00'::TIMESTAMP_TZ")
-    assert(L.snowflake(LocalTime.of(7, 8, 9), Some(Time)) ==
-      "'07:08:09.000000'::TIME")
-    assert(L.snowflake(LocalDateTime.of(2030, 1, 2, 7, 8, 9), Some(Date)) ==
-      "'2030-01-02'::DATE")
-  }
-}
-
 class SchemaSyncSpec extends SparkSpec {
 
   test("analyze detects added columns and renders ALTERs; removal is safe") {

@@ -37,36 +37,6 @@ class OffloadPredicateSpec extends AnyFunSuite {
     val p = OffloadPredicate.parseUnsafe("(column(N) != numeric(5))")
     assert(OffloadPredicate.toSql(p) == "N <> 5")
   }
-
-  test("bind mode: values leave the SQL as named placeholders") {
-    import DialectRenderers._
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(A) >= numeric(3)) AND (column(B) IN (string(\"x\"), string(\"y\"))))")
-    val ora = oracleBinds(p)
-    assert(ora.sql == "(A >= :bind_0 AND B IN (:bind_1, :bind_2))")
-    assert(ora.binds.map(_._1) == Seq("bind_0", "bind_1", "bind_2"))
-    assert(ora.binds.head._2 == new java.math.BigDecimal(3))
-    assert(ora.binds(1)._2 == "x" && ora.binds(2)._2 == "y")
-    // no raw literal survives in the text — injection-proof by construction
-    assert(!ora.sql.contains("3") && !ora.sql.contains("'"))
-    val bq = bigqueryBinds(p)
-    assert(bq.sql == "(a >= @bind_0 AND b IN (@bind_1, @bind_2))")
-    assert(bq.binds == ora.binds)
-  }
-
-  test("bind mode: IS NULL takes no bind; datetime binds typed values") {
-    import DialectRenderers._
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(T) < datetime(2020-01-02)) OR (column(C) IS NOT NULL))")
-    val b = oracleBinds(p)
-    assert(b.sql == "(T < :bind_0 OR C IS NOT NULL)")
-    assert(b.binds == Seq(
-      "bind_0" -> java.sql.Date.valueOf("2020-01-02")))
-    val ts = oracleBinds(OffloadPredicate.parseUnsafe(
-      "(column(T) >= datetime(2020-01-02 10:30:00))"))
-    assert(ts.binds.head._2 ==
-      java.sql.Timestamp.valueOf("2020-01-02 10:30:00"))
-  }
 }
 
 /** Execution-level checks: DSL filter returns the same rows as the
@@ -92,78 +62,5 @@ class OffloadPredicateExecSpec extends SparkSpec {
         "(column(l_orderkey) IS NOT NULL)")).count()
     val byHand = li.filter(col("l_returnflag").isin("A", "R")).count()
     assert(n == byHand)
-  }
-
-  test("bind-mode SQL executes through Spark parameterized sql()") {
-    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
-    li.createOrReplaceTempView("li_binds")
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(l_quantity) >= numeric(25)) AND " +
-        "(column(l_returnflag) IN (string(\"A\"), string(\"R\"))))")
-    val b = DialectRenderers.oracleBinds(p)
-    // the SAME named-bind text and parameter map drive Spark's
-    // parameterized SQL — the Catalyst side of the bind contract
-    val viaBinds = spark.sql(
-      s"SELECT count(*) AS n FROM li_binds WHERE ${b.sql}",
-      b.bindMap).head().getLong(0)
-    val direct = li.filter(OffloadPredicate.toColumn(p)).count()
-    assert(viaBinds == direct && direct > 0)
-  }
-
-  test("teradata rendering: quoted-upper idents, typed date literals") {
-    import DialectRenderers._
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(OrderDate) >= datetime(2020-01-02)) AND " +
-        "(column(status) IN (string(\"a'b\"), string(\"c\"))))")
-    assert(teradata(p) ==
-      "(\"ORDERDATE\" >= DATE '2020-01-02' AND " +
-        "\"STATUS\" IN ('a''b', 'c'))")
-    // timestamps keep at least one fractional digit, trailing zeros gone
-    val t1 = OffloadPredicate.parseUnsafe(
-      "(column(T) < datetime(2020-01-02 10:30:00))")
-    assert(teradata(t1) == "\"T\" < TIMESTAMP '2020-01-02 10:30:00.0'")
-    val t2 = OffloadPredicate.parseUnsafe(
-      "(column(T) < datetime(2020-01-02 10:30:00.123000))")
-    assert(teradata(t2) == "\"T\" < TIMESTAMP '2020-01-02 10:30:00.123'")
-  }
-
-  test("synapse rendering: bracket idents, bare quoted date strings") {
-    import DialectRenderers._
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(OrderDate) >= datetime(2020-01-02)) OR " +
-        "(column(N) IS NULL))")
-    // no DATE/DATETIME keyword — the Synapse literal dialect is bare strings
-    assert(synapse(p) ==
-      "([OrderDate] >= '2020-01-02' OR [N] IS NULL)")
-    val t = OffloadPredicate.parseUnsafe(
-      "(column(T) <= datetime(2020-01-02 10:30:00.500000))")
-    assert(synapse(t) == "[T] <= '2020-01-02 10:30:00.5'")
-  }
-
-  test("teradata/synapse bind mode uses positional markers") {
-    import DialectRenderers._
-    val p = OffloadPredicate.parseUnsafe(
-      "((column(A) >= numeric(3)) AND (column(B) IN (string(\"x\"), string(\"y\"))))")
-    val td = teradataBinds(p)
-    assert(td.sql == "(\"A\" >= ? AND \"B\" IN (?, ?))")
-    val syn = synapseBinds(p)
-    assert(syn.sql == "([A] >= ? AND [B] IN (?, ?))")
-    // ordered binds ARE the positional parameter list, same typed values
-    assert(td.binds == oracleBinds(p).binds && syn.binds == td.binds)
-  }
-
-  test("limitSelect emits dialect-correct TOP-N syntax") {
-    import DialectRenderers._
-    assert(limitSelect(Teradata, "1", "\"S\".\"T\"", None, 1) ==
-      "SELECT TOP 1 1 FROM \"S\".\"T\"")
-    assert(limitSelect(Synapse, "*", "[s].[t]", Some("[x] > 0"), 5) ==
-      "SELECT TOP(5) * FROM [s].[t] WHERE [x] > 0")
-    assert(limitSelect(Oracle, "*", "S.T", None, 10) ==
-      "SELECT * FROM S.T FETCH FIRST 10 ROWS ONLY")
-    assert(limitSelect(BigQuery, "*", "d.t", None, 10) ==
-      "SELECT * FROM d.t LIMIT 10")
-    intercept[IllegalArgumentException] {
-      limitSelect(Teradata, "*", "t", None, 0)
-    }
   }
 }

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.source.{JdbcSplit, Sampling}
 import graft.types.{CanonicalColumn, CanonicalType}
 import graft.verify.CrossValidator
 
@@ -248,68 +247,6 @@ class OtherSchemeFs extends org.apache.hadoop.fs.FilterFileSystem(
   override def getUri: java.net.URI = java.net.URI.create("otherfs:///")
 }
 
-class SamplingSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("numeric profiling infers digits and scale") {
-    val df = Seq(1.0, 12.5, 9999.25, 3.0).toDF("v")
-    val p = Sampling.profileNumerics(df, Seq("v")).head
-    assert(p.maxIntegralDigits == 4)
-    assert(p.maxScale == 2)
-    assert(!p.nullable)
-  }
-
-  test("profiles map to canonical integer sizes per reference rules") {
-    import CanonicalType._
-    assert(Sampling.toCanonical(
-      Sampling.NumericProfile("c", 2, 0, false)).ctype == Integer1)
-    assert(Sampling.toCanonical(
-      Sampling.NumericProfile("c", 9, 0, false)).ctype == Integer4)
-    assert(Sampling.toCanonical(
-      Sampling.NumericProfile("c", 18, 0, false)).ctype == Integer8)
-    assert(Sampling.toCanonical(
-      Sampling.NumericProfile("c", 20, 0, false)).ctype == Integer38)
-    val d = Sampling.toCanonical(Sampling.NumericProfile("c", 7, 2, true))
-    assert(d.ctype == Decimal(Some(9), Some(2)))
-    assert(!d.safeMapping && d.nullable)
-  }
-
-  test("sampled profile on real data finds price scale 2") {
-    val li = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
-    val p = Sampling.profileNumerics(li, Seq("l_extendedprice", "l_discount"))
-    assert(p.head.maxScale == 2)
-    assert(p(1).maxScale <= 2)
-  }
-}
-
-class JdbcSplitSpec extends SparkSpec {
-
-  test("chooser prefers partition predicates, then id range, then single") {
-    import JdbcSplit._
-    assert(choose(10L, 100L, Nil, None, 8) == Single)
-    assert(choose(1000L, 100L, Seq("p=1", "p=2"), None, 8) ==
-      Predicates(Seq("p=1", "p=2")))
-    assert(choose(1000L, 100L, Nil, Some(("id", 0L, 99L)), 8) ==
-      IdRange("id", 0L, 99L, 8))
-    assert(choose(1000L, 100L, Nil, Some(("id", 5L, 5L)), 8) ==
-      ModHash("id", 8))
-  }
-
-  test("predicate cap ORs adjacent slices to stay under the limit") {
-    val preds = (1 to 2500).map(i => s"p=$i")
-    val capped = JdbcSplit.capPredicates(preds)
-    assert(capped.length <= JdbcSplit.MaxSplits)
-    assert(capped.head.startsWith("(p=1)"))
-    // every original predicate survives somewhere
-    assert(capped.map(_.split(" OR ").length).sum == 2500)
-  }
-
-  test("asOfScn wraps the table in a flashback subquery") {
-    assert(JdbcSplit.asOfScn("s.t", 42L) ==
-      "(SELECT * FROM s.t AS OF SCN 42) goe_snap")
-  }
-}
-
 class CompactionSpec extends SparkSpec {
 
   test("compaction collapses small files, preserves data, swaps safely") {
@@ -362,126 +299,6 @@ class CompactionSpec extends SparkSpec {
     assert(vals.length == 1000)
     // read order within one parquet file follows row order
     assert(vals.sameElements(vals.sorted))
-  }
-}
-
-/** Live execution of the JDBC read path against an in-process Derby
-  * database (the jars ship with Spark) — every split shape opens real
-  * cursors and must reassemble the exact table. */
-class JdbcSplitLiveSpec extends SparkSpec {
-
-  private val NRows = 500
-  private lazy val dbDir = {
-    // quiet Derby's derby.log in the repo root
-    System.setProperty("derby.stream.error.field",
-      "java.lang.System.err")
-    val dir = Files.createTempDirectory("graft_derby").toString
-    val url = s"jdbc:derby:$dir/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute(
-        "CREATE TABLE items (id BIGINT NOT NULL, grp INT NOT NULL, " +
-          "amount DOUBLE NOT NULL)")
-      st.close()
-      val ps = conn.prepareStatement("INSERT INTO items VALUES (?, ?, ?)")
-      (1 to NRows).foreach { i =>
-        ps.setLong(1, i.toLong)
-        ps.setInt(2, i % 7)
-        ps.setDouble(3, i * 1.5)
-        ps.addBatch()
-      }
-      ps.executeBatch()
-      ps.close()
-    } finally conn.close()
-    dir
-  }
-  private def url = s"jdbc:derby:$dbDir/db"
-  private val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-
-  private val expectedSum = (1 to NRows).map(_ * 1.5).sum
-
-  private def validate(df: org.apache.spark.sql.DataFrame): Unit = {
-    val row = df.agg(count(lit(1)), sum(col("amount")),
-      min(col("id")), max(col("id"))).head()
-    assert(row.getLong(0) == NRows)
-    assert(row.getDouble(1) == expectedSum)
-    assert(row.getLong(2) == 1L && row.getLong(3) == NRows.toLong)
-  }
-
-  test("Single split reads the whole table through one cursor") {
-    val df = JdbcSplit.read(spark, url, "items", JdbcSplit.Single, props)
-    assert(df.rdd.getNumPartitions == 1)
-    validate(df)
-  }
-
-  test("IdRange split stripes the numeric key across cursors") {
-    val df = JdbcSplit.read(spark, url, "items",
-      JdbcSplit.IdRange("id", 1L, NRows.toLong, 4), props)
-    assert(df.rdd.getNumPartitions == 4)
-    validate(df)
-  }
-
-  test("Predicates split (partition-branch analogue) reassembles exactly") {
-    val preds = (0 until 7).map(g => s"grp = $g")
-    val df = JdbcSplit.read(spark, url, "items",
-      JdbcSplit.Predicates(preds), props)
-    assert(df.rdd.getNumPartitions == 7)
-    validate(df)
-  }
-
-  test("ModHash split buckets on the key and reassembles exactly") {
-    val df = JdbcSplit.read(spark, url, "items",
-      JdbcSplit.ModHash("id", 4), props)
-    assert(df.rdd.getNumPartitions == 4)
-    validate(df)
-  }
-
-  test("small-table query-import path reads a subquery alias") {
-    val df = JdbcSplit.read(spark, url,
-      "(SELECT id, amount FROM items WHERE grp = 3) AS q",
-      JdbcSplit.Single, props)
-    assert(df.count() == (1 to NRows).count(_ % 7 == 3))
-  }
-
-  test("sessionInitStatement runs once per split cursor (the Oracle " +
-    "preset's per-session contract)") {
-    // The Oracle preset's PL/SQL block can't run on Derby; prove the
-    // MECHANISM with a Derby-valid init statement that leaves one row per
-    // session, then count: 4 predicates → 4 cursors → 4 rows. Golden-shape
-    // specs for the preset itself live in OracleSessionSpec.
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE init_log (hit INT)")
-      st.close()
-    } finally conn.close()
-    val preds = (0 until 4).map(g => s"grp = $g")
-    val df = JdbcSplit.read(spark, url, "items",
-      JdbcSplit.Predicates(preds),
-      props + ("sessionInitStatement" -> "INSERT INTO init_log VALUES (1)"))
-    df.count() // materialize: opens the 4 cursors
-    val check = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = check.createStatement()
-        .executeQuery("SELECT COUNT(*) FROM init_log")
-      rs.next()
-      assert(rs.getInt(1) == 4,
-        s"expected 4 per-cursor init executions, got ${rs.getInt(1)}")
-    } finally check.close()
-  }
-
-  test("preset read overload merges options under explicit props") {
-    // End-to-end through the preset-shaped JdbcSplit.read: the preset's
-    // sessionInitStatement is Oracle PL/SQL, which Derby rejects — so
-    // override it through props (the documented precedence) and keep the
-    // preset's fetchsize; the read must still reassemble the table.
-    val df = JdbcSplit.read(spark, url, "items",
-      JdbcSplit.IdRange("id", 1L, NRows.toLong, 4),
-      graft.source.OracleSession.Preset(fetchSize = 100),
-      props + ("sessionInitStatement" -> "VALUES 1"))
-    assert(df.rdd.getNumPartitions == 4)
-    validate(df)
   }
 }
 

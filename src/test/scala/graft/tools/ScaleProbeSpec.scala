@@ -37,4 +37,15 @@ class ScaleProbeSpec extends AnyFunSuite {
         bad.map { case (q, e) => f"$q=$e%.2f" }.mkString(", ") +
         " — fix the plan or adjudicate here with a review comment")
   }
+
+  test("a focused re-probe keeps every other committed entry line as " +
+      "it was written; a torn artifact keeps nothing") {
+    val txt = new String(Files.readAllBytes(
+      Paths.get("bench/scale_probe.json")), StandardCharsets.UTF_8)
+    val lines = txt.linesIterator.map(_.stripSuffix(","))
+      .filter(_.startsWith("    \"q")).toSeq
+    val redone = lines.head.trim.drop(1).takeWhile(_ != '"')
+    assert(ScaleProbe.keptEntries(txt, Set(redone)) == lines.tail)
+    assert(ScaleProbe.keptEntries(txt.take(txt.length / 2), Set.empty).isEmpty)
+  }
 }
